@@ -84,35 +84,22 @@ def canonical_md5_expr() -> Column:
 
 
 def word_shingles(documents: DataFrame, k: int = SHINGLE) -> DataFrame:
-    """doc_id × distinct k-word shingle (long form).
+    """doc_id × distinct k-word shingle (long form), one mapInPandas
+    pass since r14: the ``transform``/``concat_ws`` shingle lambda it
+    replaced was an interpreted higher-order function evaluated once
+    per position (CodegenFallback — the cost profile the
+    minhash/trigram kernels left behind), while the Arrow pass does
+    the per-element string work in C.
 
-    Default-rides :func:`_word_shingles_np` since r14
-    (``HK_SHINGLE_KERNEL=expr`` keeps the expression form selectable):
-    the ``transform``/``concat_ws`` shingle lambda is an interpreted
-    higher-order function evaluated once per position — the same
-    CodegenFallback cost profile the minhash/trigram kernels left
-    behind — while the Arrow pass does the per-element string work in
-    C and emits the identical distinct multiset map-only."""
-    if __import__("os").environ.get("HK_SHINGLE_KERNEL", "np") == "np":
-        return _word_shingles_np(documents, k)
-    toks = ws_tokens("text")
-    pos = F.sequence(F.lit(1), F.greatest(F.size(toks) - (k - 1), F.lit(1)))
-    sh = F.transform(pos, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
-    return (documents
-            .select("doc_id", F.explode(F.array_distinct(sh)).alias("shingle")))
-
-
-def _word_shingles_np(documents: DataFrame, k: int = SHINGLE) -> DataFrame:
-    """Arrow twin of the distinct k-word shingle build: one mapInPandas
-    pass tokenizes (Python ``text.split(" ")`` == Spark
-    ``split(text, ' ')``, empty tokens kept) and emits each doc's
-    DISTINCT shingles in first-occurrence order — exactly
-    ``explode(array_distinct(transform(...)))``'s rows, including the
-    short-doc convention (a doc under k tokens yields its single
-    truncated shingle, the ``greatest(.., 1)`` position floor) and
-    ``slice`` truncation at the tail.  Map-only: no Generate, no
-    exchange, partitioning preserved.  Closure-complete (stdlib +
-    pandas only)."""
+    Tokenizes with Python ``text.split(" ")`` == Spark ``split(text,
+    ' ')`` (empty tokens kept) and emits each doc's DISTINCT shingles
+    in first-occurrence order — ``explode(array_distinct(transform(
+    ...)))``'s rows, including the short-doc convention (a doc under k
+    tokens yields its single truncated shingle) and ``slice``
+    truncation at the tail; null text yields one "" shingle (the
+    ``concat_ws`` convention).  Map-only: no Generate, no exchange,
+    partitioning preserved.  Closure-complete (stdlib + pandas
+    only)."""
     src = documents.select("doc_id", "text")
     dt = src.schema["doc_id"].dataType.simpleString()
 
@@ -130,8 +117,8 @@ def _word_shingles_np(documents: DataFrame, k: int = SHINGLE) -> DataFrame:
             out: list[str] = []
             for did, text in zip(pdf["doc_id"], pdf["text"]):
                 if text is None:
-                    # expression form: null toks → greatest(null,1)=1
-                    # position, concat_ws swallows the null slice → ""
+                    # null toks → greatest(null,1)=1 position,
+                    # concat_ws swallows the null slice → ""
                     ids.append(did)
                     out.append("")
                     continue
@@ -154,22 +141,30 @@ def _word_shingles_np(documents: DataFrame, k: int = SHINGLE) -> DataFrame:
     return src.mapInPandas(sh, f"doc_id {dt}, shingle string")
 
 
-def _minhash_signatures_np(documents: DataFrame) -> DataFrame:
-    """Arrow twin of the minhash signature: one mapInPandas pass
-    tokenizes, shingles, md5s and folds the N_HASHES permutation
-    minima in Python instead of the interpreted
-    ``transform``/``array_min`` higher-order cascade (CodegenFallback
-    — the r14 profile: 1.67 s at sf0.1 for 4000 docs).
+def minhash_signatures(documents: DataFrame) -> DataFrame:
+    """MinHash signature per doc: for each of N_HASHES permutations i,
+    min over shingles of (aᵢ·(h mod P)+bᵢ) mod P.
+
+    One mapInPandas pass tokenizes, shingles, md5s and folds the
+    N_HASHES permutation minima in Python (since r14): the
+    ``transform``/``array_min`` higher-order cascade it replaced was
+    interpreted per element (CodegenFallback — the r14 profile: 1.67 s
+    at sf0.1 for 4000 docs), and the md5-per-shingle cascade is the
+    dominant cost of every minhash consumer.
 
     EXACT by construction, not by rounding discipline: every quantity
     is integer arithmetic — hashlib md5 == Spark md5 == DuckDB md5
     over the same UTF-8 shingle bytes, base-16 parse of the top 15
-    hex digits, mod-P permutations, min over the shingle set (order-
-    free) — so the signatures are value-identical with no IEEE story
-    at all (pinned in tests/test_sign_kernels.py).  Tokenization:
-    Python ``text.split(" ")`` == Spark ``split(text, ' ')`` (limit
-    −1, trailing empties kept) == DuckDB ``string_split``.  Map-only
-    like the expression form: no shuffle, partitioning preserved."""
+    hex digits (`hash60`), mod-P permutations, min over the shingle
+    set (order-free).  Tokenization: Python ``text.split(" ")`` ==
+    Spark ``split(text, ' ')`` (limit −1, trailing empties kept) ==
+    DuckDB ``string_split``.
+
+    MAP-ONLY: a doc's shingles already live in its own row, so no
+    explode, no groupBy, ZERO shuffle — signature computation stays
+    embarrassingly parallel at any scale (the explode → groupBy form
+    before r4 matched its wall time at sf0.1, 1.67 s vs 1.67 s, but
+    carried an exchange)."""
     src = documents.select("doc_id", "text")
     dt = src.schema["doc_id"].dataType.simpleString()
     schema = f"doc_id {dt}, " + ", ".join(
@@ -199,44 +194,6 @@ def _minhash_signatures_np(documents: DataFrame) -> DataFrame:
                  **{f"mh{i}": c for i, c in enumerate(cols)}})
 
     return src.mapInPandas(mh, schema)
-
-
-def minhash_signatures(documents: DataFrame) -> DataFrame:
-    """MinHash signature per doc: for each of N_HASHES permutations i,
-    min over shingles of (aᵢ·(h mod P)+bᵢ) mod P.
-
-    Since r14 the default rides :func:`_minhash_signatures_np` — the
-    expression form's ``transform``/``array_min`` higher-order
-    functions are interpreted per element (the assignment-kernel
-    finding), and the md5-per-shingle cascade is the dominant cost of
-    every minhash consumer.  ``HK_MINHASH_KERNEL=expr`` keeps this
-    form selectable for the value-identity pins.
-
-    MAP-ONLY (both kernels): a doc's shingles already live in its own
-    row, so the minima are `array_min(transform(...))` over the in-row
-    shingle array — no explode, no groupBy, ZERO shuffle.  Local wall
-    time of the explode → groupBy form matched (measured 1.67s vs
-    1.67s at sf0.1 — md5 dominates either way), but this shape removes
-    the exchange entirely, so signature computation stays
-    embarrassingly parallel at any scale and AQE has one fewer stage
-    to plan.  md5 is hashed once per distinct shingle into an `hmods`
-    column, then the N_HASHES permutations read that column."""
-    if __import__("os").environ.get("HK_MINHASH_KERNEL", "np") == "np":
-        return _minhash_signatures_np(documents)
-    toks = ws_tokens("text")
-    pos = F.sequence(F.lit(1), F.greatest(F.size(toks) - (SHINGLE - 1), F.lit(1)))
-    sh = F.transform(pos, lambda i: F.concat_ws(" ", F.slice(toks, i, SHINGLE)))
-    hmods = F.transform(F.array_distinct(sh), lambda s: hash60(s) % P)
-    staged = documents.select("doc_id", hmods.alias("hmods"))
-    def perm(i):
-        # closure factory: a 1-arg lambda (a 2-arg lambda would be
-        # interpreted by transform() as (element, index))
-        a, b = i * 2 + 1, i * 7 + 13
-        return lambda h: (F.lit(a) * h + F.lit(b)) % P
-
-    mins = [F.array_min(F.transform(F.col("hmods"), perm(i))).alias(f"mh{i}")
-            for i in range(N_HASHES)]
-    return staged.select("doc_id", *mins)
 
 
 def minhash_lsh_pairs(documents: DataFrame,
@@ -298,37 +255,14 @@ def paragraphs(documents: DataFrame,
     lines instead — one-line change, same downstream kernel).
     Map-only; a doc's paragraphs stay on its partition.
 
-    Default-rides :func:`_paragraphs_np` since r14
-    (``HK_PARA_KERNEL=expr`` keeps the expression form selectable):
-    the struct-per-paragraph ``transform`` lambda is interpreted per
-    paragraph (CodegenFallback) while the Arrow pass slices the token
-    list in C — identical rows, still map-only."""
-    if __import__("os").environ.get("HK_PARA_KERNEL", "np") == "np":
-        return _paragraphs_np(documents, words_per_para)
-    ws = F.split(F.col("text"), " ")
-    n_para = F.floor((F.size(ws) + words_per_para - 1)
-                     / F.lit(float(words_per_para))).cast("int")
-    paras = F.transform(
-        F.sequence(F.lit(0), n_para - 1),
-        lambda i: F.struct(
-            i.cast("int").alias("para_idx"),
-            F.array_join(F.slice(ws, i * words_per_para + 1,
-                                 words_per_para), " ").alias("ptext")))
-    return (documents.select("doc_id", F.explode(paras).alias("p"))
-            .select("doc_id", "p.para_idx",
-                    F.col("p.ptext").alias("text")))
-
-
-def _paragraphs_np(documents: DataFrame,
-                   words_per_para: int = PARA_WORDS) -> DataFrame:
-    """Arrow twin of the paragraph regrouping: tokenize (``text.split
-    (" ")`` == Spark ``split(text, ' ')``, empty tokens kept) and
-    re-join each consecutive ``words_per_para``-token window —
-    ``" ".join(toks[i:i+w])`` == ``array_join(slice(ws, i·w+1, w),
-    ' ')`` (no nulls to skip).  n_para = ceil(|toks|/w) in exact
-    integer arithmetic; null text → null token array → explode(null)
-    → no rows.  Map-only like the expression form.  Closure-complete
-    (stdlib + pandas only)."""
+    One mapInPandas pass since r14 (the struct-per-paragraph
+    ``transform`` lambda it replaced was interpreted per paragraph):
+    tokenize (``text.split(" ")`` == Spark ``split(text, ' ')``,
+    empty tokens kept) and re-join each consecutive
+    ``words_per_para``-token window — ``" ".join(toks[i:i+w])`` ==
+    ``array_join(slice(ws, i·w+1, w), ' ')``.  n_para = ceil(|toks|/w)
+    in exact integer arithmetic; null text → no rows.
+    Closure-complete (stdlib + pandas only)."""
     src = documents.select("doc_id", "text")
     dt = src.schema["doc_id"].dataType.simpleString()
     w = words_per_para
@@ -504,61 +438,28 @@ def containment_pairs(documents: DataFrame, threshold: float = 0.5,
 
 
 def simhash(documents: DataFrame, bits: int = 60) -> DataFrame:
-    """SimHash: 60-bit signature, bit b set iff the majority of token
-    hashes have bit b set (duplicate tokens weigh by frequency, like
-    the classic Charikar construction).
+    """SimHash: ``bits``-bit signature, bit b set iff the majority of
+    token hashes have bit b set (duplicate tokens weigh by frequency,
+    like the classic Charikar construction).  Token hashes are the
+    60-bit md5 prefix (`hash60`), so ``bits`` is capped at 60.
 
-    Default-rides :func:`_simhash_np` since r14
-    (``HK_SIMHASH_KERNEL=expr`` keeps the expression form selectable):
-    the md5-per-token hashing is per-element COMPUTE — the kernel-triage
-    win case — and the whole signature folds per doc in one Arrow pass,
-    map-only, so the explode AND the groupBy(doc_id) exchange disappear.
-
-    Expression-form plan shape, measured: explode(tokens) →
-    groupBy(doc_id) with 60 parallel conditional sums.  A zero-shuffle
-    alternative (per-bit `aggregate()` over the in-row token array) was
-    tried and is 2× SLOWER at sf0.1 (1.52s vs 0.76s): higher-order
-    functions are interpreted per element while the explode+sum
-    pipeline stays inside whole-stage codegen, and map-side partial
-    aggregation already collapses each doc's tokens before the
-    exchange — the shuffle carries ~1 row per doc regardless of token
-    count, so the codegen'd form wins over HOFs at any scale."""
-    # the np twin generalizes to any bits ≤ 60 (the md5 hash is 60
-    # bits in BOTH forms — ADVICE r14: the old bits==60 guard silently
-    # fell back to the expression form on a narrower signature); a
-    # caller asking for >60 bits keeps the expression form, whose
-    # shiftright semantics define that (degenerate) case
-    if (bits <= 60 and __import__("os").environ
-            .get("HK_SIMHASH_KERNEL", "np") == "np"):
-        return _simhash_np(documents, bits)
-    tok = (documents
-           .select("doc_id", F.explode(ws_tokens("text")).alias("tok"))
-           .withColumn("h", hash60(F.col("tok"))))
-    bit_sums = [
-        F.sum(F.when(F.expr(f"shiftright(h, {b}) & 1") == 1, 1).otherwise(-1))
-        .alias(f"s{b}") for b in range(bits)]
-    folded = None
-    for b in range(bits):
-        term = F.when(F.col(f"s{b}") > 0,
-                      F.lit(1 << b).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
-        folded = term if folded is None else folded + term
-    return (tok.groupBy("doc_id").agg(*bit_sums)
-            .select("doc_id", folded.alias("simhash")))
-
-
-def _simhash_np(documents: DataFrame, bits: int = 60) -> DataFrame:
-    """Arrow twin of the SimHash signature: one mapInPandas pass
-    tokenizes (``text.split(" ")`` == Spark ``split(text, ' ')``,
-    empty tokens kept — they hash like any other), md5-hashes each
-    DISTINCT token once (memoized across the batch — Zipf makes the
-    cross-doc hit rate high), and folds the per-bit ±count majority
-    vote in vectorized int64 numpy — every quantity is INTEGER
-    arithmetic (hashlib md5 == Spark md5, top-15 hex parse, signed
-    counts, strict ``> 0`` majority), so signatures are
-    value-identical with no IEEE story at all.  Map-only: the token
-    explode AND the groupBy(doc_id) exchange are gone; each doc's
-    signature leaves on its own partition.  Closure-complete (stdlib
-    + numpy + pandas only)."""
+    One mapInPandas pass since r14: tokenize (``text.split(" ")`` ==
+    Spark ``split(text, ' ')``, empty tokens kept — they hash like any
+    other), md5-hash each DISTINCT token once (memoized across the
+    batch — Zipf makes the cross-doc hit rate high), and fold the
+    per-bit ±count majority vote in vectorized int64 numpy.  Every
+    quantity is INTEGER arithmetic (hashlib md5 == Spark md5, top-15
+    hex parse, signed counts, strict ``> 0`` majority), so the oracle
+    reproduces the signatures exactly.  Map-only: the token explode
+    AND the groupBy(doc_id) exchange of the expression form it
+    replaced are gone (that form's explode → 60 conditional sums was
+    itself 2× faster than an in-row ``aggregate()`` per bit, 0.76 s
+    vs 1.52 s at sf0.1); each doc's signature leaves on its own
+    partition.  Closure-complete (stdlib + numpy + pandas only)."""
+    if bits > 60:
+        raise ValueError(
+            f"simhash(bits={bits}): token hashes are the 60-bit md5 "
+            f"prefix, so at most 60 signature bits are defined")
     src = documents.select("doc_id", "text")
     dt = src.schema["doc_id"].dataType.simpleString()
 

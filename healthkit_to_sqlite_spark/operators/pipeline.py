@@ -494,8 +494,8 @@ def zorder_layout(events: DataFrame, bits: int = ZORDER_BITS,
 
 
 def _repetition_counts_np(documents: DataFrame) -> DataFrame:
-    """Arrow twin of the repetition-stat counting (the r14 signature-
-    kernel pattern): one mapInPandas pass computes the per-doc INTEGER
+    """Per-doc repetition-stat counts for `repetition_signals` (the r14
+    signature-kernel pattern): one mapInPandas pass computes the INTEGER
     counts — token count, distinct tokens, top-token multiplicity,
     char sum, bigram count, top-bigram multiplicity — in Python
     (tokenize + Counter) instead of interpreted higher-order
@@ -504,9 +504,8 @@ def _repetition_counts_np(documents: DataFrame) -> DataFrame:
     emitted value is an exact integer (mode multiplicity == longest
     run in the sorted array; Python ``len`` and Spark ``length`` both
     count code points; ``text.split(' ')`` == Spark ``split`` with
-    limit −1), so the twin is value-identical with no IEEE story —
-    the ratio arithmetic stays in the SAME Spark expressions either
-    way.  Pinned in tests/test_sign_kernels.py."""
+    limit −1), so there is no IEEE story — the ratio arithmetic stays
+    in Spark expressions."""
     src = documents.select("doc_id", "text")
     dt = src.schema["doc_id"].dataType.simpleString()
     schema = (f"doc_id {dt}, tok_n bigint, tok_distinct bigint, "
@@ -548,62 +547,16 @@ def repetition_signals(documents: DataFrame) -> DataFrame:
     MAP-ONLY design: a doc's tokens live in its own row, so every stat
     is a per-row computation with ZERO shuffles; the op scales as a
     pure scan and is partition-layout invariant by construction.
-    Since r14 the counting rides :func:`_repetition_counts_np`
-    (the expression form's array_sort + struct-state `aggregate()`
-    folds are interpreted per element — the assignment-kernel
-    finding); ``HK_REPSTATS_KERNEL=expr`` keeps the higher-order
-    expression form selectable for the value-identity pin.  (History:
+    Since r14 the counting rides :func:`_repetition_counts_np` (the
+    array_sort + struct-state `aggregate()` folds of the expression
+    form it replaced were interpreted per element — the
+    assignment-kernel finding).  (History:
     the explode → groupBy(doc, gram) → groupBy(doc) form before r4
     shuffled distinct-gram rows twice to recompute co-location Spark
     already had — 2.0s vs 2.3s at sf0.1 and two exchanges dropped.)
     All ratios derive from integer counts → bit-exact across engines;
     round(6) for display."""
-    if __import__("os").environ.get("HK_REPSTATS_KERNEL", "np") == "np":
-        stats = _repetition_counts_np(documents).filter(F.col("tok_n") > 0)
-        return (stats
-                .select("doc_id",
-                        F.col("tok_n").alias("n_tok"),
-                        F.round(F.col("tok_distinct") / F.col("tok_n"), 6)
-                        .alias("uniq_tok_frac"),
-                        F.round(F.col("tok_top") / F.col("tok_n"), 6)
-                        .alias("top_tok_frac"),
-                        F.round(F.col("bg_top") / F.col("bg_n"), 6)
-                        .alias("top_bigram_frac"),
-                        F.round(F.col("tok_chars") / F.col("tok_n"), 6)
-                        .alias("mean_tok_len")))
-    toks = ws_tokens("text")
-    pos = F.sequence(F.lit(1), F.greatest(F.size(toks) - 1, F.lit(1)))
-    bigrams = F.transform(pos, lambda i: F.concat_ws(" ", F.slice(toks, i, 2)))
-
-    def top_run(arr):
-        # longest run of equal values in sorted(arr): fold with state
-        # (prev, run, best); arrays here are never empty (guarded below)
-        state = F.struct(F.lit(None).cast("string").alias("prev"),
-                         F.lit(0).cast("bigint").alias("run"),
-                         F.lit(0).cast("bigint").alias("best"))
-        def step(acc, x):
-            run = F.when(acc.prev.isNotNull() & (x == acc.prev),
-                         acc.run + 1).otherwise(F.lit(1).cast("bigint"))
-            return F.struct(x.alias("prev"), run.alias("run"),
-                            F.greatest(acc.best, run).alias("best"))
-        return F.aggregate(F.array_sort(arr), state, step, lambda acc: acc.best)
-
-    char_sum = F.aggregate(
-        toks, F.lit(0).cast("bigint"),
-        lambda acc, t: acc + F.length(t).cast("bigint"))
-    stats = (documents
-             .select("doc_id", toks.alias("toks"), bigrams.alias("bgs"),
-                     char_sum.alias("tok_chars"))
-             .filter(F.size("toks") > 0)
-             .select(
-                 "doc_id",
-                 F.size("toks").cast("bigint").alias("tok_n"),
-                 F.size(F.array_distinct("toks")).cast("bigint")
-                 .alias("tok_distinct"),
-                 top_run(F.col("toks")).alias("tok_top"),
-                 "tok_chars",
-                 F.size("bgs").cast("bigint").alias("bg_n"),
-                 top_run(F.col("bgs")).alias("bg_top")))
+    stats = _repetition_counts_np(documents).filter(F.col("tok_n") > 0)
     return (stats
             .select("doc_id",
                     F.col("tok_n").alias("n_tok"),
@@ -1188,31 +1141,22 @@ def cms_sketch(documents: DataFrame, d: int = CMS_D,
     into the corpus sketch bit-identically (the mergeability the
     streaming maintenance in streaming/sketch.py relies on).
 
-    Default-rides :func:`_cms_partials_np` since r14
-    (``HK_CMS_KERNEL=expr`` keeps the expression form selectable): the
-    expression build explodes every token d ways and salted-md5-hashes
-    each of the d·|tokens| rows through interpreted conv/pmod — while
-    the Arrow pass Counter-aggregates tokens per batch first, hashes
-    each DISTINCT token's d cells once, and emits ≤ d·w exact integer
+    Since r14 the build rides :func:`_cms_partials_np`: the Arrow
+    pass Counter-aggregates tokens per batch first, hashes each
+    DISTINCT token's d cells once, and emits ≤ d·w exact integer
     partials per batch that the groupBy SUMs (associative, so any
-    batch boundary yields the identical matrix)."""
-    if __import__("os").environ.get("HK_CMS_KERNEL", "np") == "np":
-        return (_cms_partials_np(documents, d, w)
-                .groupBy("r", "c")
-                .agg(F.sum("pn").alias("n")))
-    toks = documents.select(F.explode(ws_tokens("text")).alias("token"))
-    rows = toks.select(
-        "token",
-        F.explode(F.array(*[F.lit(r) for r in range(d)])).alias("r"))
-    return (rows.select("r", _cms_cell(F.col("r"), F.col("token"), w)
-                        .alias("c"))
+    batch boundary yields the identical matrix) — the expression
+    build it replaced exploded every token d ways and
+    salted-md5-hashed each of the d·|tokens| rows through interpreted
+    conv/pmod."""
+    return (_cms_partials_np(documents, d, w)
             .groupBy("r", "c")
-            .agg(F.count(F.lit(1)).alias("n")))
+            .agg(F.sum("pn").alias("n")))
 
 
 def _cms_partials_np(documents: DataFrame, d: int = CMS_D,
                      w: int = CMS_W) -> DataFrame:
-    """Arrow twin of the Count-Min build: per batch, tokenize
+    """Per-batch Count-Min partials for `cms_sketch`: tokenize
     (``text.split(" ")`` == Spark ``split(text, ' ')``, empty tokens
     kept) and Counter-count the token multiset, salt-md5 each DISTINCT
     token's d cells ONCE (memoized across batches — the md5 work drops

@@ -126,14 +126,14 @@ def cast_to_tag(col: Column, tag: str) -> Column | None:
     return col.cast(target)
 
 
-def apply_inferred_types(df: DataFrame, cols: list[str] | None = None,
-                         drop_all_null: bool = False) -> DataFrame:
+def apply_inferred_types(df: DataFrame,
+                         cols: list[str] | None = None) -> DataFrame:
     """Infer-and-cast string columns in ONE aggregate pass.
 
-    Per column: widening-unified tag (INTEGER/REAL/DATE/TIMESTAMP/TEXT)
-    plus a non-null count; then cast each column to its tag's Spark
-    type and optionally drop columns with no values at all (the
-    reference never creates a column it never saw, core.rs:216-227).
+    Per column: widening-unified tag (INTEGER/REAL/DATE/TIMESTAMP/TEXT);
+    then cast each column to its tag's Spark type.  (Per-type all-null
+    column pruning — the reference never creates a column it never
+    saw, core.rs:216-227 — lives in `record_tables_onepass`.)
 
     This is the distributed replacement for the reference's pass-1
     sequential schema scan (core.rs:85-132): commutative aggregates,
@@ -148,19 +148,11 @@ def apply_inferred_types(df: DataFrame, cols: list[str] | None = None,
     # inlining type_tag would replicate the try-cast cascade per branch
     # — at ~25 columns the generated code alone takes seconds to
     # compile (measured 7s plan time on the Workout read)
-    proj = []
-    for i, c in enumerate(cols):
-        proj.append(type_tag(F.col(c)).alias(f"g{i}"))
-        proj.append(F.col(c).isNotNull().cast("bigint").alias(f"p{i}"))
-    aggs = []
-    for i, c in enumerate(cols):
-        aggs.append(unify_tags(F.col(f"g{i}")).alias(f"t{i}"))
-        aggs.append(F.sum(F.col(f"p{i}")).alias(f"n{i}"))
+    proj = [type_tag(F.col(c)).alias(f"g{i}") for i, c in enumerate(cols)]
+    aggs = [unify_tags(F.col(f"g{i}")).alias(f"t{i}")
+            for i in range(len(cols))]
     row = df.select(*proj).agg(*aggs).collect()[0]
     for i, c in enumerate(cols):
-        if drop_all_null and row[f"n{i}"] == 0:
-            df = df.drop(c)
-            continue
         casted = cast_to_tag(F.col(c), row[f"t{i}"])
         if casted is not None:
             df = df.withColumn(c, casted)

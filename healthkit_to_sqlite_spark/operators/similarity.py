@@ -32,26 +32,6 @@ from ..spec import Spec, sql_in_list
 N_PLANES = 8   # LSH signature bits
 DIM = 64       # embedding dimensionality (FIXTURES.md §B)
 
-#: Lloyd-loop lineage-truncation cadence, A/B-switchable for the r6
-#: VERDICT item-1 measurement (HK_LLOYD_CKPT = eager | lazy | final).
-_LLOYD_CKPT_MODE = __import__("os").environ.get("HK_LLOYD_CKPT", "eager")
-
-
-def _lloyd_ckpt(df: DataFrame, is_last: bool) -> DataFrame:
-    """Per-iteration lineage truncation for the Lloyd loops.  All
-    modes return a plan-truncated DataFrame with bit-identical
-    contents; they differ only in WHEN the tiny centroid table
-    materializes (see kmeans_centroids docstring for the measured
-    A/B)."""
-    if _LLOYD_CKPT_MODE == "lazy":
-        return df.localCheckpoint(eager=False)
-    if _LLOYD_CKPT_MODE == "none":
-        return df
-    if _LLOYD_CKPT_MODE == "final":
-        return df.localCheckpoint(eager=True) if is_last else df
-    return df.localCheckpoint(eager=True)
-
-
 def topk_cosine(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFrame:
     """Brute-force cosine top-k against one stored query vector.
 
@@ -120,22 +100,23 @@ def _plane_weights(n_planes: int = N_PLANES, dim: int = DIM) -> list[list[float]
             for p in range(n_planes)]
 
 
-def _lsh_signature_np(embeddings: DataFrame, n_planes: int) -> DataFrame:
-    """Arrow-vectorized twin of the sign-LSH signature (the
-    `_assign_cells_np` pattern applied to the OTHER per-vector trainer
-    primitive): one mapInPandas pass computes all ``n_planes`` plane
-    dots per batch instead of n_planes interpreted
-    ``zip_with``/``aggregate`` folds per row (CodegenFallback — the
+def lsh_signature(embeddings: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
+    """B-bit sign-LSH signature per vector: bit_p = 1 iff
+    Σ_d w(p,d)·v_d > 0, folded in index order against the constant
+    `_plane_weights` matrix.
+
+    One mapInPandas pass computes all ``n_planes`` plane dots per
+    batch.  The literal-array ``zip_with``/``aggregate`` expression it
+    replaced in r14 was interpreted per element (CodegenFallback — the
     r14 profile put the 16-plane signature at 1.2 s wall / 2.5 CPU-s
     for just 2000 sf0.1 vectors, ~0.6 ms per vector of pure
     interpreter overhead).
 
-    Bit-discipline: distances accumulate ``v_d · w_d`` in float64 in
+    Bit-discipline: dots accumulate ``v_d · w_d`` in float64 in
     dimension order — the JVM fold's exact IEEE sequence (weights are
     ±1.0, so each term is an exact sign flip of ``v_d``) — and the
-    bit is the same strict ``dot > 0``.  Signatures are therefore
-    bit-identical (pinned in tests/test_sign_kernels.py).  Map-only
-    like the expression form: no shuffle, input partitioning
+    bit is the strict ``dot > 0``, so the oracle's SQL fold yields the
+    same signature strings.  Map-only: no shuffle, input partitioning
     preserved."""
     import numpy as np
 
@@ -165,32 +146,6 @@ def _lsh_signature_np(embeddings: DataFrame, n_planes: int) -> DataFrame:
                 "bucket": ["".join(row) for row in chars]})
 
     return src.mapInPandas(sign, f"vec_id {vt}, label {lt}, bucket string")
-
-
-def lsh_signature(embeddings: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
-    """B-bit sign-LSH signature per vector.
-
-    bit_p = 1 iff Σ_d w(p,d)·v_d > 0, folded in index order against a
-    constant weight matrix.  Since r14 the default rides
-    :func:`_lsh_signature_np` (Catalyst higher-order functions are
-    interpreted per element — the same finding that flipped the
-    assignment kernel); ``HK_SIGN_KERNEL=expr`` keeps the
-    literal-array expression form selectable for the bit-identity
-    pins."""
-    if __import__("os").environ.get("HK_SIGN_KERNEL", "np") == "np":
-        return _lsh_signature_np(embeddings, n_planes)
-    weights = _plane_weights(n_planes)
-
-    def bit(p: int) -> Column:
-        w = F.array(*[F.lit(x) for x in weights[p]])
-        dot = F.aggregate(
-            F.zip_with(F.col("embedding"), w,
-                       lambda v, wv: v.cast("double") * wv),
-            F.lit(0.0), lambda acc, x: acc + x)
-        return F.when(dot > 0, F.lit(1)).otherwise(F.lit(0))
-
-    sig = F.concat_ws("", *[bit(p).cast("string") for p in range(n_planes)])
-    return embeddings.select("vec_id", "label", sig.alias("bucket"))
 
 
 def ann_lsh_pairs(embeddings: DataFrame, min_cosine: float = 0.2) -> DataFrame:
@@ -285,72 +240,16 @@ def dedup_embedding_pairs(embeddings: DataFrame, min_cosine: float = 0.4,
     va, vb = withn.alias("va"), withn.alias("vb")
     joined = (cand.join(va, cand.vec_a == F.col("va.vec_id"))
               .join(vb, cand.vec_b == F.col("vb.vec_id")))
-    # The exact verify: r14 measured the Arrow twin a WASH at sf0.1
-    # (1.68 s/18.3 CPU-s vs 1.66/17.2 — the pair transfer costs what
-    # the interpreted fold saves) and kept the expression; the r15
-    # sf1 re-measure (VERDICT r14 item 6) is recorded in
-    # OPTIMIZATION_r15.md — HK_VERIFY_KERNEL=np selects the twin,
-    # value-identity pinned in test_similarity.
-    if __import__("os").environ.get("HK_VERIFY_KERNEL", "expr") == "np":
-        scored = _pair_cosine_np(joined)
-    else:
-        sim = cosine_from_norms(F.col("va.embedding"),
-                                F.col("vb.embedding"),
-                                F.col("va.nrm"), F.col("vb.nrm"))
-        scored = joined.select("vec_a", "vec_b",
-                               F.round(sim, 6).alias("cosine_sim"))
-    return scored.filter(F.col("cosine_sim") >= min_cosine)
-
-
-def _pair_cosine_np(joined: DataFrame) -> DataFrame:
-    """Arrow twin of the pair-verify cosine fold: per batch, the dot
-    accumulates per dimension in index order (the JVM ``aggregate``
-    fold's IEEE sequence), divides by the SUPPLIED norms (same
-    operand order: dot / (na·nb)) and rounds HALF_UP at 6 dp via the
-    repo's rint+boundary-requantize convention — bit-identical to
-    ``round(cosine_from_norms(..), 6)``."""
-    src = joined.select("vec_a", "vec_b",
-                        F.col("va.embedding").alias("ea"),
-                        F.col("vb.embedding").alias("eb"),
-                        F.col("va.nrm").alias("na"),
-                        F.col("vb.nrm").alias("nb"))
-    vt = src.schema["vec_a"].dataType.simpleString()
-
-    def kern(batches):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        import numpy as np
-        import pandas as pd
-
-        grid = Decimal("1e-6")
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            D = len(pdf["ea"].iloc[0])
-            A = np.empty((n, D), dtype=np.float64)
-            B = np.empty((n, D), dtype=np.float64)
-            for i, (a, b) in enumerate(zip(pdf["ea"], pdf["eb"])):
-                A[i] = np.asarray(a, dtype=np.float64)
-                B[i] = np.asarray(b, dtype=np.float64)
-            dot = np.zeros(n, dtype=np.float64)
-            for d in range(D):              # JVM fold order
-                dot += A[:, d] * B[:, d]
-            cs = dot / (pdf["na"].to_numpy() * pdf["nb"].to_numpy())
-            s = cs * 1e6
-            r = np.rint(s)
-            sus = (np.abs(np.abs(s - r) - 0.5) < 1e-3) | (np.abs(s) > 1e14)
-            if sus.any():
-                for i in np.nonzero(sus)[0]:
-                    d6 = Decimal(repr(float(cs[i]))).quantize(
-                        grid, ROUND_HALF_UP)
-                    r[i] = float(d6.scaleb(6))
-            yield pd.DataFrame({"vec_a": pdf["vec_a"],
-                                "vec_b": pdf["vec_b"],
-                                "cosine_sim": r / 1e6})
-
-    return src.mapInPandas(
-        kern, f"vec_a {vt}, vec_b {vt}, cosine_sim double")
+    # The exact verify stays a JVM expression: an Arrow fold of the
+    # pairs measured a wash at sf0.1 (1.68 s/18.3 CPU-s vs 1.66/17.2 —
+    # the pair transfer costs what the interpreted fold saves) and
+    # lost at sf1 (46-59 s vs the expression's 37-40 s,
+    # OPTIMIZATION_r15.md §8).
+    sim = cosine_from_norms(F.col("va.embedding"), F.col("vb.embedding"),
+                            F.col("va.nrm"), F.col("vb.nrm"))
+    return (joined.select("vec_a", "vec_b",
+                          F.round(sim, 6).alias("cosine_sim"))
+            .filter(F.col("cosine_sim") >= min_cosine))
 
 
 N_CENTROIDS = 8
@@ -396,35 +295,41 @@ def _l2sq(a: Column, b: Column) -> Column:
         F.lit(0.0), lambda acc, v: acc + v)
 
 
-def _assign_cells_np(embeddings: DataFrame, cent: DataFrame,
-                     keep_dist: bool = False,
-                     keep_residual: bool = False) -> DataFrame:
-    """Arrow-vectorized twin of the broadcast-join assignment
-    (``HK_ASSIGN_KERNEL=np``) — same contract, same bits, ~10× the
-    per-core throughput.
+def _assign_cells(embeddings: DataFrame, cent: DataFrame,
+                  keep_dist: bool = False,
+                  keep_residual: bool = False) -> DataFrame:
+    """Nearest-centroid assignment (L2, ties → lowest cid): the
+    centroid table rides a broadcast, the corpus streams through one
+    Arrow pass.  Distances round to 9 dp so cross-engine last-bit
+    drift can't flip an argmin.  ``keep_dist=True`` carries the argmin
+    distance through (the prototypicality score) — one assignment body
+    for every consumer instead of a third copy of the rounding/tie
+    discipline (ADVICE r11).
 
-    Why it exists: the join kernel materializes n·K candidate ROWS and
-    evaluates ``_l2sq`` through ``zip_with``/``aggregate`` — Catalyst
-    higher-order functions are CodegenFallback (interpreted per
-    element), so assignment pays interpreted work on n·K·D elements.
-    With the r13 corpus-derived K (K ∝ n/250) that term is the one
-    measured SUPERLINEAR cpu_sec in the tracked sf1 set (q_proto_prune
-    123.4 process-CPU-s at sf1 vs 2.4 at sf0.1 — 51× for 10× data,
-    every non-Lloyd query sits in the 10–18× band).  Dense
+    Why an Arrow kernel: the broadcast-join form it replaced in r14
+    materialized n·K candidate ROWS and evaluated ``_l2sq`` through
+    ``zip_with``/``aggregate`` — Catalyst higher-order functions are
+    CodegenFallback (interpreted per element), so assignment paid
+    interpreted work on n·K·D elements.  With the r13 corpus-derived
+    K (K ∝ n/250) that term was the one measured SUPERLINEAR cpu_sec
+    in the tracked sf1 set (q_proto_prune 123.4 process-CPU-s at sf1
+    vs 2.4 at sf0.1 — 51× for 10× data).  Dense
     argmin-over-centroids is the canonical Arrow-batch case the repo's
     UDF policy reserves pandas kernels for: one numpy fold does the
-    same FLOPs fused, and the n·K row explosion never exists.
+    same FLOPs fused, and the n·K row explosion never exists (the
+    measured A/B, SCALE.md round 14, halved trainer wall at sf0.1 and
+    cut sf1 trainer CPU ~45%).
 
-    Bit-discipline (the reason this is a twin, not a rewrite):
+    Bit-discipline (the oracle's ``_l2sq`` + ``round(.., 9)``):
 
     - distances accumulate ``(x_d - c_d)²`` in float64 in dimension
       order — elementwise IEEE ops in a d-loop reproduce the JVM
       ``aggregate`` fold's operation sequence exactly, so the raw
-      distances are bit-identical to the join kernel's;
+      distances are bit-identical to the JVM/oracle fold's;
     - the argmin compares HALF_UP-rounded-9dp distances with ties →
-      lowest cid, like the join kernel's ``min(struct(round(dist,9),
-      cid))``.  Rounding is monotone, so only candidates within
-      2e-9 of the unrounded minimum can win; those few (usually one)
+      lowest cid — ``min(struct(round(dist, 9), cid))``.  Rounding is
+      monotone, so only candidates within 2e-9 of the unrounded
+      minimum can win; those few (usually one)
       are rounded exactly via ``Decimal(repr(d))`` — the same
       shortest-roundtrip-string + HALF_UP semantics as Spark's
       ``round`` (BigDecimal.valueOf path) — and compared (dist, cid).
@@ -433,13 +338,10 @@ def _assign_cells_np(embeddings: DataFrame, cent: DataFrame,
     Scale shape: centroids ship as a SparkContext broadcast (≤K rows —
     the table the whole IVF design already keeps broadcastable), the
     corpus streams through mapInPandas in Arrow batches (no shuffle at
-    all — the join kernel's map-side-combined exchange of n rows is
-    gone too), and memory per batch is bounded by chunking rows so the
+    all), and memory per batch is bounded by chunking rows so the
     (rows × K) distance block stays ≤ ~32 MB.  Assumes non-null
     embeddings (every call site feeds the embeddings table or frames
-    derived from it).  Equivalence with the join kernel is pinned in
-    tests/test_assign_kernel.py; the measured A/B lives in SCALE.md
-    (round 14).
+    derived from it).
 
     ``keep_residual=True`` (r15, VERDICT r14 item 2) additionally
     emits ``residual = embedding − centroid[cell]`` from the SAME
@@ -449,8 +351,7 @@ def _assign_cells_np(embeddings: DataFrame, cent: DataFrame,
     corpus scan instead of two plus a join).  Bit-discipline:
     elementwise float64 subtraction of the same widened operands IS
     the JVM ``zip_with(x.cast(double) − c)`` — no accumulation, no
-    rounding, so the residuals are bit-identical by construction
-    (pinned in tests/test_assign_kernel.py)."""
+    rounding, so the residuals are bit-identical by construction."""
     import numpy as np
 
     # bounded collect: ≤K centroid rows (K = ceil(n/occupancy))
@@ -514,86 +415,28 @@ def _assign_cells_np(embeddings: DataFrame, cent: DataFrame,
     return src.mapInPandas(assign, out_schema)
 
 
-def _assign_cells(embeddings: DataFrame, cent: DataFrame,
-                  keep_dist: bool = False) -> DataFrame:
-    """Nearest-centroid assignment (L2, ties → lowest cid): centroid
-    table broadcast, one scan over the vectors.  Distances round to
-    9 dp so cross-engine last-bit drift can't flip an argmin.
-    ``keep_dist=True`` carries the argmin distance through (the
-    prototypicality score) — one assignment body for every consumer
-    instead of a third copy of the rounding/tie discipline (ADVICE
-    r11).
-
-    The argmin is ``min(struct(dist, cid))`` — lexicographic struct
-    ordering IS the (dist, then cid) tie discipline — NOT a
-    row_number window: the aggregate partially combines map-side, so
-    the K candidate rows per vector collapse to one *before* the
-    exchange (shuffle carries n rows, not n·K, and nothing sorts),
-    while the window form shuffles all n·K rows and sorts every
-    partition.  Measured at sf0.1 (same-JVM A/B, median of 3, results
-    bit-identical): q_ann_ivf 2.07→1.93s, q_ann_pq 3.50→3.06s — local
-    runs are stage-overhead-bound, so the n·K→n shuffle-volume cut is
-    the larger effect at scale.
-
-    Since r14 the DEFAULT routes to :func:`_assign_cells_np`, the
-    bit-identical Arrow-vectorized twin (same rounded-argmin contract,
-    no n·K row explosion) — the measured A/B (SCALE.md round 14)
-    halves trainer wall at sf0.1 and cuts sf1 trainer CPU ~45%.
-    ``HK_ASSIGN_KERNEL=join`` keeps this broadcast-join kernel
-    selectable for the equivalence pins in tests/test_assign_kernel.py."""
-    if __import__("os").environ.get("HK_ASSIGN_KERNEL", "np") == "np":
-        return _assign_cells_np(embeddings, cent, keep_dist)
-    d = (embeddings.select("vec_id", "embedding")
-         .crossJoin(F.broadcast(cent))
-         .select("vec_id", "cid",
-                 F.round(_l2sq(F.col("embedding"), F.col("cemb")), 9).alias("dist")))
-    assigned = (d.groupBy("vec_id")
-                .agg(F.min(F.struct("dist", "cid")).alias("m"))
-                .select("vec_id", F.col("m.cid").alias("cell"),
-                        F.col("m.dist").alias("dist")))
-    return assigned if keep_dist else assigned.drop("dist")
-
-
 def _cells_and_residuals(vectors: DataFrame,
                          cent: DataFrame) -> tuple[DataFrame, DataFrame]:
     """ONE corpus pass for the residual-IVFPQ build prologue (r15,
     VERDICT r14 item 2): returns ``(cells, res)`` — the coarse
     assignment and the residual relation ``x − c(cell(x))`` — computed
-    together.  Under the default Arrow kernel the residual is emitted
-    from the same batch as the argmin (`_assign_cells_np`
-    ``keep_residual=True``), so the second corpus scan, the
-    (embeddings ⋈ cells) n-row join with its two exchanges, and the
-    interpreted per-element ``zip_with`` subtraction all disappear;
-    one eager ``localCheckpoint`` materializes both outputs (the
-    residual chain's lineage-truncation contract, VERDICT r5 item 1).
-    ``HK_ASSIGN_KERNEL=join`` or ``HK_RESIDUAL_KERNEL=join`` keep the
-    original two-pass join form — the independent reference
-    implementation the bit-identity test pins this against (the
-    latter isolates just the residual fusion for A/B)."""
-    env = __import__("os").environ
-    if (env.get("HK_ASSIGN_KERNEL", "np") == "np"
-            and env.get("HK_RESIDUAL_KERNEL", "np") == "np"):
-        assigned = _assign_cells_np(vectors, cent, keep_residual=True) \
-            .localCheckpoint(eager=True)
-        return (assigned.select("vec_id", "cell"),
-                assigned.select("vec_id",
-                                F.col("residual").alias("embedding")))
-    cells = _assign_cells(vectors, cent).localCheckpoint(eager=True)
-    res = (vectors.select("vec_id", "embedding")
-           .join(cells, "vec_id")
-           .join(F.broadcast(cent), F.col("cell") == F.col("cid"))
-           .select("vec_id",
-                   F.zip_with("embedding", "cemb",
-                              lambda x, c: x.cast("double") - c)
-                   .alias("embedding"))
-           .localCheckpoint(eager=True))
-    return cells, res
+    together.  The residual is emitted from the same batch as the
+    argmin (`_assign_cells` ``keep_residual=True``), so the second
+    corpus scan, the (embeddings ⋈ cells) n-row join with its two
+    exchanges, and the interpreted per-element ``zip_with``
+    subtraction of the r14 two-pass form never run; one eager
+    ``localCheckpoint`` materializes both outputs (the residual
+    chain's lineage-truncation contract, VERDICT r5 item 1)."""
+    assigned = _assign_cells(vectors, cent, keep_residual=True) \
+        .localCheckpoint(eager=True)
+    return (assigned.select("vec_id", "cell"),
+            assigned.select("vec_id", F.col("residual").alias("embedding")))
 
 
 def _mean_partials_np(embeddings: DataFrame, cent: DataFrame) -> DataFrame:
     """Fused Lloyd-iteration body (r15): ONE Arrow pass assigns each
     vector to its nearest centroid (the identical argmin discipline of
-    `_assign_cells_np`) and accumulates the per-cell member sums as
+    `_assign_cells`) and accumulates the per-cell member sums as
     exact scaled-int64 partials IN THE SAME BATCH.  The per-iteration
     (embeddings ⋈ assignment) join with its two n-row exchanges and
     the n·D ``posexplode`` Generate disappear; the shuffle carries
@@ -601,7 +444,7 @@ def _mean_partials_np(embeddings: DataFrame, cent: DataFrame) -> DataFrame:
     map-side aggregation, project before the exchange).
 
     Exactness (the `embedding_covariance` argument, r14 §2): the
-    expression form quantizes EACH member value to decimal(30,10) —
+    oracle quantizes EACH member value to decimal(30,10) —
     HALF_UP at 10 dp over the double's shortest decimal repr (Spark's
     double→decimal cast) — and SUMs, which is exact integer
     arithmetic in units of 1e-10 and therefore order-independent.
@@ -610,10 +453,9 @@ def _mean_partials_np(embeddings: DataFrame, cent: DataFrame) -> DataFrame:
     re-quantized exactly via ``Decimal(repr(v))``), sums int64 per
     (cell, pos) per batch, and emits decimal(30,10) partials; the
     downstream decimal SUM and the single double division are the
-    same expressions as the reference form, so the means are
-    bit-identical at any batch or partition boundary (pinned in
-    tests/test_assign_kernel.py).  Returns the ``(cell, pos, m)``
-    relation of the expression form's ``means``."""
+    oracle's expressions, so the means are bit-identical at any batch
+    or partition boundary.  Returns the per-iteration ``(cell, pos,
+    m)`` member means."""
     import numpy as np
 
     rows = sorted(cent.select("cid", "cemb").collect(), key=lambda r: r.cid)
@@ -658,7 +500,7 @@ def _mean_partials_np(embeddings: DataFrame, cent: DataFrame) -> DataFrame:
             X = np.empty((n, D), dtype=np.float64)
             for i, e in enumerate(pdf["embedding"]):
                 X[i] = np.asarray(e, dtype=np.float64)
-            # assignment: identical discipline to _assign_cells_np
+            # assignment: identical discipline to _assign_cells
             step = max(1, (4 << 20) // max(K, 1))
             lab = np.empty(n, dtype=np.int64)     # index into C_l
             for lo in range(0, n, step):
@@ -679,7 +521,10 @@ def _mean_partials_np(embeddings: DataFrame, cent: DataFrame) -> DataFrame:
                     lab[lo + i] = best[2]
             # int64 headroom: per-cell sums of ≤n scaled values must
             # stay < 2^62 (fixture values are O(1) — see covariance)
-            assert float(np.abs(X).max(initial=0.0)) * 1e10 * n < 2 ** 62
+            if float(np.abs(X).max(initial=0.0)) * 1e10 * n >= 2 ** 62:
+                raise ValueError(
+                    "Lloyd means: |embedding| too large for exact "
+                    "int64 decimal(30,10) partial sums")
             Q = q10(X)
             order = np.argsort(lab, kind="stable")
             sl = lab[order]
@@ -698,25 +543,6 @@ def _mean_partials_np(embeddings: DataFrame, cent: DataFrame) -> DataFrame:
             .agg((F.sum("s").cast("double") / F.sum("c")).alias("m")))
 
 
-def _lloyd_means(embeddings: DataFrame, cent: DataFrame) -> DataFrame:
-    """Per-iteration member means, routed: the fused Arrow partials
-    kernel by default; ``HK_LLOYD_MEANS=expr`` isolates the means
-    change for A/B, and ``HK_ASSIGN_KERNEL=join`` selects the complete
-    expression reference pipeline (assignment join + posexplode +
-    decimal hash aggregate) exactly as before r15."""
-    env = __import__("os").environ
-    if (env.get("HK_LLOYD_MEANS", "np") == "np"
-            and env.get("HK_ASSIGN_KERNEL", "np") == "np"):
-        return _mean_partials_np(embeddings, cent)
-    assign = _assign_cells(embeddings, cent)
-    exploded = (embeddings.select("vec_id", "embedding")
-                .join(assign, "vec_id")
-                .select("cell", F.posexplode("embedding").alias("pos", "val")))
-    return (exploded.groupBy("cell", "pos")
-            .agg((F.sum(F.col("val").cast("double").cast("decimal(30,10)"))
-                  .cast("double") / F.count(F.lit(1))).alias("m")))
-
-
 def kmeans_centroids(embeddings: DataFrame,
                      n_centroids: int | None = None,
                      iters: int = IVF_ITERS) -> DataFrame:
@@ -732,13 +558,13 @@ def kmeans_centroids(embeddings: DataFrame,
     explicitly pins K.  The oracles derive the same K in SQL
     (`_derived_k_sql`).
 
-    Each round is the same broadcast-assignment join; the mean is a
-    posexplode → groupBy(cell, dim) → rebuild-array pipeline (K·D
-    tiny rows out).  Means accumulate in DECIMAL(30,10) — exact and
-    summation-order independent — then divide as double, so Spark and
-    DuckDB produce bit-identical centroids regardless of partitioning
-    (a raw double sum would drift with partition order and could flip
-    downstream argmins).  A centroid that loses every member simply
+    Each round is ONE fused Arrow pass (`_mean_partials_np`:
+    assignment + per-cell member-sum partials) → groupBy(cell, pos)
+    → rebuild-array (K·D tiny rows out).  Means accumulate in
+    DECIMAL(30,10) — exact and summation-order independent — then
+    divide as double, so Spark and DuckDB produce bit-identical
+    centroids regardless of partitioning (a raw double sum would drift
+    with partition order and could flip downstream argmins).  A centroid that loses every member simply
     drops out (deterministic in both engines; K shrinks).  At scale:
     iteration cost = iters × (scan + K·D-row shuffle) — the standard
     distributed k-means shape.
@@ -755,8 +581,7 @@ def kmeans_centroids(embeddings: DataFrame,
     Cadence A/B (VERDICT r6 item 1a — was the per-iteration eager
     barrier taxing single-chain consumers?).  Measured at sf0.1,
     local[32], one FRESH JVM per mode, warm-up + median-of-3 per
-    query, two independent passes (``HK_LLOYD_CKPT`` switches the
-    mode via :func:`_lloyd_ckpt`; all modes hash-identical):
+    query, two independent passes (all modes hash-identical):
 
     ==========  ======================  =========  ==============
     mode        q_dedup_semantic (s)    ivfpq (s)  6-query total
@@ -785,20 +610,17 @@ def kmeans_centroids(embeddings: DataFrame,
             .select(F.col("vec_id").cast("int").alias("cid"),
                     F.transform("embedding",
                                 lambda x: x.cast("double")).alias("cemb")))
-    for it in range(iters):
-        # since r15 the per-iteration (assign → join-back → posexplode
-        # → decimal hash agg) body routes through _lloyd_means — the
-        # fused Arrow partials kernel by default (one corpus pass per
-        # iteration, ≤K·D-row exchange), the expression form under
-        # HK_LLOYD_MEANS=expr / HK_ASSIGN_KERNEL=join
-        means = _lloyd_means(embeddings, cent)
-        cent = _lloyd_ckpt(
-            means.groupBy("cell")
-            .agg(F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s.m).alias("cemb"))
-            .select(F.col("cell").alias("cid"), "cemb"),
-            is_last=it == iters - 1)
+    for _ in range(iters):
+        # one fused Arrow pass per iteration (assignment + exact
+        # member-sum partials, ≤K·D-row exchange) — see
+        # `_mean_partials_np`
+        means = _mean_partials_np(embeddings, cent)
+        cent = (means.groupBy("cell")
+                .agg(F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                    lambda s: s.m).alias("cemb"))
+                .select(F.col("cell").alias("cid"), "cemb")
+                .localCheckpoint(eager=True))
     return cent
 
 
@@ -813,9 +635,10 @@ def ann_ivf_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 5,
                  nprobe: int = 1) -> DataFrame:
     """ANN via IVF: search the ``nprobe`` cells nearest the query
     vector's centroid distance, exact cosine within them.  The at-scale
-    contract: assignment is a broadcast join, the search scans
-    nprobe·n/K vectors instead of n; raising nprobe trades scan volume
-    for recall (recall pinned vs brute force in tests)."""
+    contract: assignment is one map-only pass against the broadcast
+    centroids, the search scans nprobe·n/K vectors instead of n;
+    raising nprobe trades scan volume for recall (recall pinned vs
+    brute force in tests)."""
     cent = kmeans_centroids(embeddings)
     cells = _assign_cells(embeddings, cent)
     withv = cells.join(embeddings.select("vec_id", "embedding"), "vec_id")
@@ -934,96 +757,6 @@ def _pq_subspaces(m: int = PQ_M, sub_dim: int = PQ_SUB_DIM):
         for j in range(m)])
 
 
-def _assign_sub_np(staged: DataFrame, cent: DataFrame) -> DataFrame:
-    """Arrow twin of the per-(vector, subspace) assignment — the
-    `_assign_cells_np` pattern with the subspace id as an extra
-    grouping key.  Same bit-discipline: per-dimension accumulation in
-    index order (the JVM fold's IEEE sequence), argmin over HALF_UP-
-    rounded-9dp distances with ties → lowest cid via exact
-    ``Decimal(repr(d))`` on the few candidates within 2e-9 of the
-    unrounded minimum.  The n·m·K candidate row explosion and its
-    map-side-combined exchange disappear; the m·k codebook rides a
-    SparkContext broadcast.  Pinned bit-identical in
-    tests/test_assign_kernel.py."""
-    import numpy as np
-
-    # bounded collect: ≤ m·k codebook rows
-    rows = cent.select("j", "cid", "cemb").collect()
-    by_j: dict[int, list] = {}
-    for r in rows:
-        by_j.setdefault(int(r.j), []).append((int(r.cid), list(r.cemb)))
-    packed = {
-        j: (np.asarray([c for c, _ in sorted(v)], dtype=np.int64),
-            np.asarray([e for _, e in sorted(v)], dtype=np.float64))
-        for j, v in by_j.items()}
-    spark = staged.sparkSession
-    b_cent = spark.sparkContext.broadcast(packed)
-    src = staged.select("vec_id", "j", "sub")
-    vt = src.schema["vec_id"].dataType.simpleString()
-
-    def assign(batches):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        import numpy as np
-        import pandas as pd
-
-        cb = b_cent.value
-        grid = Decimal("1e-9")
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            js = pdf["j"].to_numpy()
-            subs = pdf["sub"].to_numpy()
-            cells = np.empty(n, dtype=np.int64)
-            for j in np.unique(js):
-                cids, C = cb[int(j)]
-                K, D = C.shape
-                idx = np.nonzero(js == j)[0]
-                X = np.stack([np.asarray(subs[i], dtype=np.float64)
-                              for i in idx])
-                acc = np.zeros((len(idx), K), dtype=np.float64)
-                for d in range(D):          # JVM fold order
-                    t = X[:, d, None] - C[None, :, d]
-                    acc += t * t
-                m = acc.min(axis=1)
-                for i in range(len(idx)):
-                    cand = np.nonzero(acc[i] <= m[i] + 2e-9)[0]
-                    best = None
-                    for c in cand:
-                        dj = Decimal(repr(float(acc[i, c]))).quantize(
-                            grid, ROUND_HALF_UP)
-                        if best is None or (dj, cids[c]) < best[:2]:
-                            best = (dj, cids[c])
-                    cells[idx[i]] = best[1]
-            yield pd.DataFrame({"vec_id": pdf["vec_id"],
-                                "j": pdf["j"],
-                                "cell": cells.astype("int32")})
-
-    return src.mapInPandas(assign, f"vec_id {vt}, j int, cell int")
-
-
-def _assign_sub(staged: DataFrame, cent: DataFrame) -> DataFrame:
-    """Nearest-centroid per (vector, subspace): centroids keyed by
-    (j, cid) broadcast; argmin with the same rounded-distance /
-    lowest-cid tie discipline as the IVF assignment — and the same
-    ``min(struct)`` partial-aggregating shape (see _assign_cells:
-    map-side combine collapses the K candidates per (vector,
-    subspace) before the exchange; a window would shuffle and sort
-    all n·m·K rows).  Since r14 the default rides
-    :func:`_assign_sub_np` under the SAME ``HK_ASSIGN_KERNEL``
-    switch as the coarse assignment (one flag flips every Lloyd
-    family)."""
-    if __import__("os").environ.get("HK_ASSIGN_KERNEL", "np") == "np":
-        return _assign_sub_np(staged, cent)
-    d = (staged.join(F.broadcast(cent), "j")
-         .select("vec_id", "j", "cid",
-                 F.round(_l2sq(F.col("sub"), F.col("cemb")), 9).alias("dist")))
-    return (d.groupBy("vec_id", "j")
-            .agg(F.min(F.struct("dist", "cid")).alias("m"))
-            .select("vec_id", "j", F.col("m.cid").alias("cell")))
-
-
 def _collect_codebook(cent: DataFrame):
     """Bounded collect of the (j, cid, cemb) codebook (≤ m·k rows),
     packed per subspace sorted by cid — shared by the fused PQ
@@ -1044,16 +777,15 @@ def _sub_mean_partials_np(vectors: DataFrame, cent: DataFrame,
                           sub_dim: int = PQ_SUB_DIM) -> DataFrame:
     """Fused PQ-Lloyd iteration body over the UNEXPLODED n-row vector
     relation (r15): subspace slicing, the per-(vector, subspace)
-    argmin (the `_assign_sub_np` bit discipline) and the per-(j, cell)
-    member-sum partials all happen in ONE Arrow pass, so the n·m
-    subspace Generate, the (vec_id, j) join-back with its exchanges
-    and the n·m·sub_dim posexplode disappear; the shuffle carries
-    ≤ m·k·sub_dim partial rows per batch.  Exactness is the
+    argmin (the `_assign_cells` bit discipline per subspace) and the
+    per-(j, cell) member-sum partials all happen in ONE Arrow pass, so
+    the n·m subspace Generate, the (vec_id, j) join-back with its
+    exchanges and the n·m·sub_dim posexplode disappear; the shuffle
+    carries ≤ m·k·sub_dim partial rows per batch.  Exactness is the
     `_mean_partials_np` argument verbatim (per-value decimal(30,10)
     quantization, exact int64 partial sums, shared downstream
-    decimal SUM + double division) — pinned end-to-end in
-    tests/test_assign_kernel.py.  Returns the ``(j, cell, pos, m)``
-    relation of the expression form's ``means``."""
+    decimal SUM + double division).  Returns the per-iteration
+    ``(j, cell, pos, m)`` member means."""
     spark = vectors.sparkSession
     b_cent = spark.sparkContext.broadcast(_collect_codebook(cent))
     src = vectors.select("embedding")
@@ -1090,7 +822,11 @@ def _sub_mean_partials_np(vectors: DataFrame, cent: DataFrame,
             X = np.empty((n, m * sub_dim), dtype=np.float64)
             for i, e in enumerate(pdf["embedding"]):
                 X[i] = np.asarray(e, dtype=np.float64)
-            assert float(np.abs(X).max(initial=0.0)) * 1e10 * n < 2 ** 62
+            # int64 headroom, as in `_mean_partials_np`
+            if float(np.abs(X).max(initial=0.0)) * 1e10 * n >= 2 ** 62:
+                raise ValueError(
+                    "PQ Lloyd means: |embedding| too large for exact "
+                    "int64 decimal(30,10) partial sums")
             js, cells_o, poss, ss, cs = [], [], [], [], []
             for j in sorted(cb):
                 cids, C = cb[j]
@@ -1140,12 +876,11 @@ def _codes_np(vectors: DataFrame, cent: DataFrame, m: int = PQ_M,
     """Final PQ code assignment emitted WIDE in one Arrow pass (r15):
     (vec_id, code0..code{m-1}) directly from the n-row vector
     relation — the n·m subspace Generate, the per-(vector, subspace)
-    assignment rows and `_codes_wide`'s pivot groupBy (an n·m → n
-    exchange) all disappear; the pass is map-only.  Per-subspace
-    argmin follows the `_assign_sub_np` bit discipline exactly
-    (float64 dimension-order accumulation, HALF_UP-9dp rounded
-    comparison, ties → lowest cid) — value-identity with the staged
-    pipeline pinned in tests/test_assign_kernel.py."""
+    assignment rows and their pivot groupBy (an n·m → n exchange) of
+    the staged form it replaced all disappear; the pass is map-only.
+    Per-subspace argmin follows the `_assign_cells` bit discipline
+    exactly (float64 dimension-order accumulation, HALF_UP-9dp rounded
+    comparison, ties → lowest cid)."""
     spark = vectors.sparkSession
     b_cent = spark.sparkContext.broadcast(_collect_codebook(cent))
     src = vectors.select("vec_id", "embedding")
@@ -1194,28 +929,6 @@ def _codes_np(vectors: DataFrame, cent: DataFrame, m: int = PQ_M,
     return src.mapInPandas(kern, out_schema)
 
 
-def _pq_fused() -> bool:
-    """True when the fused PQ training/encoding kernels are selected —
-    the default; HK_LLOYD_MEANS=expr or HK_ASSIGN_KERNEL=join select
-    the staged expression pipeline (the reference form)."""
-    env = __import__("os").environ
-    return (env.get("HK_LLOYD_MEANS", "np") == "np"
-            and env.get("HK_ASSIGN_KERNEL", "np") == "np")
-
-
-def _encode_codes(vectors: DataFrame, book: DataFrame, m: int = PQ_M,
-                  sub_dim: int = PQ_SUB_DIM) -> DataFrame:
-    """Frozen-codebook encoder: vectors → wide (vec_id, code*) rows.
-    Fused Arrow pass by default; the staged explode + `_assign_sub` +
-    `_codes_wide` pivot pipeline under the reference switches."""
-    if _pq_fused():
-        return _codes_np(vectors, book, m, sub_dim)
-    staged = (vectors.select("vec_id",
-                             F.explode(_pq_subspaces(m, sub_dim)).alias("s"))
-              .select("vec_id", "s.j", "s.sub"))
-    return _codes_wide(_assign_sub(staged, book), m)
-
-
 #: Per-process memo of passed seed-count guards, keyed on
 #: (corpus semanticHash, sorted inputFiles, seed_stride, k) — see
 #: pq_codes.  semanticHash identifies the LOGICAL PLAN only (and is
@@ -1241,11 +954,14 @@ def pq_codes(embeddings: DataFrame, m: int = PQ_M, sub_dim: int = PQ_SUB_DIM,
     a 100 TB embedding corpus scannable; codebook = one tiny
     (j, cid, cemb) table of m·k centroids.
 
-    All m codebooks train in ONE fused Lloyd loop over the exploded
-    (vec_id, j, slice) relation — subspace is just another grouping
-    key, so each iteration is one assignment join + one mean aggregate
-    for every subspace at once instead of m separate pipelines
-    (measured 5.0s → 3.9s at sf0.1 for the ADC query).  The math is
+    All m codebooks train in ONE fused Lloyd loop — subspace is just
+    another grouping key, so each iteration is one assignment + one
+    mean aggregate for every subspace at once instead of m separate
+    pipelines (measured 5.0s → 3.9s at sf0.1 for the ADC query).
+    Since r15 the iteration means ride `_sub_mean_partials_np` and the
+    final codes `_codes_np`, both over the n-row vector relation
+    (subspaces sliced in the kernel), so the n·m exploded subspace
+    relation is never built.  The math is
     identical per subspace (decimal-exact means, rounded argmins), so
     the per-subspace-chain DuckDB oracle verifies this fused form
     unchanged.
@@ -1254,35 +970,22 @@ def pq_codes(embeddings: DataFrame, m: int = PQ_M, sub_dim: int = PQ_SUB_DIM,
     eagerly ``localCheckpoint``ed (m·k rows) so assignment lineage
     stays one-iteration deep instead of re-executing the whole
     training prefix per evaluation (VERDICT r5 item 1)."""
-    # Since r15 the fused default (`_pq_fused`) never builds the n·m
-    # exploded subspace relation at all: iteration means ride
-    # `_sub_mean_partials_np` and the final codes `_codes_np`, both
-    # over the n-row vector relation (subspaces sliced in the kernel).
-    # The staged pipeline below remains the reference form.
-    fused = _pq_fused()
-    staged = None if fused else (
-        embeddings
-        .select("vec_id", F.explode(_pq_subspaces(m, sub_dim)).alias("s"))
-        .select("vec_id", "s.j", "s.sub"))
     # seed_stride > 1 spreads the k seed vectors across the corpus
     # (vec_id 0, stride, 2·stride, …) — for RESIDUAL training the
     # first k residuals are degenerate (the coarse seeds sit near
     # their own centroids, so their residuals cluster at the origin
     # and Lloyd collapses; measured recall@5·8 0.6 → 1.0 at sf0.01
     # from this one change).  stride=1 is the original raw-vector
-    # seeding, unchanged.  The seed build only ever explodes the ≤k
-    # seed rows under the fused path (identical values either way).
-    seed_src = staged if staged is not None else (
-        embeddings
-        .filter((F.col("vec_id") % seed_stride == 0)
-                & (F.col("vec_id") < k * seed_stride))
-        .select("vec_id", F.explode(_pq_subspaces(m, sub_dim)).alias("s"))
-        .select("vec_id", "s.j", "s.sub"))
-    cent = (seed_src.filter((F.col("vec_id") % seed_stride == 0)
-                            & (F.col("vec_id") < k * seed_stride))
-            .select("j", (F.col("vec_id") / seed_stride)
+    # seeding, unchanged.  The seed build only explodes the ≤k seed
+    # rows.
+    cent = (embeddings
+            .filter((F.col("vec_id") % seed_stride == 0)
+                    & (F.col("vec_id") < k * seed_stride))
+            .select("vec_id", F.explode(_pq_subspaces(m, sub_dim)).alias("s"))
+            .select("s.j", (F.col("vec_id") / seed_stride)
                     .cast("int").alias("cid"),
-                    F.transform("sub", lambda x: x.cast("double")).alias("cemb")))
+                    F.transform("s.sub", lambda x: x.cast("double"))
+                    .alias("cemb")))
     if seed_stride > 1:
         # Strided seeding needs vec_ids 0, stride, …, (k-1)·stride to
         # EXIST; a smaller corpus would silently train < k centroids
@@ -1307,38 +1010,15 @@ def pq_codes(embeddings: DataFrame, m: int = PQ_M, sub_dim: int = PQ_SUB_DIM,
                     f"vec_ids 0..{(k - 1) * seed_stride} (use stride=1 "
                     f"for small corpora)")
             _SEED_GUARD_OK.add(guard_key)
-    for it in range(iters):
-        if fused:
-            means = _sub_mean_partials_np(embeddings, cent, m, sub_dim)
-        else:
-            assign = _assign_sub(staged, cent)
-            exploded = (staged.join(assign, ["vec_id", "j"])
-                        .select("j", "cell",
-                                F.posexplode("sub").alias("pos", "val")))
-            means = (exploded.groupBy("j", "cell", "pos")
-                     .agg((F.sum(F.col("val").cast("double")
-                                 .cast("decimal(30,10)"))
-                           .cast("double") / F.count(F.lit(1))).alias("m")))
-        cent = _lloyd_ckpt(
-            means.groupBy("j", "cell")
-            .agg(F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s.m).alias("cemb"))
-            .select("j", F.col("cell").alias("cid"), "cemb"),
-            is_last=it == iters - 1)
-    if fused:
-        return _codes_np(embeddings, cent, m, sub_dim), cent
-    return _codes_wide(_assign_sub(staged, cent), m), cent
-
-
-def _codes_wide(codes_long: DataFrame, m: int = PQ_M) -> DataFrame:
-    """(vec_id, j, cell) long form → (vec_id, code0..code{m-1}) — the
-    stored code layout, shared by training and the frozen-codebook
-    append encoder."""
-    codes = (codes_long.groupBy("vec_id")
-             .pivot("j", list(range(m))).agg(F.first("cell")))
-    return codes.select("vec_id", *[F.col(str(j)).alias(f"code{j}")
-                                    for j in range(m)])
+    for _ in range(iters):
+        means = _sub_mean_partials_np(embeddings, cent, m, sub_dim)
+        cent = (means.groupBy("j", "cell")
+                .agg(F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                    lambda s: s.m).alias("cemb"))
+                .select("j", F.col("cell").alias("cid"), "cemb")
+                .localCheckpoint(eager=True))
+    return _codes_np(embeddings, cent, m, sub_dim), cent
 
 
 PQ_RERANK = 8  # shortlist factor: ADC keeps rerank*k, exact re-ranks
@@ -2087,7 +1767,10 @@ def embedding_covariance(embeddings: DataFrame, dim: int = DIM) -> DataFrame:
             # int64 headroom: per-column sums of ≤n scaled products
             # must stay < 2^62 (fixture values are O(1); a corpus that
             # violated this would need |x| ~ 1e4 at 10k-row batches)
-            assert float(np.abs(X).max(initial=0.0)) ** 2 * 1e10 * n < 2 ** 62
+            if float(np.abs(X).max(initial=0.0)) ** 2 * 1e10 * n >= 2 ** 62:
+                raise ValueError(
+                    "embedding_covariance: |embedding| too large for "
+                    "exact int64 decimal(30,10) product sums")
             totals = np.zeros(len(iu[0]), dtype=np.int64)
             dsums = np.zeros(dim, dtype=np.int64)
             step = max(1, (64 << 20) // (dim * dim * 8))
@@ -2702,7 +2385,7 @@ def build_ann_index_appended(spark: SparkSession, sf_dir: str,
         book = cat.read(spark, "codebook")
         new = emb.filter(F.col("vec_id") >= split)
         ncells, nres = _cells_and_residuals(new, cent)
-        ncodes = _encode_codes(nres, book)
+        ncodes = _codes_np(nres, book)
         cat.publish_pass({"cells": ncells, "codes": ncodes})
     return cat
 
@@ -2906,7 +2589,7 @@ def _rebalance_pass(spark: SparkSession, emb: DataFrame, cat,
                    F.zip_with("embedding", "cemb",
                               lambda x, c: x.cast("double") - c)
                    .alias("embedding")))
-    codes_delta = _encode_codes(res, book)
+    codes_delta = _codes_np(res, book)
     cat.publish_pass({"centroids": surv, "cells_delta": moved,
                       "codes_delta": codes_delta},
                      replace={"centroids"})
@@ -3965,7 +3648,8 @@ def bitext_recall_report(spark: SparkSession, sf_dir: str,
 K_CENTERS = 8  # greedy k-center selection budget
 
 
-def kcenter_coreset(embeddings: DataFrame, k: int = K_CENTERS) -> DataFrame:
+def kcenter_coreset(embeddings: DataFrame, k: int = K_CENTERS,
+                    pool: int | None = None) -> DataFrame:
     """Greedy k-center / farthest-point coreset selection (Gonzalez
     1985, the 2-approximation; used as the coreset construction for
     data-efficient training — Sener & Savarese 2018): seed with
@@ -3974,14 +3658,6 @@ def kcenter_coreset(embeddings: DataFrame, k: int = K_CENTERS) -> DataFrame:
     distance at selection time — non-increasing by construction, and
     radius[k] bounds the optimal k-center cost within 2×.
 
-    Spark shape: a running ``dmin`` column (distance to the nearest
-    selected center) makes each round ONE scan updating against the
-    single new center (O(1) distance work per row per round, not
-    O(k)) plus a TakeOrdered(1) argmax — k scans total, the standard
-    distributed farthest-point sweep.  The per-round argmax is a
-    bounded 1-row collect (the selected set itself is ≤k rows — the
-    PCA/MMR collect discipline); ``localCheckpoint`` truncates the
-    k-deep lineage each round exactly like the Lloyd chain.
     Determinism: distances round to 9 dp, ties break by vec_id; the
     seed is the MINIMUM vec_id (deterministic for any corpus — a
     hard-coded id 0 raised a bare IndexError on corpora without it,
@@ -3991,8 +3667,8 @@ def kcenter_coreset(embeddings: DataFrame, k: int = K_CENTERS) -> DataFrame:
     WHERE EXISTS guard on the seed row (ADVICE r12), the closest SQL
     analogue of the same refusal.
 
-    Since r15 (VERDICT r14 item 5) the default rides the BATCHED
-    sweep: ONE TakeOrdered(pool) corpus scan collects the ``pool``
+    Spark shape (r15, VERDICT r14 item 5) — the BATCHED sweep: ONE
+    TakeOrdered(pool) corpus scan collects the ``pool``
     globally-farthest candidates, the k−1 greedy rounds run on the
     driver over that bounded pool with EXACT Spark arithmetic
     (dimension-order float64 fold + HALF_UP-9dp rounding — the
@@ -4004,49 +3680,16 @@ def kcenter_coreset(embeddings: DataFrame, k: int = K_CENTERS) -> DataFrame:
     corpus rescan with the updated dmin expression, so the greedy
     contract is preserved EXACTLY, not approximately (oracle
     unchanged, hash-verified).  Corpus scans drop from k to 1 (+1 per
-    rare uncertified pick); the k−1 n-row localCheckpoints disappear.
-    ``HK_KCENTER_KERNEL=scan`` keeps the per-round scan form — the
-    independent reference the equivalence test pins this against."""
-    if __import__("os").environ.get("HK_KCENTER_KERNEL", "batched") \
-            != "scan":
-        return _kcenter_batched(embeddings, k)
-    spark = embeddings.sparkSession
-    base = embeddings.select("vec_id", "embedding")
+    rare uncertified pick) against the per-round scan form it
+    replaced (one running-``dmin`` scan + TakeOrdered(1) per pick and
+    k−1 n-row localCheckpoints; q_kcenter_coreset 1.91 → 0.53 s at
+    sf0.1).
 
-    def dist_to(vec):
-        lits = F.array(*[F.lit(float(v)) for v in vec])
-        return F.round(_l2sq(F.col("embedding"), lits), 9)
-
-    # bounded collect: the seed row (1 row; TakeOrdered heap)
-    seed_rows = base.orderBy("vec_id").limit(1).collect()
-    if not seed_rows:
-        raise ValueError("kcenter_coreset: empty embedding corpus — "
-                         "no seed row to select")
-    seed = seed_rows[0]
-    d = base.select("vec_id", "embedding",
-                    dist_to(seed.embedding).alias("dmin"))
-    picks = [(0, int(seed.vec_id), None)]
-    for i in range(1, k):
-        d = d.localCheckpoint(eager=True)
-        # bounded collect: the round's argmax (1 row; ≤k−1 total)
-        far = d.orderBy(F.col("dmin").desc(), "vec_id").limit(1).collect()[0]
-        picks.append((i, int(far.vec_id), float(far.dmin)))
-        d = d.select("vec_id", "embedding",
-                     F.least(F.col("dmin"),
-                             dist_to(far.embedding)).alias("dmin"))
-    return one_slice_df(spark,
-        picks, "sel_order int, vec_id bigint, radius double")
-
-
-def _kcenter_batched(embeddings: DataFrame, k: int = K_CENTERS,
-                     pool: int | None = None) -> DataFrame:
-    """The batched greedy k-center sweep — see `kcenter_coreset` for
-    the contract and the domination argument.  ``pool`` defaults to
-    256·k (measured: pool=2048 certifies all k−1 picks from ONE scan
-    at both fixture scales, vs 4 rescans at pool=32; the collected
-    pool is ~1 MB — a bounded TakeOrdered heap, never corpus-shaped).
-    The verification rescan keeps correctness independent of the
-    choice (pinned at pool=3 in test_similarity)."""
+    ``pool`` defaults to 256·k (measured: pool=2048 certifies all k−1
+    picks from ONE scan at both fixture scales, vs 4 rescans at
+    pool=32; the collected pool is ~1 MB — a bounded TakeOrdered heap,
+    never corpus-shaped).  The verification rescan keeps correctness
+    independent of the choice (pinned at pool=3 in test_similarity)."""
     from decimal import ROUND_HALF_UP, Decimal
 
     import numpy as np
@@ -4055,10 +3698,6 @@ def _kcenter_batched(embeddings: DataFrame, k: int = K_CENTERS,
     base = embeddings.select("vec_id", "embedding")
     if pool is None:
         pool = max(256 * k, 2048)
-
-    def dist_to(vec):
-        lits = F.array(*[F.lit(float(v)) for v in vec])
-        return F.round(_l2sq(F.col("embedding"), lits), 9)
 
     # seed = the min-vec_id row: a column-pruned min scan + a pushed
     # equality fetch (an orderBy(vec_id).limit(1) TakeOrdered decodes
@@ -4083,7 +3722,7 @@ def _kcenter_batched(embeddings: DataFrame, k: int = K_CENTERS,
     def collect_pool(picked_embs):
         # ONE corpus pass: an Arrow kernel computes every row's
         # current dmin (min over picks of the 9dp-rounded fold — the
-        # `_assign_cells_np` bit discipline) and pre-selects its
+        # `_assign_cells` bit discipline) and pre-selects its
         # BATCH-LOCAL top-pool rows, so the global TakeOrdered runs
         # over ≤ pool·batches rows and only those rows' embeddings
         # ever cross the Arrow boundary.  The interpreted zip_with
@@ -4195,8 +3834,8 @@ def _kcenter_batched(embeddings: DataFrame, k: int = K_CENTERS,
 
 
 def _kcenter_running_dmin(picked_embs) -> Column:
-    """least(dist_to(p0), …, dist_to(pn)) — the scan form's running
-    dmin as one expression (fallback path of `_kcenter_batched`)."""
+    """least(dist_to(p0), …, dist_to(pn)) — the running dmin as one
+    expression (rescan path of `kcenter_coreset`)."""
     def dist_to(vec):
         lits = F.array(*[F.lit(float(v)) for v in vec])
         return F.round(_l2sq(F.col("embedding"), lits), 9)

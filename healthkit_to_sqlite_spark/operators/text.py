@@ -139,11 +139,12 @@ def bpe_ish_token_count(documents: DataFrame) -> DataFrame:
 
 
 def _bigram_partials_np(documents: DataFrame) -> DataFrame:
-    """Arrow twin of the in-row bigram build: one mapInPandas pass
-    tokenizes each doc (``text.split(" ")`` — a literal single-space
-    split, value-identical to Spark's ``split(text, ' ')`` incl.
-    empty-token runs) and emits PER-BATCH PARTIAL ``(bigram, n)``
-    counts via a Counter — Python-side map-side aggregation.  Exact
+    """Per-batch partial bigram counts for `ngram_counts`: one
+    mapInPandas pass tokenizes each doc (``text.split(" ")`` — a
+    literal single-space split, value-identical to Spark's
+    ``split(text, ' ')`` incl. empty-token runs) and emits PER-BATCH
+    PARTIAL ``(bigram, n)`` counts via a Counter — Python-side
+    map-side aggregation.  Exact
     integer counts, so any batch/partition boundary yields the same
     grand totals after the groupBy-SUM.  Replaces the interpreted
     ``transform``/``element_at`` HOF array build (CodegenFallback, one
@@ -179,37 +180,17 @@ def ngram_counts(documents: DataFrame, k: int = 20) -> DataFrame:
     contamination/memorization audit reads (token_counts is the n=1
     case).
 
-    The bigram build is in-row either way — no self-join of the token
-    long-form on position, which would shuffle the whole exploded
-    corpus twice.  Since r14 the default build rides
-    :func:`_bigram_partials_np` (``HK_NGRAM_KERNEL=expr`` keeps the
-    expression form selectable): the Arrow pass tokenizes and
-    Counter-aggregates per batch in C, so the Generate disappears and
-    the exchange carries per-batch partials instead of the full bigram
-    volume; the groupBy SUM of exact integer partials equals the
-    groupBy COUNT of exploded rows at any batch boundary.
-
-    The expression form builds the bigram array with builtin
-    higher-order functions (transform over a 1..n-1 sequence), then
-    explode → partial-aggregated groupBy → TakeOrdered, the same shape
-    as token_counts.  Its size-guard matters: Spark's ``sequence(1,
-    0)`` DESCENDS (yields [1,0]) rather than returning empty, so
-    1-token docs must shortcut to an empty array explicitly."""
-    if __import__("os").environ.get("HK_NGRAM_KERNEL", "np") == "np":
-        counted = (_bigram_partials_np(documents)
-                   .groupBy("bigram")
-                   .agg(F.sum("n").alias("n")))
-    else:
-        toks = ws_tokens("text")
-        idx = F.sequence(F.lit(1), F.size(toks) - 1)
-        bigram = lambda i: F.concat_ws(  # noqa: E731
-            " ", F.element_at(toks, i), F.element_at(toks, i + 1))
-        bigrams = F.when(F.size(toks) >= 2, F.transform(idx, bigram)) \
-            .otherwise(F.array().cast("array<string>"))
-        counted = (documents
-                   .select(F.explode(bigrams).alias("bigram"))
-                   .groupBy("bigram")
-                   .agg(F.count(F.lit(1)).alias("n")))
+    The bigram build is in-row — no self-join of the token long-form
+    on position, which would shuffle the whole exploded corpus twice.
+    Since r14 it rides :func:`_bigram_partials_np`: the Arrow pass
+    tokenizes and Counter-aggregates per batch in C, so the Generate
+    of the HOF expression form it replaced disappears and the
+    exchange carries per-batch partials instead of the full bigram
+    volume; the groupBy SUM of exact integer partials equals a COUNT
+    of exploded bigrams at any batch boundary."""
+    counted = (_bigram_partials_np(documents)
+               .groupBy("bigram")
+               .agg(F.sum("n").alias("n")))
     return counted.orderBy(F.col("n").desc(), "bigram").limit(k)
 
 
@@ -257,15 +238,15 @@ WINNOW_W = 4   # winnowing window (guarantee: any ≥ w+k-1-token match
 
 
 def _winnow_grams_np(documents: DataFrame, k: int) -> DataFrame:
-    """Arrow twin of the winnowing gram build: one mapInPandas pass
-    tokenizes (``text.split(" ")`` with empties dropped — equal to the
-    expression form's ``filter(split(text, ' '), x -> x != '')``),
-    slides the k-token window and md5-hashes each gram in Python —
-    emitting exactly the (doc_id, n_grams, pos, h) rows of the
-    posexplode form.  Every quantity is integer arithmetic (hashlib
-    md5 == Spark md5 over the same UTF-8 bytes, top-8 hex parse), so
-    the rows are value-identical; the interpreted ``transform`` gram
-    lambda and its per-gram md5/conv expression tree are gone.
+    """The winnowing gram build: one mapInPandas pass tokenizes
+    (``text.split(" ")`` with empties dropped — the oracle's
+    ``list_filter(string_split(text, ' '), x -> x <> '')``), slides
+    the k-token window and md5-hashes each gram in Python, emitting
+    the (doc_id, n_grams, pos, h) gram rows.  Every quantity is
+    integer arithmetic (hashlib md5 == Spark md5 == DuckDB md5 over
+    the same UTF-8 bytes, top-8 hex parse); the interpreted
+    ``transform`` gram lambda and per-gram md5/conv expression tree of
+    the posexplode form it replaced in r14 are gone.
     Map-only — the per-doc window pass downstream still provides the
     one (doc_id) exchange.  Closure-complete (stdlib + pandas only)."""
     src = documents.select("doc_id", "text")
@@ -321,31 +302,11 @@ def _winnow_select(documents: DataFrame, k: int = WINNOW_K,
     on ties, full windows only.  Shared by the per-doc report
     (`winnowing_fingerprints`) and the pair miner (`winnowing_pairs`).
 
-    The gram build default-rides :func:`_winnow_grams_np` since r14
-    (``HK_WINNOW_KERNEL=expr`` keeps the posexplode form selectable);
-    the window selection stays a JVM windowed aggregate either way."""
+    The gram build rides :func:`_winnow_grams_np`; the window
+    selection is a JVM windowed aggregate."""
     from pyspark.sql import Window
 
-    if __import__("os").environ.get("HK_WINNOW_KERNEL", "np") == "np":
-        hashed = _winnow_grams_np(documents, k)
-    else:
-        toked = (documents
-                 .select("doc_id",
-                         F.filter(ws_tokens("text"),
-                                  lambda x: x != "").alias("toks"))
-                 .filter(F.size("toks") >= k))
-        gram_terms = ", ".join(f"toks[i + {j}]" for j in range(k))
-        gram_expr = F.expr(
-            f"transform(sequence(0, size(toks) - {k}), "
-            f"i -> concat_ws(' ', {gram_terms}))")
-        grams = (toked
-                 .select("doc_id", (F.size("toks") - F.lit(k - 1))
-                         .cast("bigint").alias("n_grams"),
-                         F.posexplode(gram_expr).alias("pos", "gram")))
-        h = F.conv(F.substring(
-            F.md5(F.concat(F.lit("winnow:"), F.col("gram"))), 1, 8),
-            16, 10).cast("bigint")
-        hashed = grams.select("doc_id", "n_grams", "pos", h.alias("h"))
+    hashed = _winnow_grams_np(documents, k)
     frame = (Window.partitionBy("doc_id").orderBy("pos")
              .rowsBetween(Window.currentRow, w - 1))
     sel = F.min(F.struct(F.col("h"), (-F.col("pos")).alias("np"))) \
@@ -372,8 +333,8 @@ def winnowing_fingerprints(documents: DataFrame, k: int = WINNOW_K,
     mining, complementing `fingerprints` (whole-doc identity) and
     MinHash (set resemblance).
 
-    Plan shape: in-row gram construction (transform over an index
-    sequence — no token self-join), one hash per gram, and the
+    Plan shape: in-row gram construction (one Arrow pass — no token
+    self-join), one hash per gram, and the
     window pass is a per-doc ROWS BETWEEN frame computing
     ``min(struct(h, -pos))`` — min hash with rightmost tie-break in
     ONE windowed aggregate, no per-window join.  Everything after the
@@ -1195,52 +1156,6 @@ SUFFIX_RANGE_PARTS = 16  # range partitions for the distributed rank
 #   per round are ≤ this many rows)
 
 
-def _global_key_ranks(keys: DataFrame, cols: list[str],
-                      parts: int = SUFFIX_RANGE_PARTS) -> DataFrame:
-    """Global DENSE rank of DISTINCT key tuples — and the plain RANK
-    each tuple carries over the full row multiset (via the ``cnt``
-    weight column) — WITHOUT a single-partition window: range-
-    partition the distinct tuples, rank locally per partition, then
-    add per-partition offsets computed from a ≤ ``parts``-row collect
-    (the q_global_shuffle discipline: no global sort ever has one
-    reducer).  Distinct keys mean the range partitioner can never
-    split a tie group across a boundary, so local ranks + offsets
-    compose exactly.  Returns ``cols + [dense, rank]``.
-
-    Since r14 (continuation) the suffix machinery's default path is
-    :func:`_ranked_multiset_np`, which ranks the full multiset in
-    place; this distinct-set form remains the independent reference —
-    property-tested in test_rank_properties and selectable end-to-end
-    via ``HK_SUFFIX_KERNEL=join``."""
-    from pyspark.sql import Window
-
-    d = (keys.repartitionByRange(parts, *cols)
-         .select("*", F.spark_partition_id().alias("pid")))
-    w = (Window.partitionBy("pid").orderBy(*cols)
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    d = d.select("*", F.row_number().over(
-        Window.partitionBy("pid").orderBy(*cols)).alias("lpos"),
-        F.sum("cnt").over(w).alias("lcum")).localCheckpoint(eager=True)
-    tot = sorted(d.groupBy("pid").agg(
-        F.max("lpos").alias("nkeys"),
-        F.sum("cnt").alias("nrows")).collect(),
-        key=lambda r: r.pid)                      # ≤ parts rows
-    key_off, row_off, ks, rs = {}, {}, 0, 0
-    for r in tot:
-        key_off[r.pid], row_off[r.pid] = ks, rs
-        ks, rs = ks + r.nkeys, rs + int(r.nrows)
-    koff = F.coalesce(*[F.when(F.col("pid") == p, F.lit(v))
-                        for p, v in key_off.items()], F.lit(0)) \
-        if key_off else F.lit(0)
-    roff = F.coalesce(*[F.when(F.col("pid") == p, F.lit(v))
-                        for p, v in row_off.items()], F.lit(0)) \
-        if row_off else F.lit(0)
-    return d.select(*cols,
-                    (F.col("lpos") + koff).cast("bigint").alias("dense"),
-                    (F.lit(1) + (F.col("lcum") - F.col("cnt")) + roff)
-                    .cast("bigint").alias("rank"))
-
-
 def _ranked_multiset_np(rows: DataFrame, cols: list[str],
                         parts: int = SUFFIX_RANGE_PARTS) -> DataFrame:
     """Global (dense, rank) of EVERY row of the full key multiset —
@@ -1257,12 +1172,12 @@ def _ranked_multiset_np(rows: DataFrame, cols: list[str],
     global values exactly (the q_global_shuffle discipline: no global
     order through one reducer).  ``dense`` = 1-based dense rank of the
     row's key among all distinct keys; ``rank`` = the plain RANK over
-    the full multiset (1 + #rows strictly less) — definitionally what
-    :func:`_global_key_ranks` + a key join-back produced, without
-    shuffling the distinct set three times or the multiset through a
-    join.  Counter state carries across Arrow batches within a task,
-    so any batch boundary yields identical values (pinned in
-    test_text).  Closure-complete (stdlib + numpy/pandas only)."""
+    the full multiset (1 + #rows strictly less) — what the r13
+    distinct-set ranking + key join-back produced, without shuffling
+    the distinct set three times or the multiset through a join.
+    Counter state carries across Arrow batches within a task, so any
+    batch boundary yields identical values (pinned in test_text).
+    Closure-complete (stdlib + numpy/pandas only)."""
     d = _ranked_multiset_np_local(rows, cols, parts).localCheckpoint(
         eager=True)
     tot = sorted(d.groupBy("pid").agg(
@@ -1290,7 +1205,7 @@ def _ranked_multiset_np_local(rows: DataFrame, cols: list[str],
     exchange + in-partition sort + the Arrow adjacency pass emitting
     LOCAL (ldense, lrank) counters.  Split out so the per-round plan
     (which the eager checkpoint hides from the composed explain) can
-    be captured as evidence (plans/r14)."""
+    be explained on its own."""
     d = (rows.repartitionByRange(parts, *cols)
          .sortWithinPartitions(*cols)
          .select("doc_id", "pos", *cols,
@@ -1368,15 +1283,14 @@ def suffix_ranks(documents: DataFrame, w: int = SUFFIX_W,
     r9-r13 ran (and its full-set join-back) was pure redundancy.
 
     Since r14 (continuation) each ranking round runs through
-    :func:`_ranked_multiset_np` by default (``HK_SUFFIX_KERNEL=join``
-    keeps the r13 form selectable): the FULL paired set — (doc_id,
-    pos) riding along — range-partitions by (r, r2) once, sorts
-    within partitions, and one Arrow adjacency pass plus the
-    ≤ ``parts``-row offsets collect assigns every row its global
-    (dense, rank) in place.  The r13 form instead distinct-aggregated
-    the pairs, ranked the distinct set through
-    :func:`_global_key_ranks` (its own range + pid exchanges and two
-    windows), and hash-joined the ranks back onto the full set — per
+    :func:`_ranked_multiset_np`: the FULL paired set — (doc_id, pos)
+    riding along — range-partitions by (r, r2) once, sorts within
+    partitions, and one Arrow adjacency pass plus the ≤ ``parts``-row
+    offsets collect assigns every row its global (dense, rank) in
+    place.  The r13 form instead distinct-aggregated the pairs,
+    ranked the distinct set through a range-partitioned window rank
+    (its own range + pid exchanges and two windows), and hash-joined
+    the ranks back onto the full set — per
     round that is one distinct aggregation, three distinct-set
     exchanges, one full-set join-back exchange, and two windows that
     the kernel form simply does not have; the kernel keeps exactly two
@@ -1403,16 +1317,14 @@ def suffix_ranks(documents: DataFrame, w: int = SUFFIX_W,
     slope 1.56) for the round fusion above — w=8 runs 3 ranking
     rounds instead of 5, with 6 full-suffix-set exchanges instead of
     8 and 3 offset collects instead of 5.  The round's pairing
-    fragment reads corpus-broadcast + BHJ before vs one doc_id
-    exchange + window after
-    (plans/r14/suffix_round_fragment_*.txt; the full explain hides
-    the per-round plans behind their localCheckpoints).
+    fragment read corpus-broadcast + BHJ before vs one doc_id
+    exchange + window after (explain one round's fragment directly:
+    the full explain hides the per-round plans behind their
+    localCheckpoints).
 
-    Per round the DISTINCT rank-pair set (≤ suffix count, typically
-    shrinking) still shuffles through the range-partitioned rank plus
-    one (r, r2)-keyed join back; the oracle sorts the materialized
-    w-token prefixes directly, so the hash gate proves the integer
-    recursion equals true lexicographic ranking."""
+    The oracle sorts the materialized w-token prefixes directly, so
+    the hash gate proves the integer recursion equals true
+    lexicographic ranking."""
     from pyspark.sql import Window
     if w < 1 or (w & (w - 1)) != 0:
         # the doubling loop reaches exactly the powers of two; a
@@ -1420,61 +1332,31 @@ def suffix_ranks(documents: DataFrame, w: int = SUFFIX_W,
         # the oracle compares exactly w tokens — fail loud instead of
         # diverging (review finding)
         raise ValueError(f"comparison depth w={w} must be a power of 2")
-    np_kernel = __import__("os").environ.get(
-        "HK_SUFFIX_KERNEL", "np") == "np"
     toks = documents.select(
         "doc_id", F.posexplode(ws_tokens("text")).alias("pos", "token"))
-    doc_w = Window.partitionBy("doc_id").orderBy("pos")
     if w == 1:
-        if np_kernel:
-            return (_ranked_multiset_np(
-                toks.select("doc_id", "pos", F.col("token").alias("r")),
-                ["r"], parts)
-                .select("doc_id", "pos", F.col("rank").alias("srank")))
-        kr = _global_key_ranks(
-            toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt")),
-            ["token"], parts)
-        return (toks.join(kr.select("token", "rank"), "token")
-                .select("doc_id", "pos", F.col("rank").alias("srank")))
+        return (_ranked_multiset_np(
+            toks.select("doc_id", "pos", F.col("token").alias("r")),
+            ["r"], parts)
+            .select("doc_id", "pos", F.col("rank").alias("srank")))
+    doc_w = Window.partitionBy("doc_id").orderBy("pos")
     paired = toks.select(
         "doc_id", "pos", F.col("token").alias("r"),
         F.coalesce(F.lead("token", 1).over(doc_w), F.lit("")).alias("r2"))
-    if not np_kernel:
-        paired = paired.localCheckpoint(eager=True)
     width = 2
     while True:
-        if np_kernel:
-            # one range exchange of the full paired set + Arrow
-            # adjacency counters; _ranked_multiset_np checkpoints its
-            # own output, so the per-round lineage stays one deep with
-            # no explicit checkpoint here
-            ranked = _ranked_multiset_np(paired, ["r", "r2"], parts)
-            if width >= w:
-                return ranked.select(
-                    "doc_id", "pos", F.col("rank").alias("srank"))
-            paired = (ranked
-                      .select("doc_id", "pos", F.col("dense").alias("r"))
-                      .select("doc_id", "pos", "r",
-                              F.coalesce(F.lead("r", width).over(doc_w),
-                                         F.lit(0)).alias("r2")))
-            width *= 2
-            continue
-        kr = _global_key_ranks(
-            paired.groupBy("r", "r2").agg(F.count(F.lit(1)).alias("cnt")),
-            ["r", "r2"], parts)
+        # one range exchange of the full paired set + Arrow adjacency
+        # counters; _ranked_multiset_np checkpoints its own output, so
+        # the per-round lineage stays one deep with no explicit
+        # checkpoint here
+        ranked = _ranked_multiset_np(paired, ["r", "r2"], parts)
         if width >= w:
-            return (paired.join(
-                kr.select("r", "r2", F.col("rank").alias("srank")),
-                ["r", "r2"])
-                .select("doc_id", "pos", "srank"))
-        paired = (paired.join(
-            kr.select("r", "r2", F.col("dense").alias("nr")),
-            ["r", "r2"])
-            .select("doc_id", "pos", F.col("nr").alias("r"))
-            .select("doc_id", "pos", "r",
-                    F.coalesce(F.lead("r", width).over(doc_w),
-                               F.lit(0)).alias("r2"))
-            .localCheckpoint(eager=True))
+            return ranked.select("doc_id", "pos", F.col("rank").alias("srank"))
+        paired = (ranked
+                  .select("doc_id", "pos", F.col("dense").alias("r"))
+                  .select("doc_id", "pos", "r",
+                          F.coalesce(F.lead("r", width).over(doc_w),
+                                     F.lit(0)).alias("r2")))
         width *= 2
 
 
@@ -1740,8 +1622,8 @@ RARE_TRI_MIN_DF = 5  # trigram seen in fewer docs than this is "rare"
 
 
 def _rare_tri_perdoc_np(documents: DataFrame) -> DataFrame:
-    """Arrow twin of the distinct (doc, trigram) build: Spark computes
-    ``lower(text)`` ONCE per doc (engine lowercase semantics — no
+    """The distinct (doc, trigram) build of `rare_trigram_rate`: Spark
+    computes ``lower(text)`` ONCE per doc (engine lowercase semantics — no
     Python ``str.lower`` whose Unicode case map could diverge), then
     one mapInPandas pass slices the pre-lowered string into its
     DISTINCT character trigrams in Python — a set of 3-code-point
@@ -1804,30 +1686,11 @@ def rare_trigram_rate(documents: DataFrame,
     per-doc scoring pass share ONE materialization — at cluster scale
     this intermediate is the persisted corpus artifact itself.
 
-    Since r14 the distinct build default-rides
-    :func:`_rare_tri_perdoc_np` (``HK_TRI_KERNEL=expr`` keeps the
-    positional-explode form selectable): the Arrow pass emits the
-    per-doc distinct set map-only, deleting the Generate and the
-    (doc_id, tri) exchange — measured 3.87 → 1.50 s median at sf0.1,
-    value-identity pinned across kernels in test_text."""
-    if __import__("os").environ.get("HK_TRI_KERNEL", "np") == "np":
-        per_doc = _rare_tri_perdoc_np(documents).localCheckpoint()
-    else:
-        base = (documents
-                .select("doc_id", F.lower(F.col("text")).alias("t"))
-                .filter(F.length("t") >= 3))
-        per_doc = (base
-                   .select("doc_id", "t",
-                           F.explode(F.sequence(F.lit(1),
-                                                F.length("t") - 2))
-                           .alias("i"))
-                   .select("doc_id",
-                           F.col("t").substr(F.col("i"),
-                                             F.lit(3)).alias("tri"))
-                   .groupBy("doc_id", "tri")
-                   .agg(F.count(F.lit(1)).alias("_n"))
-                   .select("doc_id", "tri")
-                   .localCheckpoint())
+    Since r14 the distinct build rides :func:`_rare_tri_perdoc_np`:
+    the Arrow pass emits the per-doc distinct set map-only, deleting
+    that positional explode's Generate and its (doc_id, tri) exchange
+    — measured 3.87 → 1.50 s median at sf0.1."""
+    per_doc = _rare_tri_perdoc_np(documents).localCheckpoint()
     df_counts = (per_doc.groupBy("tri")
                  .agg(F.count(F.lit(1)).alias("df")))
     return (per_doc
@@ -2576,43 +2439,19 @@ def bpe_apply(documents: DataFrame,
     semantics to training's apply step, including the odd-self-run
     straggler behavior (``aaa`` under merge (a,a) → ``aa a``).
 
-    Default-rides :func:`_bpe_apply_np` since r14
-    (``HK_BPE_KERNEL=expr`` keeps the expression form selectable): the
-    expression form runs the |merges|-deep replace chain once per word
-    OCCURRENCE; the Arrow pass memoizes the piece count per DISTINCT
-    word (Zipf makes the hit rate high) and folds per-doc totals
-    map-only — the word explode and the groupBy(doc_id) exchange
-    disappear."""
-    if __import__("os").environ.get("HK_BPE_KERNEL", "np") == "np":
-        return _bpe_apply_np(documents, merge_list)
-    words = (documents.select("doc_id",
-                              F.explode(ws_tokens("text")).alias("word"))
-             .filter(F.col("word") != ""))
-    s = F.concat(F.lit(" "), F.regexp_replace("word", "(.)", "$1 "))
-    for lhs, rhs in merge_list:
-        s = F.replace(s, F.lit(f" {lhs} {rhs} "),
-                      F.lit(f" {lhs}{rhs} "))
-    return (words.select("doc_id",
-                         F.size(F.split(F.trim(s), " ")).alias("np"))
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_words"),
-                 F.sum("np").cast("bigint").alias("n_pieces")))
-
-
-def _bpe_apply_np(documents: DataFrame,
-                  merge_list: list[tuple[str, str]]) -> DataFrame:
-    """Arrow twin of the BPE encode rollup: per doc, tokenize
-    (``text.split(" ")`` with empties dropped == the explode+filter)
-    and count pieces per word via the SAME rank-ordered
-    non-overlapping replace chain — Python ``str.replace`` ==
-    Spark ``replace`` (literal, left-to-right, non-overlapping), the
-    char expansion ``re.sub("(.)", "\\1 ", w)`` == Spark
-    ``regexp_replace(word, '(.)', '$1 ')`` (both engines' ``.``
-    excludes newline and matches one code point).  The piece count
-    memoizes per DISTINCT word across the whole task, so the
-    |merges|-deep chain runs once per vocabulary entry instead of
-    once per occurrence.  Integer counts only — no IEEE story.
-    Map-only: each doc's (n_words, n_pieces) row leaves on its own
+    One mapInPandas pass since r14: per doc, tokenize (``text.split(
+    " ")`` with empties dropped) and count pieces per word via the
+    rank-ordered non-overlapping replace chain — Python
+    ``str.replace`` == Spark ``replace`` (literal, left-to-right,
+    non-overlapping), the char expansion ``re.sub("(.)", "\\1 ", w)``
+    == Spark ``regexp_replace(word, '(.)', '$1 ')`` (both engines'
+    ``.`` excludes line terminators and matches one code point).  The
+    piece count memoizes per DISTINCT word across the whole task
+    (Zipf makes the hit rate high), so the |merges|-deep chain runs
+    once per vocabulary entry instead of once per word OCCURRENCE as
+    in the expression form it replaced.  Integer counts only.
+    Map-only: the word explode and the groupBy(doc_id) exchange are
+    gone; each doc's (n_words, n_pieces) row leaves on its own
     partition.  Closure-complete (stdlib + pandas only)."""
     src = documents.select("doc_id", "text")
     dt = src.schema["doc_id"].dataType.simpleString()

@@ -206,29 +206,27 @@ def _chunk_records(export_xml: str, out_dir: str,
     return chunk_dir if idx > 1 else None
 
 
-def stage_zip(zip_path: str, staging_dir: str,
-              split_rare: bool = True) -> StagedExport:
+def stage_zip(zip_path: str, staging_dir: str) -> StagedExport:
     """A1: unpack export.zip to a staging directory (driver-side; the
     zip format is not splittable).  Mirrors reference core.rs:48-56 but
     once, up front — the reference re-opens the archive per route file
-    (core.rs:580-582).  With ``split_rare`` the staging pass also
-    carves the rare element classes into side files (see
-    _split_rare_classes)."""
+    (core.rs:580-582).  The staging pass also carves the rare element
+    classes into side files (see _split_rare_classes) and re-chunks
+    the Records at element boundaries (see _chunk_records)."""
     with zipfile.ZipFile(zip_path) as zf:
         safe = [n for n in zf.namelist()
                 if not (n.startswith("/") or ".." in n.split("/"))]
         zf.extractall(staging_dir, members=safe)
     root = os.path.join(staging_dir, ARCHIVE_ROOT)
     export_xml = os.path.join(staging_dir, EXPORT_XML)
-    side = _split_rare_classes(export_xml, staging_dir) if split_rare else {}
+    side = _split_rare_classes(export_xml, staging_dir)
     return StagedExport(
         root=root,
         export_xml=export_xml,
         routes_dir=os.path.join(root, "workout-routes"),
         workouts_xml=side.get("Workout"),
         summaries_xml=side.get("ActivitySummary"),
-        records_dir=_chunk_records(export_xml, staging_dir)
-        if split_rare else None)
+        records_dir=_chunk_records(export_xml, staging_dir))
 
 
 def _strip_attr_prefix(df: DataFrame) -> DataFrame:
@@ -311,7 +309,7 @@ def read_records(spark: SparkSession, xml_path: str) -> DataFrame:
     """All <Record> rows, metadata flattened, with their ``type``
     discriminator (table name in the reference, core.rs:311-313).
     Columns stay raw strings here; typing happens per type-table in
-    ``record_tables`` (per-table schemas, core.rs:216-227)."""
+    ``record_tables_onepass`` (per-table schemas, core.rs:216-227)."""
     return flatten_metadata(read_element(spark, xml_path, "Record"))
 
 
@@ -476,31 +474,14 @@ def _struct_fields(df: DataFrame, col: str) -> set[str]:
     return {f.name for f in dt.fields} if isinstance(dt, T.StructType) else set()
 
 
-def record_tables(records: DataFrame,
-                  types: list[str] | None = None) -> dict[str, DataFrame]:
-    """A4: table-per-Record-type fan-out (core.rs:311-313, 656-685).
-    Returns {type: DataFrame} with all-null columns pruned per type
-    (the reference's per-table column sets).  The distinct-type collect
-    is bounded (~100s of HK types)."""
-    from ..operators.schema_infer import apply_inferred_types
-
-    if types is None:
-        types = [r[0] for r in
-                 records.select("type").distinct().orderBy("type").collect()]
-    return {t: apply_inferred_types(records.filter(F.col("type") == t),
-                                    drop_all_null=True)
-            for t in types}
-
-
 def record_tables_onepass(records: DataFrame) -> dict[str, DataFrame]:
     """A4 fan-out with schema votes for ALL types in ONE aggregate:
     ``groupBy(type)`` computing every column's unified tag + non-null
     count simultaneously (one scan, partial-aggregated map-side),
-    instead of one inference pass per type (``record_tables`` — N
-    extra scans for N types).  Same per-table schemas, same all-null
-    column pruning; the collect is bounded at one row per HK type
-    (~100s).  This is the scan-count winner whenever the staged
-    relation is large and types are many."""
+    instead of one inference pass per type (N extra scans for N
+    types).  All-null columns are pruned per type (the reference's
+    per-table column sets); the collect is bounded at one row per HK
+    type (~100s)."""
     from ..operators.schema_infer import cast_to_tag, type_tag, unify_tags
 
     str_cols = [f.name for f in records.schema.fields
@@ -534,32 +515,33 @@ def record_tables_onepass(records: DataFrame) -> dict[str, DataFrame]:
     return out
 
 
-def convert(spark: SparkSession, zip_path: str, staging_dir: str,
-            stage_columnar: bool = True,
-            parallel: bool = True) -> dict[str, DataFrame]:
+def convert(spark: SparkSession, zip_path: str,
+            staging_dir: str) -> dict[str, DataFrame]:
     """E1 end-to-end (reference main.rs:88 → core.rs:42-76): stage the
     zip, read all element classes, synthesize nested columns, and
     return the logical table catalog {table_name: DataFrame} — the
     Spark analog of the converted SQLite database.
 
-    ``stage_columnar``: materialize the parsed Record relation to
-    staging parquet before the table-per-type fan-out.  The fan-out
-    makes one type-discovery pass plus two passes per type (schema
-    vote + output); without staging each pass re-parses the XML —
-    columnar staging turns them into pruned parquet scans.  Exactly
-    the reference's two-pass design rationale (core.rs:52-73), except
-    pass 1 leaves behind a columnar artifact instead of being pure
-    overhead.
+    The parsed Record relation is materialized to staging parquet
+    before the table-per-type fan-out.  The fan-out makes a schema
+    vote pass plus one output pass per type; without staging each
+    pass re-parses the XML — columnar staging turns them into pruned
+    parquet scans.  Exactly the reference's two-pass design rationale
+    (core.rs:52-73), except pass 1 leaves behind a columnar artifact
+    instead of being pure overhead (SCALE.md: the load-bearing
+    choice).
 
-    ``parallel``: the three element-class pipelines (workouts+routes /
-    summaries / records) are independent, but each fires several small
-    BLOCKING driver jobs (XML structure discovery, metadata key
-    census, schema votes) whose fixed latency — not data volume —
-    dominates the rare classes.  Running them on three threads lets
-    the Spark scheduler interleave those jobs instead of serializing
-    ~6 back-to-back round-trips (same-JVM A/B at 400k records incl.
-    forcing all 6 tables: 7.5→3.7s first run, 4.7→2.8s repeat;
-    identical outputs — threads only submit jobs)."""
+    The three element-class pipelines (workouts+routes / summaries /
+    records) are independent, but each fires several small BLOCKING
+    driver jobs (XML structure discovery, metadata key census, schema
+    votes) whose fixed latency — not data volume — dominates the rare
+    classes.  They run on three threads so the Spark scheduler
+    interleaves those jobs instead of serializing ~6 back-to-back
+    round-trips (same-JVM A/B at 400k records incl. forcing all 6
+    tables: 7.5→3.7s first run, 4.7→2.8s repeat; identical outputs —
+    threads only submit jobs)."""
+    from concurrent.futures import ThreadPoolExecutor
+
     staged = stage_zip(zip_path, staging_dir)
 
     # rare classes read from their small side files (a rowTag read
@@ -577,29 +559,19 @@ def convert(spark: SparkSession, zip_path: str, staging_dir: str,
     # per chunk (a single export.xml would parse on one task)
     def _record_tables() -> dict[str, DataFrame]:
         records = read_records(spark, staged.records_dir or staged.export_xml)
-        if stage_columnar:
-            # NB: no leading underscore — Spark's file index hides _* paths
-            staged_records = os.path.join(staging_dir, "records-staged.parquet")
-            records.write.mode("overwrite").parquet(staged_records)
-            staged_df = spark.read.parquet(staged_records)
-        else:
-            staged_df = records
-        return record_tables_onepass(staged_df)
+        # NB: no leading underscore — Spark's file index hides _* paths
+        staged_records = os.path.join(staging_dir, "records-staged.parquet")
+        records.write.mode("overwrite").parquet(staged_records)
+        return record_tables_onepass(spark.read.parquet(staged_records))
 
     out: dict[str, DataFrame] = {}
-    if parallel:
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=3) as ex:
-            fw = ex.submit(_workouts)
-            fs = ex.submit(_summaries)
-            fr = ex.submit(_record_tables)
-            out["Workout"] = fw.result()
-            out["ActivitySummary"] = fs.result()
-            out.update(fr.result())
-    else:
-        out["Workout"] = _workouts()
-        out["ActivitySummary"] = _summaries()
-        out.update(_record_tables())
+    with ThreadPoolExecutor(max_workers=3) as ex:
+        fw = ex.submit(_workouts)
+        fs = ex.submit(_summaries)
+        fr = ex.submit(_record_tables)
+        out["Workout"] = fw.result()
+        out["ActivitySummary"] = fs.result()
+        out.update(fr.result())
     return out
 
 

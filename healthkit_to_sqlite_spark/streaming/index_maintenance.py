@@ -34,8 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.similarity import (_assign_cells, _assign_sub,
-                                    _codes_wide, _pq_subspaces)
+from ..operators.similarity import _assign_cells, _codes_np
 from ..sinks.manifest import ManifestTable
 
 
@@ -43,19 +42,14 @@ def encode_vectors(vecs: DataFrame, cent: DataFrame,
                    book: DataFrame) -> DataFrame:
     """(vec_id, embedding) → (vec_id, cell, code0..code{m-1}) using
     the FROZEN coarse centroids and residual codebook — the same
-    assignment kernels training uses for its final pass, so streamed
-    encodings are bit-identical to a batch re-encode."""
-    cells = _assign_cells(vecs, cent)
-    res = (vecs.select("vec_id", "embedding")
-           .join(cells, "vec_id")
-           .join(F.broadcast(cent), F.col("cell") == F.col("cid"))
-           .select("vec_id",
-                   F.zip_with("embedding", "cemb",
-                              lambda x, c: x.cast("double") - c)
-                   .alias("embedding")))
-    staged = (res.select("vec_id", F.explode(_pq_subspaces()).alias("s"))
-              .select("vec_id", "s.j", "s.sub"))
-    return cells.join(_codes_wide(_assign_sub(staged, book)), "vec_id")
+    kernels the residual-IVFPQ build uses (`_assign_cells` emitting the
+    residual next to its argmin, then the wide `_codes_np` pass), so
+    streamed encodings are bit-identical to a batch re-encode."""
+    assigned = _assign_cells(vecs, cent, keep_residual=True)
+    codes = _codes_np(
+        assigned.select("vec_id", F.col("residual").alias("embedding")),
+        book)
+    return assigned.select("vec_id", "cell").join(codes, "vec_id")
 
 
 def index_append_writer(spark: SparkSession, table: ManifestTable,

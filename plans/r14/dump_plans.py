@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Dump .explain("formatted") for named contract queries to
-plans/r14/<query>_<suffix>.txt — the judge-facing before/after plan
-evidence for OPTIMIZATION_r14.md.  Usage:
+.plans/<query>_<suffix>.txt at the repo root (git-ignored — plan dumps
+are regenerated on demand, never committed), e.g. the before/after
+plan evidence OPTIMIZATION_r14.md / _r15.md cite.  Usage:
 
     python plans/r14/dump_plans.py <suffix> q_a q_b ...
 
@@ -14,8 +15,9 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                "..", ".."))
+REPO = os.path.normpath(os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "..", ".."))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
@@ -29,7 +31,8 @@ def main() -> None:
 
     spark = get_spark("dump_plans", cpus=cpus, shuffle_partitions=cpus)
     qs = queries()
-    out_dir = os.path.dirname(os.path.abspath(__file__))
+    out_dir = os.path.join(REPO, ".plans")
+    os.makedirs(out_dir, exist_ok=True)
     for n in names:
         if n not in qs:
             print(f"SKIP {n}: not registered")
@@ -40,9 +43,7 @@ def main() -> None:
             df.explain(mode="formatted")
         path = os.path.join(out_dir, f"{n}_{suffix}.txt")
         with open(path, "w") as fh:
-            fh.write(f"# {n} — explain(formatted), "
-                     f"HK_ASSIGN_KERNEL={os.environ.get('HK_ASSIGN_KERNEL', '(default)')}, "
-                     f"sf_dir={sf_dir}\n")
+            fh.write(f"# {n} — explain(formatted), sf_dir={sf_dir}\n")
             fh.write(buf.getvalue())
         print(f"WROTE {path}")
     spark.stop()

@@ -312,7 +312,7 @@ def test_catalog_replace_overwrites_one_table_only(spark, cat):
 
 
 def test_ingest_fanout_atomic_publish(spark, hk_zip, tmp_path):
-    """The real A4 composition: archive → record_tables fan-out →
+    """The real A4 composition: archive → record_tables_onepass fan-out →
     write_tables_atomic = one commit for the whole per-type table
     set."""
     from healthkit_to_sqlite_spark.sinks.database import write_tables_atomic

@@ -612,9 +612,7 @@ def test_bpe_encode_serve_plan_is_map_only(spark, specs):
     plan must be ONE corpus scan → per-doc map — zero training (no
     argmax heaps, no per-round shuffles).  Since the r14 Arrow kernel
     the per-doc rollup happens inside the map pass, so even the
-    groupBy(doc_id) exchange is gone (the expression form's 1-shuffle
-    + folded-literal-replace shape stays pinned via HK_BPE_KERNEL in
-    test_batch_kernels' value-identity suite)."""
+    groupBy(doc_id) exchange is gone."""
     df = specs["q_bpe_encode"].build(spark, SF)
     plan = formatted_plan(df)
     assert shuffle_count(df) == 0
@@ -1061,11 +1059,10 @@ ALLOWED_BNLJ: frozenset = frozenset({
     "q_embed_covariance",
     # ≤K-row centroid table broadcast (probe-side nearest-centroid
     # joins in serve/probe shapes; K is corpus-derived).  The r14
-    # assignment-kernel flip (HK_ASSIGN_KERNEL default np) removed the
-    # TRAINER-side nested loops outright — q_dedup_semantic,
-    # q_ivf_postings and q_proto_prune left this list because their
-    # only BNLJ came from the broadcast-join assignment, now a
-    # mapInPandas pass with no join at all
+    # Arrow assignment kernel removed the TRAINER-side nested loops
+    # outright — q_dedup_semantic, q_ivf_postings and q_proto_prune
+    # left this list because their only BNLJ came from the
+    # broadcast-join assignment, now a mapInPandas pass with no join
     "q_ann_ivf", "q_ann_ivfpq", "q_ann_ivfpq_residual",
     "q_ann_index_append", "q_ann_retrain", "q_ann_forget",
     "q_ann_dv_rewrite",

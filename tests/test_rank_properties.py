@@ -1,6 +1,6 @@
 """Property-based tests for the round-9 distributed-ordering kernels.
 
-`_global_key_ranks` (the range-partitioned rank behind the suffix
+`_ranked_multiset_np` (the range-partitioned rank behind the suffix
 ranking) and `_prune_top_m` (the ordered-merge kernel behind every
 prune-on-append path) each carry an algebraic claim — ranks compose
 across partitions exactly; top-m is monotone under disjoint-key
@@ -31,21 +31,22 @@ def test_global_key_ranks_match_local_model(spark, pairs):
     plain RANK the key carries over the expanded multiset — for any
     key set, any multiplicities, any partition count (2 forces
     cross-partition composition on tiny inputs)."""
-    from healthkit_to_sqlite_spark.operators.text import _global_key_ranks
+    from healthkit_to_sqlite_spark.operators.text import _ranked_multiset_np
+
+    keys = [k for k, c in pairs for _ in range(c)]
+    rows = [(i, 0, k) for i, k in enumerate(keys)]
+    df = spark.createDataFrame(rows, "doc_id bigint, pos int, k int")
+    got = {(r.doc_id, r.dense, r.rank) for r in
+           _ranked_multiset_np(df, ["k"], parts=2).collect()}
 
     agg: dict[int, int] = {}
     for k, c in pairs:
         agg[k] = agg.get(k, 0) + c
-    keys = spark.createDataFrame(list(agg.items()), "k int, cnt int")
-    got = {r.k: (r.dense, r.rank) for r in
-           _global_key_ranks(keys, ["k"], parts=2).collect()}
-
-    ordered = sorted(agg)
-    want, running = {}, 0
-    for i, k in enumerate(ordered):
-        want[k] = (i + 1, running + 1)
+    want_by_key, running = {}, 0
+    for i, k in enumerate(sorted(agg)):
+        want_by_key[k] = (i + 1, running + 1)
         running += agg[k]
-    assert got == want
+    assert got == {(d, *want_by_key[k]) for d, _, k in rows}
 
 
 docs_strategy = st.lists(

@@ -1246,25 +1246,28 @@ def test_kcenter_matches_numpy_audit(spark, emb):
     assert got == expect
 
 
-def test_kcenter_batched_equals_scan_kernel(spark, emb, monkeypatch):
+#: kcenter_coreset on the sf0.001 embeddings as the per-round scan
+#: form (one running-dmin scan + argmax per pick) selected them
+KCENTER_SCAN_PICKS = [
+    (0, 0, None), (1, 310, 2.739397696), (2, 74, 2.345896416),
+    (3, 334, 2.176592715), (4, 357, 2.088379488), (5, 488, 2.017794718),
+    (6, 46, 1.971756671), (7, 174, 1.948062655),
+]
+
+
+def test_kcenter_batched_equals_scan_kernel(spark, emb):
     """r15 (VERDICT r14 item 5): the batched pool sweep must produce
     the EXACT per-round scan selection — including under a pool
     smaller than k, where every pick rides the verification rescan
     (the strict-domination guard, not the pool size, carries
     correctness)."""
     from healthkit_to_sqlite_spark.operators.similarity import (
-        _kcenter_batched,
-        kcenter_coreset,
-    )
+        kcenter_coreset)
 
-    monkeypatch.setenv("HK_KCENTER_KERNEL", "scan")
-    ref = sorted(map(tuple, kcenter_coreset(emb).collect()))
-    monkeypatch.delenv("HK_KCENTER_KERNEL", raising=False)
     got = sorted(map(tuple, kcenter_coreset(emb).collect()))
-    assert got == ref
-    tiny_pool = sorted(map(tuple,
-                           _kcenter_batched(emb, pool=3).collect()))
-    assert tiny_pool == ref
+    assert got == KCENTER_SCAN_PICKS
+    tiny_pool = sorted(map(tuple, kcenter_coreset(emb, pool=3).collect()))
+    assert tiny_pool == KCENTER_SCAN_PICKS
 
 
 def test_kcenter_radius_non_increasing(spark, emb):

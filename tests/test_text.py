@@ -1034,18 +1034,28 @@ def test_suffix_ranks_all_depths_match_python_reference(spark, w):
     assert got == want
 
 
+def _suffix_reference(texts, w):
+    """True depth-w lexicographic rank of every (doc, pos) suffix."""
+    suf = []
+    for d, t in texts.items():
+        toks = t.split(" ")
+        for p in range(len(toks)):
+            suf.append((tuple(toks[p:p + w]), d, p))
+    ordered = sorted(s[0] for s in suf)
+    return {(d, p): 1 + ordered.index(key) for key, d, p in suf}
+
+
 @pytest.mark.parametrize("w", [1, 2, 8])
-def test_suffix_kernels_value_identical(spark, monkeypatch, w):
+def test_suffix_kernels_value_identical(spark, w):
     """The r14 `_ranked_multiset_np` rank kernel (range-partition the
     FULL paired multiset, Arrow adjacency counters, offsets collect)
-    must equal the r13 `_global_key_ranks` + join-back form
-    rank-for-rank — at every structural depth regime AND across Arrow
-    batch boundaries: maxRecordsPerBatch=3 forces the kernel's
-    carried counters (prev key, nrows, ndense, grank) to cross
-    hundreds of batch edges, and parts=2 forces cross-partition
-    offset composition.  String keys (w≥2 base round ranks raw token
-    pairs incl. the '' sentinel) and bigint keys (later rounds) both
-    cross the boundary."""
+    must equal true lexicographic ranking rank-for-rank — at every
+    structural depth regime AND across Arrow batch boundaries:
+    maxRecordsPerBatch=3 forces the kernel's carried counters (prev
+    key, nrows, ndense, grank) to cross hundreds of batch edges, and
+    parts=2 forces cross-partition offset composition.  String keys
+    (w≥2 base round ranks raw token pairs incl. the '' sentinel) and
+    bigint keys (later rounds) both cross the boundary."""
     from healthkit_to_sqlite_spark.operators.text import suffix_ranks
 
     texts = {0: "b a c a b", 1: "a b", 2: "a", 3: "c a b a",
@@ -1057,47 +1067,65 @@ def test_suffix_kernels_value_identical(spark, monkeypatch, w):
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
     try:
-        monkeypatch.setenv("HK_SUFFIX_KERNEL", "join")
-        a = {(r.doc_id, r.pos): r.srank
-             for r in suffix_ranks(docs, w=w, parts=2).collect()}
-        monkeypatch.setenv("HK_SUFFIX_KERNEL", "np")
-        b = {(r.doc_id, r.pos): r.srank
-             for r in suffix_ranks(docs, w=w, parts=2).collect()}
+        got = {(r.doc_id, r.pos): r.srank
+               for r in suffix_ranks(docs, w=w, parts=2).collect()}
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    assert a == b
+    assert got == _suffix_reference(texts, w)
 
 
-def test_rare_trigram_kernels_value_identical(spark, monkeypatch):
+#: rare_trigram_rate as the positional-explode form emitted it: the
+#: edge set's rows, and the fixture's (row count, digest)
+TRI_EDGE = [
+    (0, 1, 1, 1.0), (2, 2, 2, 1.0), (3, 6, 6, 1.0), (4, 17, 17, 1.0),
+]
+TRI_FIXTURE = (500, "a03e8b7ba8d179ad")
+
+
+def test_rare_trigram_kernels_value_identical(spark):
     """The r14 Arrow distinct-trigram kernel == the positional-explode
-    expression form, row for row — on the fixture corpus AND on a
-    constructed edge set (doc shorter than 3 chars dropped, uppercase
-    folded by the ENGINE's lower() before the kernel, repeated
-    trigrams deduped, non-ASCII code points sliced at code-point
-    grain)."""
-    from healthkit_to_sqlite_spark.operators.text import rare_trigram_rate
+    expression form it replaced, row for row — on a constructed edge
+    set (doc shorter than 3 chars dropped, uppercase folded by the
+    ENGINE's lower() before the kernel, repeated trigrams deduped,
+    non-ASCII code points sliced at code-point grain) AND on the
+    fixture corpus."""
+    from tests.golden import digest
 
     edge = spark.createDataFrame(
         [(0, "aAaAa"), (1, "xy"), (2, "ababab"), (3, "héllo héllo"),
          (4, "the quick brown fox")],
         "doc_id bigint, text string")
+    got = sorted(map(tuple, rare_trigram_rate(edge).collect()), key=repr)
+    assert got == TRI_EDGE
+    assert 1 not in {r[0] for r in got}          # < 3 chars → no row
     fixture = load_table(spark, SF, "documents")
-    for docs in (edge, fixture):
-        monkeypatch.setenv("HK_TRI_KERNEL", "np")
-        got_np = sorted(map(tuple, rare_trigram_rate(docs).collect()))
-        monkeypatch.setenv("HK_TRI_KERNEL", "expr")
-        got_expr = sorted(map(tuple, rare_trigram_rate(docs).collect()))
-        assert got_np == got_expr and len(got_np) > 0
+    assert digest(rare_trigram_rate(fixture).collect()) == TRI_FIXTURE
 
 
-def test_ngram_kernels_value_identical(spark, monkeypatch):
+#: ngram_counts as the transform-HOF form emitted it (ordered rows)
+NGRAM_EDGE = [
+    ("a b", 2), ("b a", 2), ("héllo wörld", 2), (" b", 1), (" lead", 1),
+    ("a ", 1), ("trail ", 1), ("wörld héllo", 1),
+]
+NGRAM_FIXTURE = [
+    ("order fast", 51), ("order order", 47), ("agg part", 46),
+    ("data slow", 46), ("part filter", 46), ("scan a", 46),
+    ("stream column", 46), ("window join", 46), ("join column", 45),
+    ("line agg", 45), ("line group", 45), ("order scan", 45), ("batch a", 44),
+    ("big order", 44), ("data query", 44), ("group merge", 44),
+    ("order sort", 44), ("agg hash", 43), ("agg table", 43),
+    ("column line", 43),
+]
+
+
+def test_ngram_kernels_value_identical(spark):
     """The r14 Arrow bigram-partials kernel == the transform-HOF
-    expression form, row for row — on the fixture corpus AND on a
-    constructed edge set (1-token doc yields nothing, runs of spaces
-    yield empty tokens exactly like Spark's split, repeated bigrams
-    keep multiplicity, ties in n break by bigram asc).  k is raised
-    above the distinct-bigram count on the edge set so the WHOLE
-    aggregate is compared, not just the top slice."""
+    expression form it replaced, row for row — on a constructed edge
+    set (1-token doc yields nothing, runs of spaces yield empty tokens
+    exactly like Spark's split, repeated bigrams keep multiplicity,
+    ties in n break by bigram asc) AND on the fixture corpus.  k is
+    raised above the distinct-bigram count on the edge set so the
+    WHOLE aggregate is compared, not just the top slice."""
     from healthkit_to_sqlite_spark.operators.text import ngram_counts
 
     edge = spark.createDataFrame(
@@ -1105,12 +1133,10 @@ def test_ngram_kernels_value_identical(spark, monkeypatch):
          (4, "héllo wörld héllo wörld"), (5, " lead"), (6, "trail ")],
         "doc_id bigint, text string")
     fixture = load_table(spark, SF, "documents")
-    for docs, k in ((edge, 100), (fixture, 20)):
-        monkeypatch.setenv("HK_NGRAM_KERNEL", "np")
-        got_np = [tuple(r) for r in ngram_counts(docs, k=k).collect()]
-        monkeypatch.setenv("HK_NGRAM_KERNEL", "expr")
-        got_expr = [tuple(r) for r in ngram_counts(docs, k=k).collect()]
-        assert got_np == got_expr and len(got_np) > 0
+    for docs, k, want in ((edge, 100, NGRAM_EDGE),
+                          (fixture, 20, NGRAM_FIXTURE)):
+        got = [tuple(r) for r in ngram_counts(docs, k=k).collect()]
+        assert got == want
 
 
 def test_curriculum_order_is_interleaved_permutation(spark):
