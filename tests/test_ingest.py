@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import sqlite3
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -168,7 +169,7 @@ def test_cli_end_to_end(hk_zip, tmp_path):
     proc = subprocess.run(
         [_sys.executable, "-m", "healthkit_to_sqlite_spark",
          str(hk_zip), f"sqlite://{db}", "--drop", "--yes", "--quiet"],
-        cwd="/root/repo", capture_output=True, text=True, timeout=300)
+        cwd=Path(__file__).parents[1], capture_output=True, text=True, timeout=300)
     assert proc.returncode == 0, proc.stderr[-2000:]
     con = sqlite3.connect(db)
     tables = {r[0] for r in con.execute(
