@@ -14,7 +14,8 @@ implements the documented divergence (SURVEY.md §1.2, §4.4-2):
   an order-independent commutative lattice join, computed with one
   aggregate pass (max over tag rank) instead of a first() race.
 
-Used by sources/healthkit.py to type raw XML attribute strings.
+Used by sources/healthkit.py and streaming/ingest.py to type raw XML
+attribute strings; ``vote_column_types`` is the one schema vote both run.
 """
 
 from __future__ import annotations
@@ -126,34 +127,56 @@ def cast_to_tag(col: Column, tag: str) -> Column | None:
     return col.cast(target)
 
 
-def apply_inferred_types(df: DataFrame,
-                         cols: list[str] | None = None) -> DataFrame:
-    """Infer-and-cast string columns in ONE aggregate pass.
+def vote_column_types(df: DataFrame, cols: list[str], key: str | None = None
+                      ) -> dict[object, dict[str, tuple[str, int]]]:
+    """The pass-1 schema vote: every column's widening-unified tag and
+    non-null count, per value of ``key`` (or over the whole frame when
+    ``key`` is None), in ONE aggregate job.
 
-    Per column: widening-unified tag (INTEGER/REAL/DATE/TIMESTAMP/TEXT);
-    then cast each column to its tag's Spark type.  (Per-type all-null
-    column pruning — the reference never creates a column it never
-    saw, core.rs:216-227 — lives in `record_tables_onepass`.)
+    Returns ``{key value: {column: (tag, non-null count)}}``; the
+    ungrouped vote has the single key None.  The collect is bounded by
+    the key's cardinality (one row per HealthKit type, ~100s).
 
     This is the distributed replacement for the reference's pass-1
     sequential schema scan (core.rs:85-132): commutative aggregates,
     so partial aggregation handles any partitioning."""
+    # tag each value ONCE in a projection, then aggregate the cheap tag
+    # columns: unify_tags references its input in every when-branch,
+    # and codegen does not CSE across conditional branches — inlining
+    # type_tag would re-run the try-cast cascade per branch (measured
+    # 8× slower at 400k rows, and 7s of plan time at ~25 columns on
+    # the Workout read).  A tag is NULL exactly when its value is, so
+    # count(tag) is the column's non-null count.
+    proj = [F.col(key)] if key is not None else []
+    proj += [type_tag(F.col(c)).alias(f"g{i}") for i, c in enumerate(cols)]
+    aggs = []
+    for i in range(len(cols)):
+        aggs.append(unify_tags(F.col(f"g{i}")).alias(f"t{i}"))
+        aggs.append(F.count(F.col(f"g{i}")).alias(f"n{i}"))
+    tagged = df.select(*proj)
+    rows = (tagged.groupBy(key) if key is not None else tagged).agg(*aggs).collect()
+    return {row[key] if key is not None else None:
+            {c: (row[f"t{i}"], row[f"n{i}"]) for i, c in enumerate(cols)}
+            for row in rows}
+
+
+def apply_inferred_types(df: DataFrame,
+                         cols: list[str] | None = None) -> DataFrame:
+    """Infer-and-cast string columns in ONE aggregate pass.
+
+    Per column: widening-unified tag (INTEGER/REAL/DATE/TIMESTAMP/TEXT)
+    from ``vote_column_types``; then cast each column to its tag's
+    Spark type.  (Per-type all-null column pruning — the reference
+    never creates a column it never saw, core.rs:216-227 — lives in
+    `record_tables_onepass`.)"""
     if cols is None:
         cols = [f.name for f in df.schema.fields
                 if isinstance(f.dataType, T.StringType)]
     if not cols:
         return df
-    # tag each value ONCE in a projection, then aggregate the cheap tag
-    # columns: unify_tags references its input in every when-branch, so
-    # inlining type_tag would replicate the try-cast cascade per branch
-    # — at ~25 columns the generated code alone takes seconds to
-    # compile (measured 7s plan time on the Workout read)
-    proj = [type_tag(F.col(c)).alias(f"g{i}") for i, c in enumerate(cols)]
-    aggs = [unify_tags(F.col(f"g{i}")).alias(f"t{i}")
-            for i in range(len(cols))]
-    row = df.select(*proj).agg(*aggs).collect()[0]
-    for i, c in enumerate(cols):
-        casted = cast_to_tag(F.col(c), row[f"t{i}"])
+    votes = vote_column_types(df, cols)[None]
+    for c in cols:
+        casted = cast_to_tag(F.col(c), votes[c][0])
         if casted is not None:
             df = df.withColumn(c, casted)
     return df

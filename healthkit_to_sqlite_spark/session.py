@@ -48,7 +48,7 @@ RUNTIME_CONFS: dict[str, str] = {
 def configure(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an externally-owned session (idempotent).
 
-    A conf that fails to apply is LOGGED (stderr + log4j), never
+    A conf that fails to apply is LOGGED as a warning, never
     swallowed silently: several of these are load-bearing
     (`nanosAsLong` gates every `events` read, `LAST_WIN` the metadata
     pivot), and the downstream error surfaces far from the cause
@@ -59,10 +59,9 @@ def configure(spark: SparkSession) -> SparkSession:
         try:
             spark.conf.set(k, v)
         except Exception as e:  # noqa: BLE001 — driver-owned session
-            msg = (f"configure: could not set {k}={v!r} on this session "
-                   f"({type(e).__name__}: {e}); dependent paths may fail")
-            logging.getLogger(__name__).warning(msg)
-            print(f"WARNING {msg}", file=__import__("sys").stderr)
+            logging.getLogger(__name__).warning(
+                "configure: could not set %s=%r on this session (%s: %s); "
+                "dependent paths may fail", k, v, type(e).__name__, e)
     return spark
 
 

@@ -285,21 +285,28 @@ def _metadata_map(col: str = "MetadataEntry"):
                                        m["_value"].cast("string").alias("value"))))
 
 
+def metadata_keys(df: DataFrame) -> list[str]:
+    """The sorted distinct MetadataEntry key set, in one collect
+    (bounded: same cardinality the reference's schema BTreeMap holds in
+    memory, core.rs:231-257)."""
+    if "MetadataEntry" not in df.columns:
+        return []
+    md = _as_array(df, "MetadataEntry").select(
+        F.explode(F.map_keys(_metadata_map())).alias("k"))
+    return [r[0] for r in md.distinct().orderBy("k").collect()]
+
+
 def flatten_metadata(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """A6: pivot metadata entries to ``metadata_<key>`` wide columns.
 
-    ``keys=None`` collects the distinct key set first (bounded: same
-    cardinality the reference's schema BTreeMap holds in memory,
-    core.rs:231-257).  Pass explicit keys in pipelines that must avoid
-    the extra job."""
+    ``keys=None`` runs the ``metadata_keys`` census first.  Pass
+    explicit keys in pipelines that must avoid the extra job."""
     if "MetadataEntry" not in df.columns:
         return df
+    if keys is None:
+        keys = metadata_keys(df)
     df = _as_array(df, "MetadataEntry")
     df = df.withColumn("__md", _metadata_map())
-    if keys is None:
-        keys = [r[0] for r in
-                (df.select(F.explode(F.map_keys("__md")).alias("k"))
-                 .distinct().orderBy("k").collect())]
     for k in keys:
         df = df.withColumn(f"metadata_{k}", F.col("__md").getItem(k))
     return df.drop("__md", "MetadataEntry")
@@ -373,8 +380,12 @@ def read_workouts(spark: SparkSession, xml_path: str,
     Empty-children workouts keep '[]' / '{}' (reference quirk
     preserved, SURVEY.md §4.4-6); a missing route file leaves '{}'
     (reference hard-errors, core.rs:580-582 — we degrade gracefully
-    and record the divergence here)."""
+    and record the divergence here).  An export without <Workout>
+    elements reads with an empty schema, returned as is: the class
+    contributes no table."""
     df = read_element(spark, xml_path, "Workout")
+    if not df.columns:
+        return df
     # raw child columns get __-prefixed temp names: Spark resolves
     # column names case-insensitively, so raw `WorkoutStatistics` would
     # collide with the synthesized `workoutStatistics`
@@ -482,37 +493,36 @@ def record_tables_onepass(records: DataFrame) -> dict[str, DataFrame]:
     types).  All-null columns are pruned per type (the reference's
     per-table column sets); the collect is bounded at one row per HK
     type (~100s)."""
-    from ..operators.schema_infer import cast_to_tag, type_tag, unify_tags
+    from ..operators.schema_infer import cast_to_tag, vote_column_types
 
     str_cols = [f.name for f in records.schema.fields
                 if isinstance(f.dataType, T.StringType) and f.name != "type"]
-    # materialize each value's tag ONCE in a projection before the
-    # aggregate: unify_tags references its input in every when-branch,
-    # and codegen does not CSE across conditional branches — feeding
-    # type_tag(...) in directly re-runs the try-cast cascade per branch
-    # (measured 8× slower at 400k rows)
-    proj = [F.col("type")]
-    for i, c in enumerate(str_cols):
-        proj.append(type_tag(F.col(c)).alias(f"g{i}"))
-        proj.append(F.col(c).isNotNull().cast("bigint").alias(f"p{i}"))
-    tagged = records.select(*proj)
-    aggs = []
-    for i, c in enumerate(str_cols):
-        aggs.append(unify_tags(F.col(f"g{i}")).alias(f"t{i}"))
-        aggs.append(F.sum(F.col(f"p{i}")).alias(f"n{i}"))
-    votes = tagged.groupBy("type").agg(*aggs).collect()
+    votes = vote_column_types(records, str_cols, key="type")
 
     out: dict[str, DataFrame] = {}
-    for row in sorted(votes, key=lambda r: r["type"]):
-        t = row["type"]
+    for t in sorted(votes):
         proj = [F.col("type")]
-        for i, c in enumerate(str_cols):
-            if row[f"n{i}"] == 0:
+        for c, (tag, nonnull) in votes[t].items():
+            if nonnull == 0:
                 continue  # column never seen for this type (core.rs:216-227)
-            casted = cast_to_tag(F.col(c), row[f"t{i}"])
+            casted = cast_to_tag(F.col(c), tag)
             proj.append(casted.alias(c) if casted is not None else F.col(c))
         out[t] = records.filter(F.col("type") == t).select(*proj)
     return out
+
+
+def _record_tables(spark: SparkSession, records: DataFrame,
+                   staging_dir: str) -> dict[str, DataFrame]:
+    """The Record side of ``convert``/``convert_many``: materialize the
+    parsed, flattened Records to staging parquet, then fan out per type
+    (see ``convert``).  An export without <Record> elements reads with
+    an empty schema and contributes no table."""
+    if not records.columns:
+        return {}
+    # NB: no leading underscore — Spark's file index hides _* paths
+    staged_records = os.path.join(staging_dir, "records-staged.parquet")
+    records.write.mode("overwrite").parquet(staged_records)
+    return record_tables_onepass(spark.read.parquet(staged_records))
 
 
 def convert(spark: SparkSession, zip_path: str,
@@ -520,7 +530,11 @@ def convert(spark: SparkSession, zip_path: str,
     """E1 end-to-end (reference main.rs:88 → core.rs:42-76): stage the
     zip, read all element classes, synthesize nested columns, and
     return the logical table catalog {table_name: DataFrame} — the
-    Spark analog of the converted SQLite database.
+    Spark analog of the converted SQLite database.  An element class
+    the export does not contain contributes no table (the reference's
+    tables come from its pass-1 schema map, which holds only classes it
+    saw; SURVEY.md §1.3); the XML reader's empty schema says so without
+    an extra job.
 
     The parsed Record relation is materialized to staging parquet
     before the table-per-type fan-out.  The fan-out makes a schema
@@ -557,20 +571,19 @@ def convert(spark: SparkSession, zip_path: str,
 
     # records read from the boundary-safe chunk dir → one parse task
     # per chunk (a single export.xml would parse on one task)
-    def _record_tables() -> dict[str, DataFrame]:
+    def _records() -> dict[str, DataFrame]:
         records = read_records(spark, staged.records_dir or staged.export_xml)
-        # NB: no leading underscore — Spark's file index hides _* paths
-        staged_records = os.path.join(staging_dir, "records-staged.parquet")
-        records.write.mode("overwrite").parquet(staged_records)
-        return record_tables_onepass(spark.read.parquet(staged_records))
+        return _record_tables(spark, records, staging_dir)
 
     out: dict[str, DataFrame] = {}
     with ThreadPoolExecutor(max_workers=3) as ex:
         fw = ex.submit(_workouts)
         fs = ex.submit(_summaries)
-        fr = ex.submit(_record_tables)
-        out["Workout"] = fw.result()
-        out["ActivitySummary"] = fs.result()
+        fr = ex.submit(_records)
+        for name, df in (("Workout", fw.result()),
+                         ("ActivitySummary", fs.result())):
+            if df.columns:
+                out[name] = df
         out.update(fr.result())
     return out
 
@@ -603,13 +616,16 @@ def convert_many(spark: SparkSession, zip_paths: list[str],
         sub = os.path.join(staging_dir, stem)
         staged = stage_zip(zp, sub)
         routes = read_gpx_routes(spark, staged.routes_dir)
-        workouts.append(
-            read_workouts(spark, staged.workouts_xml or staged.export_xml,
-                          routes).withColumn("archive", F.lit(stem)))
-        summaries.append(
-            read_activity_summaries(
-                spark, staged.summaries_xml or staged.export_xml)
-            .withColumn("archive", F.lit(stem)))
+        # an archive without the class reads with an empty schema and
+        # adds nothing to the union
+        w = read_workouts(spark, staged.workouts_xml or staged.export_xml,
+                          routes)
+        if w.columns:
+            workouts.append(w.withColumn("archive", F.lit(stem)))
+        s = read_activity_summaries(
+            spark, staged.summaries_xml or staged.export_xml)
+        if s.columns:
+            summaries.append(s.withColumn("archive", F.lit(stem)))
         record_dirs.append(staged.records_dir or staged.export_xml)
 
     def union_all(dfs):
@@ -618,21 +634,19 @@ def convert_many(spark: SparkSession, zip_paths: list[str],
             acc = acc.unionByName(d, allowMissingColumns=True)
         return acc
 
-    out["Workout"] = union_all(workouts)
-    out["ActivitySummary"] = union_all(summaries)
+    if workouts:
+        out["Workout"] = union_all(workouts)
+    if summaries:
+        out["ActivitySummary"] = union_all(summaries)
     # one multi-path scan for ALL archives' record chunks; archive
     # recovered from the file path (no per-archive read loop)
-    chunked = F.regexp_extract(F.col("_metadata.file_path"),
-                               r"([^/]+)/records-chunks/", 1)
-    whole = F.regexp_extract(F.col("_metadata.file_path"),
-                             r"([^/]+)/apple_health_export/", 1)
-    records = (read_element(spark, record_dirs, "Record")
-               .withColumn("archive",
-                           F.when(chunked != "", chunked).otherwise(whole)))
-    records = flatten_metadata(records)
-    staged_records = os.path.join(staging_dir, "records-staged.parquet")
-    records.write.mode("overwrite").parquet(staged_records)
-    records = spark.read.parquet(staged_records)
-    for t, df in record_tables_onepass(records).items():
-        out[t] = df
+    records = read_element(spark, record_dirs, "Record")
+    if records.columns:
+        chunked = F.regexp_extract(F.col("_metadata.file_path"),
+                                   r"([^/]+)/records-chunks/", 1)
+        whole = F.regexp_extract(F.col("_metadata.file_path"),
+                                 r"([^/]+)/apple_health_export/", 1)
+        records = records.withColumn(
+            "archive", F.when(chunked != "", chunked).otherwise(whole))
+    out.update(_record_tables(spark, flatten_metadata(records), staging_dir))
     return out

@@ -52,36 +52,21 @@ def plan_record_ingest(spark: SparkSession, sample_path) -> RecordIngestPlan:
     Reads the sample as Records, votes per-column widening types
     (operators.schema_infer cascade), and collects the metadata key
     set — everything the unbounded pass needs pinned up front."""
-    from ..operators.schema_infer import CAST_TARGETS, type_tag, unify_tags  # noqa: F401
-    from ..sources.healthkit import _metadata_map, _as_array
+    from ..operators.schema_infer import CAST_TARGETS, vote_column_types
+    from ..sources.healthkit import metadata_keys
 
     configure(spark)
     raw = (spark.read.format("xml").option("rowTag", "Record")
            .option("inferSchema", "false").load(sample_path))
-    raw_schema = raw.schema
-
-    keys: list = []
-    if "MetadataEntry" in raw.columns:
-        md = _as_array(raw, "MetadataEntry").select(
-            F.explode(F.map_keys(_metadata_map())).alias("k"))
-        keys = [r[0] for r in md.distinct().orderBy("k").collect()]
-
+    keys = metadata_keys(raw)
     flat = _flatten(raw, keys)
     str_cols = [f.name for f in flat.schema.fields
-                if isinstance(f.dataType, T.StringType)]
-    proj, aggs = [], []
-    for i, c in enumerate(str_cols):
-        proj.append(type_tag(F.col(c)).alias(f"g{i}"))
-        aggs.append(unify_tags(F.col(f"g{i}")).alias(f"t{i}"))
-    casts: dict = {}
-    if str_cols:
-        row = flat.select(*proj).agg(*aggs).collect()[0]
-        for i, c in enumerate(str_cols):
-            tag = row[f"t{i}"]
-            if tag in CAST_TARGETS and c != "type":
-                casts[c] = tag  # tag, not type string: cast_to_tag
-                # owns the tag→cast policy (offset-preserving ntz)
-    return RecordIngestPlan(raw_schema=raw_schema, casts=casts,
+                if isinstance(f.dataType, T.StringType) and f.name != "type"]
+    votes = vote_column_types(flat, str_cols)[None] if str_cols else {}
+    # tags, not type strings: cast_to_tag owns the tag→cast policy
+    # (offset-preserving ntz)
+    casts = {c: tag for c, (tag, _) in votes.items() if tag in CAST_TARGETS}
+    return RecordIngestPlan(raw_schema=raw.schema, casts=casts,
                             metadata_keys=keys)
 
 
@@ -89,10 +74,7 @@ def _flatten(df: DataFrame, keys) -> DataFrame:
     """Strip attr prefixes + pivot metadata against a FIXED key set
     (the collect-free form of sources.healthkit.flatten_metadata)."""
     from ..sources.healthkit import _strip_attr_prefix, flatten_metadata
-    df = _strip_attr_prefix(df)
-    if "MetadataEntry" in df.columns:
-        df = flatten_metadata(df, keys=list(keys))
-    return df
+    return flatten_metadata(_strip_attr_prefix(df), keys=list(keys))
 
 
 def records_stream(spark: SparkSession, chunks_path,

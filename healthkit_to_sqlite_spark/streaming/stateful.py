@@ -28,6 +28,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import configure
+
 OUT_SCHEMA = "user_id long, n_events long, sum_cents long"
 _STATE_SCHEMA = "n_events long, sum_cents long"
 
@@ -81,7 +83,11 @@ def run_stateful_counts(spark: SparkSession, source: DataFrame,
                  F.count(F.lit(1)).alias("n"))
      .repartition(n_chunks).write.mode("overwrite").parquet(chunks_dir))
     n_keys = int(obs.get["k"])
-    stream = (spark.readStream.schema(src.schema)
+    # the stream runs on a child session: its own SQLConf over the same
+    # SparkContext, so the state-partition override below is never
+    # visible to queries planned concurrently on the caller's session
+    stream_spark = configure(spark.newSession())
+    stream = (stream_spark.readStream.schema(src.schema)
               .option("maxFilesPerTrigger", 1)
               .parquet(chunks_dir))
     out_dir = os.path.join(work_dir, "updates")
@@ -101,20 +107,17 @@ def run_stateful_counts(spark: SparkSession, source: DataFrame,
     # partition), capped at the session's cluster-sized shuffle
     # partitions — a billion-key stream still gets the full width;
     # a 1500-key fixture stream no longer pays 32 store commits per
-    # batch.  The override is scoped to the stream start and restored
-    # (the partition count is baked into the checkpoint at batch 0).
+    # batch.  The partition count is baked into the checkpoint at
+    # batch 0.
     sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     state_parts = max(1, min(sess_parts, math.ceil(n_keys / 200)))
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
-    try:
-        (stateful_user_counts(stream)
-         .writeStream.foreachBatch(sink)
-         .outputMode("update")
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         .start().awaitTermination())
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(sess_parts))
+    stream_spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
+    (stateful_user_counts(stream)
+     .writeStream.foreachBatch(sink)
+     .outputMode("update")
+     .option("checkpointLocation", ckpt)
+     .trigger(availableNow=True)
+     .start().awaitTermination())
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F

@@ -1,0 +1,29 @@
+"""Package hygiene, checked on the source AST: the package reports
+through ``logging`` (only the CLI entry point prints), and it guards
+with exceptions, never with ``assert`` — asserts vanish under
+``python -O`` and, inside an Arrow worker closure, fail as an opaque
+worker crash far from the cause."""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+PACKAGE = Path(__file__).parents[1] / "healthkit_to_sqlite_spark"
+
+
+def _offences():
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE.parent)
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Assert):
+                yield f"{rel}:{node.lineno}: assert statement"
+            elif (isinstance(node, ast.Call)
+                  and isinstance(node.func, ast.Name)
+                  and node.func.id == "print"
+                  and path.name != "__main__.py"):
+                yield f"{rel}:{node.lineno}: print() call"
+
+
+def test_package_has_no_print_or_assert():
+    assert list(_offences()) == []

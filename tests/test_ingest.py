@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import sqlite3
+import zipfile
 from pathlib import Path
 
 import pytest
@@ -256,3 +257,84 @@ def test_convert_many_archives(spark, tmp_path_factory):
     assert per_archive == {"user1": 2, "user2": 2}
     # typed columns survive the union + fan-out
     assert dict(steps.dtypes)["value"] == "bigint"
+
+
+def test_read_records_unescapes_attribute_entities(spark, tmp_path):
+    from healthkit_to_sqlite_spark.sources.healthkit import read_records
+    p = tmp_path / "ent.xml"
+    p.write_text('<HealthData><Record type="T" value="a &amp; b '
+                 '&lt;c&gt; &quot;d&quot;"/></HealthData>')
+    row = read_records(spark, str(p)).collect()[0]
+    assert row["value"] == 'a & b <c> "d"'
+
+
+def test_read_records_gt_in_attribute_value_and_numeric_refs(spark, tmp_path):
+    """'>' is legal inside attribute values (HealthKit device strings)
+    and numeric character references must resolve."""
+    from healthkit_to_sqlite_spark.sources.healthkit import read_records
+    p = tmp_path / "dev.xml"
+    p.write_text(
+        '<HealthData>'
+        '<Record type="A" device="&lt;&lt;HKDevice: 0x283&gt;, name:W>x" '
+        'value="1"/>'
+        '<Record type="B" value="line&#10;break &#x2019;q&#8217;"/>'
+        '<Record type="C" value="3"><MetadataEntry key="k" value="v>w"/>'
+        '</Record>'
+        '</HealthData>')
+    rows = {r["type"]: r for r in read_records(spark, str(p)).collect()}
+    assert len(rows) == 3                       # nothing dropped/merged
+    assert rows["A"]["device"] == "<<HKDevice: 0x283>, name:W>x"
+    assert rows["B"]["value"] == "line\nbreak ’q’"
+    assert rows["C"]["metadata_k"] == "v>w"
+
+
+def _cli_tables(spark, monkeypatch, tmp_path, body: str,
+                with_route: bool) -> dict[str, int]:
+    """Run the CLI's ``main()`` in-process (on the test session) over
+    an export whose export.xml holds ``body``; return the .db's
+    {table: row count}."""
+    import healthkit_to_sqlite_spark.session as sess
+    from healthkit_to_sqlite_spark.__main__ import main
+    from tests import hk_fixture as fx
+
+    zp = tmp_path / "export.zip"
+    with zipfile.ZipFile(zp, "w") as zf:
+        zf.writestr("apple_health_export/export.xml",
+                    '<?xml version="1.0" encoding="UTF-8"?>\n'
+                    '<HealthData locale="en_US">\n' + body
+                    + "\n</HealthData>\n")
+        if with_route:
+            zf.writestr("apple_health_export" + fx.ROUTE_PATH, fx.route_gpx())
+    monkeypatch.setattr(sess, "get_spark", lambda *a, **k: spark)
+    db = tmp_path / "out.db"
+    assert main([str(zp), f"sqlite://{db}"]) == 0
+    con = sqlite3.connect(db)
+    try:
+        names = [r[0] for r in con.execute(
+            "SELECT name FROM sqlite_master WHERE type='table'")]
+        return {n: con.execute(f'SELECT COUNT(*) FROM "{n}"').fetchone()[0]
+                for n in names}
+    finally:
+        con.close()
+
+
+def test_cli_recordless_export_has_no_record_tables(
+        spark, monkeypatch, tmp_path):
+    """An element class the export does not contain contributes no
+    table: Workouts and ActivitySummaries only → exactly those two."""
+    from tests import hk_fixture as fx
+    tables = _cli_tables(spark, monkeypatch, tmp_path,
+                         fx._workout_xml() + "\n" + fx._summaries_xml(),
+                         with_route=True)
+    assert tables == {"Workout": 2, "ActivitySummary": 10}
+
+
+def test_cli_records_only_export_has_only_record_tables(
+        spark, monkeypatch, tmp_path):
+    """Records only → one table per Record type, and no empty Workout
+    or zero-column ActivitySummary table."""
+    from tests import hk_fixture as fx
+    tables = _cli_tables(spark, monkeypatch, tmp_path, fx._records_xml(),
+                         with_route=False)
+    assert tables == {"HKQuantityTypeIdentifierWalkingSpeed": 3,
+                      "HKQuantityTypeIdentifierStepCount": 2}

@@ -118,18 +118,27 @@ def test_streaming_exactly_once_sink(spark, tbl, tmp_path):
 
 
 def test_end_to_end_archive_to_manifest(spark, hk_zip, tmp_path):
-    """The full landing pipeline: stream the archive through the
-    Python data source, cast per the inference cascade, append each
-    micro-batch transactionally, read the typed table back."""
+    """The full landing pipeline: stream the archive's Records through
+    the streaming ingest source with no casts (values land as raw
+    strings), append each micro-batch transactionally, read the table
+    back and type it per Record type with the inference cascade."""
+    import dataclasses
+    import shutil
+
     from healthkit_to_sqlite_spark.operators.schema_infer import (
         apply_inferred_types)
-    from healthkit_to_sqlite_spark.sources.datasource import register
+    from healthkit_to_sqlite_spark.sources.healthkit import stage_zip
+    from healthkit_to_sqlite_spark.streaming.ingest import (
+        plan_record_ingest, records_stream)
 
-    register(spark)
+    staged = stage_zip(hk_zip, str(tmp_path / "staging"))
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    shutil.copy(staged.export_xml, drop / "chunk-000.xml")
+    plan = dataclasses.replace(plan_record_ingest(spark, str(drop)),
+                               casts={})
     tbl = ManifestTable(str(tmp_path / "records"))
-    q = (spark.readStream.format("healthkit")
-         .option("chunkBytes", "1024")
-         .load(hk_zip)
+    q = (records_stream(spark, str(drop), plan)
          .writeStream.foreachBatch(tbl.foreach_batch_writer())
          .option("checkpointLocation", str(tmp_path / "ckpt"))
          .start())

@@ -183,6 +183,72 @@ def test_streaming_record_ingest_matches_batch(spark, tmp_path):
     assert "metadata_Test Entry" in got.columns
 
 
+def test_record_ingest_restart_lands_each_record_once(spark, tmp_path):
+    """Exactly-once across restarts: an availableNow run over chunk A,
+    then chunk B lands in the drop dir and the query restarts from the
+    same checkpoint — every record is in the table exactly once (the
+    file-source log skips A, nothing is lost or duplicated)."""
+    from healthkit_to_sqlite_spark.streaming.ingest import (
+        plan_record_ingest, start_record_ingest)
+
+    def chunk(lo, hi):
+        return ("<HealthData>\n" + "".join(
+            f'<Record type="T{i % 2}" value="{i}" '
+            f'startDate="2022-12-16 08:00:{i:02d} -0800"/>\n'
+            for i in range(lo, hi)) + "</HealthData>\n")
+
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    (drop / "chunk-a.xml").write_text(chunk(0, 6))
+    plan = plan_record_ingest(spark, str(drop / "chunk-a.xml"))
+    out, ckpt = str(tmp_path / "ingested"), str(tmp_path / "ckpt")
+
+    def run():
+        q = start_record_ingest(spark, str(drop), out, ckpt, plan,
+                                available_now=True)
+        q.awaitTermination(120)
+
+    run()
+    assert spark.read.parquet(out).count() == 6
+    (drop / "chunk-b.xml").write_text(chunk(6, 10))
+    run()
+    got = spark.read.parquet(out)
+    assert dict(got.dtypes)["value"] == "bigint"
+    assert sorted(r["value"] for r in got.collect()) == list(range(10))
+    assert (dict(got.groupBy("type").count().collect())
+            == {"T0": 5, "T1": 5})
+
+
+def test_stateful_counts_leaves_caller_session_conf_alone(spark, monkeypatch):
+    """The stateful stream sizes its state partitions on a child
+    session: the caller's ``spark.sql.shuffle.partitions`` is never
+    set (a concurrently planned query would see it), and
+    q_stateful_counts still matches its DuckDB oracle."""
+    from healthkit_to_sqlite_spark.catalog import DEFAULT_SF_DIR
+    from healthkit_to_sqlite_spark.registry import _all_specs
+    from tests.parity import compare_query, duckdb_connection
+
+    conf = spark.conf
+    set_keys = []
+    conf_set = conf.set
+
+    def spy(key, value):
+        set_keys.append(key)
+        return conf_set(key, value)
+
+    monkeypatch.setattr(conf, "set", spy)
+    spec = _all_specs()["q_stateful_counts"]
+    con = duckdb_connection(DEFAULT_SF_DIR)
+    try:
+        res = compare_query(spark, con, "q_stateful_counts", spec.build,
+                            spec.oracle, DEFAULT_SF_DIR)
+    finally:
+        con.close()
+    assert "spark.sql.shuffle.partitions" not in set_keys
+    assert res.ok, (res.detail, res.mismatches)
+    assert res.spark_rows > 0
+
+
 def test_incremental_topk_equals_batch(spark, tmp_path):
     """Streaming incremental top-k (O(k)-state foreachBatch merge)
     must produce EXACTLY the batch topk_cosine answer — the top-k
