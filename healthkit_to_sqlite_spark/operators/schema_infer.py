@@ -182,35 +182,36 @@ def apply_inferred_types(df: DataFrame,
     return df
 
 
-def infer_column_types(kv: DataFrame, col_name: str = "col_name",
-                       value: str = "value") -> DataFrame:
+def infer_column_types(kv: DataFrame) -> DataFrame:
     """Pass-1 analog of the reference (core.rs:85-132): from a long-form
-    (column, raw string value) relation, produce (column, unified type).
-    One aggregate pass; contrast with the reference's sequential
-    first-seen scan."""
-    return (kv.select(F.col(col_name),
-                      type_tag(F.col(value)).alias("tag"))
-            .groupBy(col_name)
+    (col_name, raw string value) relation, produce (col_name, unified
+    type).  One aggregate pass; contrast with the reference's
+    sequential first-seen scan."""
+    return (kv.select("col_name", type_tag(F.col("value")).alias("tag"))
+            .groupBy("col_name")
             .agg(unify_tags(F.col("tag")).alias("inferred_type")))
 
 
+def _event_long_form(events: DataFrame) -> DataFrame:
+    """Four raw-string columns of known shape derived from `events`
+    (int-ish, real-ish, timestamp-ish, text-ish) plus ``event_type``,
+    as long-form (col_name, value) rows — ``_LONG_FORM_SQL`` in Spark."""
+    pairs = F.array(*[
+        F.struct(F.lit(name).alias("col_name"), val.alias("value"))
+        for name, val in (
+            ("props_k", F.get_json_object("props", "$.k")),
+            ("value_str", F.col("value").cast("decimal(18,2)").cast("string")),
+            ("ts_str", F.date_format("ts", "yyyy-MM-dd HH:mm:ss")),
+            ("date_str", F.date_format("ts", "yyyy-MM-dd")),
+            ("event_type", F.col("event_type")))])
+    return events.select(F.explode(pairs).alias("p")).select("p.col_name", "p.value")
+
+
 def classify_event_values(events: DataFrame) -> DataFrame:
-    """Oracle-checkable exercise of the cascade: derive four raw-string
-    columns of known shape from `events` (int-ish, real-ish,
-    timestamp-ish, text-ish), classify every value, count per tag."""
-    k = F.get_json_object("props", "$.k")
-    v = F.col("value").cast("decimal(18,2)").cast("string")
-    t = F.date_format("ts", "yyyy-MM-dd HH:mm:ss")
-    d = F.date_format("ts", "yyyy-MM-dd")
-    e = F.col("event_type")
-    pairs = F.array(
-        F.struct(F.lit("props_k").alias("col_name"), k.alias("value")),
-        F.struct(F.lit("value_str").alias("col_name"), v.alias("value")),
-        F.struct(F.lit("ts_str").alias("col_name"), t.alias("value")),
-        F.struct(F.lit("date_str").alias("col_name"), d.alias("value")),
-        F.struct(F.lit("event_type").alias("col_name"), e.alias("value")))
-    long = events.select(F.explode(pairs).alias("p")).select("p.col_name", "p.value")
-    return (long.select("col_name", type_tag(F.col("value")).alias("type_tag"))
+    """Oracle-checkable exercise of the cascade: classify every
+    long-form event value, count per tag."""
+    return (_event_long_form(events)
+            .select("col_name", type_tag(F.col("value")).alias("type_tag"))
             .groupBy("col_name", "type_tag")
             .agg(F.count(F.lit(1)).alias("n")))
 
@@ -218,19 +219,7 @@ def classify_event_values(events: DataFrame) -> DataFrame:
 def infer_event_schema(events: DataFrame) -> DataFrame:
     """End-to-end inference over the same long-form values: one row per
     derived column with its widened type."""
-    k = F.get_json_object("props", "$.k")
-    v = F.col("value").cast("decimal(18,2)").cast("string")
-    t = F.date_format("ts", "yyyy-MM-dd HH:mm:ss")
-    d = F.date_format("ts", "yyyy-MM-dd")
-    e = F.col("event_type")
-    pairs = F.array(
-        F.struct(F.lit("props_k").alias("col_name"), k.alias("value")),
-        F.struct(F.lit("value_str").alias("col_name"), v.alias("value")),
-        F.struct(F.lit("ts_str").alias("col_name"), t.alias("value")),
-        F.struct(F.lit("date_str").alias("col_name"), d.alias("value")),
-        F.struct(F.lit("event_type").alias("col_name"), e.alias("value")))
-    long = events.select(F.explode(pairs).alias("p")).select("p.col_name", "p.value")
-    return infer_column_types(long)
+    return infer_column_types(_event_long_form(events))
 
 
 _CASCADE_SQL = """

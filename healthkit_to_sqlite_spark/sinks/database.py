@@ -1,22 +1,20 @@
 """Database sinks (reference A12-A14: typed batch insert, DDL lifecycle).
 
 The reference writes one SQLite row per INSERT inside a transaction
-(core.rs:687-718, 59-72).  Spark-native equivalents, in preference
-order:
+(core.rs:687-718, 59-72).  Spark-native equivalents:
 
-1. ``write_jdbc`` — ``df.write.jdbc`` with batch inserts; the cluster
-   path (requires the target DB's JDBC driver jar on the classpath;
-   sqlite-jdbc is not bundled in this container, so this is gated).
-2. ``write_sqlite`` — driver-side sqlite3 fed from one Arrow fetch
-   per table (one Spark job each), converted column by column into
-   one ``executemany`` per record batch.  Driver memory holds at most
-   ``defaultParallelism`` whole tables as Arrow at a time.  Exists so
-   reference parity — an actual .db file a Datasette user could open —
-   is testable here.  Fine for export-sized data (the reference's own
-   regime); at 100 TB you would not write SQLite at all.
-3. ``write_partitioned_parquet`` — ``partitionBy(type)`` columnar
-   layout; the at-scale analog of table-per-type (A4): partition
-   pruning gives per-type access without per-table JDBC round trips.
+- ``write_sqlite`` — driver-side sqlite3 fed from one Arrow fetch per
+  table (one Spark job each), converted column by column into one
+  ``executemany`` per record batch.  Driver memory holds at most
+  ``defaultParallelism`` whole tables as Arrow at a time.  This is the
+  CLI's sink: reference parity — an actual .db file a Datasette user
+  could open — is testable here.  Fine for export-sized data (the
+  reference's own regime); at 100 TB you would not write SQLite at all.
+- ``write_tables_atomic`` — the per-type tables as parquet, published
+  in one manifest commit (the at-scale analog of table-per-type, A4,
+  with the reference's one-transaction-per-pass semantics).
+- ``write_bucketed`` — a table bucketed and sorted by a join key, so
+  two tables bucketed alike join without an exchange.
 """
 
 from __future__ import annotations
@@ -184,32 +182,15 @@ def write_sqlite(tables: dict[str, DataFrame], db_path: str,
         con.close()
 
 
-def write_jdbc(tables: dict[str, DataFrame], jdbc_url: str,
-               mode: str = "overwrite", **properties: str) -> None:
-    """Cluster-path sink: executor-parallel JDBC batch writes.  Needs
-    the destination's JDBC driver jar on the Spark classpath."""
-    for name, df in tables.items():
-        df.write.jdbc(jdbc_url, table=name, mode=mode, properties=properties)
-
-
-def write_partitioned_parquet(records: DataFrame, path: str,
-                              partition_col: str = "type",
-                              mode: str = "overwrite") -> None:
-    """A4 at scale: one columnar dataset partitioned by record type;
-    readers hit exactly the partitions (= reference tables) they ask
-    for via partition pruning."""
-    records.write.mode(mode).partitionBy(partition_col).parquet(path)
-
-
 def write_tables_atomic(tables: dict[str, DataFrame], root: str) -> int:
     """A4 fan-out with the reference's one-transaction-per-pass
     semantics at parquet scale: stage EVERY per-type table's files,
     then publish ONE manifest commit for the whole pass
     (sinks/manifest.ManifestCatalog).  A run that dies mid-pass
     leaves zero visible tables — matching the reference's single
-    SQLite transaction (core.rs:59-61, 70-72) — where the plain
-    ``write_partitioned_parquet`` fan-out could leave a partial
-    table set.  Returns the published catalog version."""
+    SQLite transaction (core.rs:59-61, 70-72) — where writing the
+    tables one by one could leave a partial table set.  Returns the
+    published catalog version."""
     from .manifest import ManifestCatalog
 
     return ManifestCatalog(root).publish_pass(tables)

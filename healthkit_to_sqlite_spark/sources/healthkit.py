@@ -13,7 +13,10 @@ route file inside the zip to build GeoJSON LineString geometry
 Spark-native re-expression:
 
 - zip staging is driver-side (A1): Spark has no zip codec; unpack once
-  to a staging dir, then every subsequent step is distributed.
+  to a staging dir, then ONE streaming pass over export.xml re-chunks
+  the Records at element boundaries and carves the rare classes
+  (Workout, ActivitySummary) into small side files; every subsequent
+  step is distributed.
 - ONE schema-inferring distributed read per element class via the
   native XML source (rowTag=Record/Workout/ActivitySummary) replaces
   both streaming passes; the reader's inference implements the
@@ -25,13 +28,12 @@ Spark-native re-expression:
 - Workout children = struct/array transforms + to_json at the edge.
 - Route join = a real equi-join against a GPX DataFrame (broadcast;
   route sets are small) instead of per-row random zip access.
-- table-per-type fan-out (A4) = filtered views / partitionBy writes.
+- table-per-type fan-out (A4) = one schema vote over the staged
+  Record parquet, then one filtered projection per type.
 
-At 100 TB (hypothetically many exports): staging parallelizes per
-archive; every downstream op is a plain shuffle/groupBy pipeline with
-no driver-side row handling except the bounded distinct metadata-key /
-record-type collections (cardinality ~100s — the same bound the
-reference's BTreeMap schema carries).
+Driver-side row handling is limited to the staging pass and the
+bounded distinct metadata-key / record-type collections (cardinality
+~100s — the same bound the reference's BTreeMap schema carries).
 """
 
 from __future__ import annotations
@@ -54,179 +56,139 @@ ARCHIVE_ROOT = "apple_health_export"
 @dataclass(frozen=True)
 class StagedExport:
     """Filesystem layout after zip staging (A1)."""
-    root: str          # staging dir containing apple_health_export/
     export_xml: str    # path to export.xml
     routes_dir: str    # dir with workout-routes/*.gpx (may not exist)
     #: small per-class side files for the RARE element classes — a
     #: rowTag XML read must scan the whole file even when its class is
     #: 0.01% of it, so Workout/ActivitySummary reads go against these
-    workouts_xml: str | None = None
-    summaries_xml: str | None = None
+    workouts_xml: str
+    summaries_xml: str
     #: directory of export.xml re-chunked at <Record boundaries — the
     #: XML source does not split single files (isSplitable=false for
     #: rowTag parsing), so one big export.xml would parse on ONE task;
     #: N chunk files give the Record read N-way parallelism
-    records_dir: str | None = None
+    records_dir: str
 
 
-_RARE_CLASS_RE = {
-    # Workout may nest children but never another <Workout>; an
-    # unescaped literal '</Workout>' inside an attribute value is the
-    # only false terminator and does not occur in HealthKit exports
-    "Workout": re.compile(rb"<Workout\b[^>]*/>|<Workout\b.*?</Workout>",
-                          re.DOTALL),
-    "ActivitySummary": re.compile(rb"<ActivitySummary\b[^>]*/>"),
-}
+#: the rare element classes carved into side files, by side-file name
+_SIDE_FILES = {"Workout": "side-workouts.xml",
+               "ActivitySummary": "side-activitysummarys.xml"}
+#: a start tag's attributes; a quoted value may hold a raw '>' (XML
+#: forbids only a raw '<' there, so no element hides inside a value)
+_ATTRS = rb"""(?:[^>"']|"[^"]*"|'[^']*')*?"""
 
 
-def _split_rare_classes(export_xml: str, out_dir: str,
-                        chunk_size: int = 16 << 20,
-                        overlap: int = 1 << 20) -> dict[str, str]:
-    """One streaming pass over export.xml extracting the low-frequency
-    element classes into small side files.  O(file) like the
-    reference's pass 1 (core.rs:52-62), but it buys each subsequent
-    rare-class XML read a scan of kilobytes instead of the whole
-    archive.  Chunked with an ``overlap`` window (default ≫ any single
-    Workout element) so spans crossing chunk boundaries are captured;
-    an element that still straddles a cut is *detected* by the open-tag
-    census below and the class falls back to a full-file read."""
-    outs = {}
-    bufs = {k: [b"<HealthData>\n"] for k in _RARE_CLASS_RE}
-    seen: dict[str, set[tuple[int, int]]] = {k: set() for k in _RARE_CLASS_RE}
-    # independent open-tag census: an element longer than the overlap
-    # window would start before a chunk boundary and end after it, so
-    # the span regex never sees it complete and silently drops it; the
-    # open-tag count (short pattern, can't itself span a cut given the
-    # overlap) detects the loss so we can fall back to the full file
-    opens: dict[str, set[int]] = {k: set() for k in _RARE_CLASS_RE}
-    open_rx = {k: re.compile(rb"<" + k.encode() + rb"[\s/>]")
-               for k in _RARE_CLASS_RE}
-    with open(export_xml, "rb") as f:
-        base = 0
-        carry = b""
-        while True:
-            chunk = f.read(chunk_size)
-            data = carry + chunk
-            if not data:
-                break
-            for klass, rx in _RARE_CLASS_RE.items():
-                for m in rx.finditer(data):
-                    span = (base + m.start(), base + m.end())
-                    if span not in seen[klass]:
-                        seen[klass].add(span)
-                        bufs[klass].append(m.group(0) + b"\n")
-                for m in open_rx[klass].finditer(data):
-                    opens[klass].add(base + m.start())
-            if not chunk:
-                break
-            carry = data[-overlap:]
-            base += len(data) - len(carry)
-    for klass, parts in bufs.items():
-        if len(opens[klass]) != len(seen[klass]):
-            # pathological export: at least one element crossed a chunk
-            # boundary un-captured — omit the side file; callers fall
-            # back to reading the class from the full export.xml
-            import warnings
-            warnings.warn(
-                f"{klass}: {len(opens[klass])} open tags vs "
-                f"{len(seen[klass])} extracted spans; side-file "
-                "extraction abandoned for this class (full-file read)")
-            continue
-        parts.append(b"</HealthData>\n")
-        # NB: no leading underscore — Spark's file index treats _*/.*
-        # paths as hidden and silently reads nothing
-        path = os.path.join(out_dir, f"side-{klass.lower()}s.xml")
-        with open(path, "wb") as out:
-            out.writelines(parts)
-        outs[klass] = path
-    return outs
+def _element_re(klass: str) -> re.Pattern:
+    """One complete element of ``klass``: self-closing, or through its
+    first end tag (neither side class nests in itself)."""
+    k = klass.encode()
+    return re.compile(rb"<" + k + rb"(?=[\s/>])" + _ATTRS
+                      + rb"(?:/>|>.*?</" + k + rb">)", re.DOTALL)
 
 
-def _chunk_records(export_xml: str, out_dir: str,
-                   n_target: int | None = None) -> str | None:
-    """Re-chunk export.xml into ~2×cpus files, cutting only at
-    ``<Record `` element starts, so the Record rowTag read runs one
-    task per chunk instead of one task for the whole file (the XML
-    source cannot split a single file).  Streaming, constant memory,
-    sequential IO — the Spark-side analog of why the reference's pass
-    structure is O(file) (core.rs:52-73).  Every chunk is wrapped in a
-    root element; content between records (e.g. a Workout spanning a
-    cut) stays inside exactly one chunk, and rowTag scanning ignores
-    any non-Record tail.  Returns the chunk dir, or None when the file
-    is too small to be worth splitting."""
+def _stage_export_xml(export_xml: str, out_dir: str) -> str:
+    """One streaming pass over export.xml that writes both products of
+    staging: the Record chunk files and the rare-class side files.
+
+    Records are re-chunked into ~2×cpus files (one file under 2 MiB),
+    cutting only at ``<Record `` starts, so the Record rowTag read runs
+    one task per chunk instead of one task for the whole file (the XML
+    source cannot split a single file).  Each chunk is wrapped in its
+    own root; content between records stays inside exactly one chunk,
+    and rowTag scanning ignores it.  An export without Records gets one
+    empty-bodied chunk, which reads as the empty schema.
+
+    The Workout and ActivitySummary elements are carved out of each
+    segment between cuts (the preamble, each chunk, the tail) into
+    small side files, in document order.  Neither class contains a
+    Record and no raw '<' occurs inside an attribute value, so no such
+    element straddles a cut; an open-tag census checks that every
+    opened element was carved and raises otherwise.  Streaming,
+    sequential IO, memory bounded by one chunk plus the side classes —
+    the Spark-side analog of the reference's O(file) passes
+    (core.rs:52-73).  Returns the chunk dir."""
     size = os.path.getsize(export_xml)
-    n_target = n_target or min(64, max(2, 2 * (os.cpu_count() or 8)))
-    target = max(1 << 20, size // n_target)
-    if size < 2 << 20:
-        return None
+    n_target = min(64, max(2, 2 * (os.cpu_count() or 8)))
+    target = size if size < 2 << 20 else max(1 << 20, size // n_target)
     chunk_dir = os.path.join(out_dir, "records-chunks")
     os.makedirs(chunk_dir, exist_ok=True)
-    idx = 0
+    element = {k: _element_re(k) for k in _SIDE_FILES}
+    opener = {k: re.compile(rb"<" + k.encode() + rb"[\s/>]") for k in _SIDE_FILES}
+    carved: dict[str, list[bytes]] = {k: [] for k in _SIDE_FILES}
+    opened = dict.fromkeys(_SIDE_FILES, 0)
+    n_chunks = 0
+
+    def carve(segment: bytes) -> None:
+        for k in _SIDE_FILES:
+            carved[k] += (m.group(0) for m in element[k].finditer(segment))
+            opened[k] += len(opener[k].findall(segment))
 
     def flush(payload: bytes) -> None:
-        nonlocal idx
-        path = os.path.join(chunk_dir, f"records-{idx:05d}.xml")
+        nonlocal n_chunks
+        path = os.path.join(chunk_dir, f"records-{n_chunks:05d}.xml")
         with open(path, "wb") as out:
-            out.write(b"<HealthData>\n")
-            out.write(payload)
-            out.write(b"\n</HealthData>\n")
-        idx += 1
+            out.writelines((b"<HealthData>\n", payload, b"\n</HealthData>\n"))
+        n_chunks += 1
 
-    buf = b""
-    preamble_dropped = False
+    buf, in_records = b"", False
     with open(export_xml, "rb") as f:
-        while True:
-            block = f.read(16 << 20)
-            if not block:
-                break
+        while block := f.read(16 << 20):
             buf += block
-            if not preamble_dropped:
-                # drop declaration/DTD/<HealthData …> opener: each chunk
-                # gets its own root, and a second root (or a mid-file
-                # <?xml?>) is malformed XML the reader rejects
+            if not in_records:
+                # the declaration/DTD/<HealthData …> opener is carved,
+                # not copied: each chunk gets its own root, and a second
+                # root (or a mid-file <?xml?>) is malformed XML
                 first = buf.find(b"<Record ")
                 if first < 0:
                     continue
-                buf = buf[first:]
-                preamble_dropped = True
+                carve(buf[:first])
+                buf, in_records = buf[first:], True
             while len(buf) >= target + (1 << 16):
                 cut = buf.rfind(b"<Record ", 0, target)
                 if cut <= 0:
                     break  # no boundary in window; accumulate more
-                flush(buf[:cut])
-                buf = buf[cut:]
-    if not preamble_dropped:
-        return None  # no <Record> elements at all
-    # strip the original closing root tag (our wrapper adds its own)
+                segment, buf = buf[:cut], buf[cut:]
+                carve(segment)
+                flush(segment)
+    carve(buf)  # the tail, or the whole export when it has no Records
+    if not in_records:
+        buf = b""  # one empty-bodied chunk
+    # the last chunk loses the original closing root tag (flush adds one)
     end = buf.rfind(b"</HealthData>")
-    if end >= 0:
-        buf = buf[:end]
-    if buf.strip():
-        flush(buf)
-    return chunk_dir if idx > 1 else None
+    flush(buf[:end] if end >= 0 else buf)
+
+    for k, name in _SIDE_FILES.items():
+        if opened[k] != len(carved[k]):
+            raise ValueError(
+                f"{export_xml}: {opened[k]} <{k}> start tags but "
+                f"{len(carved[k])} complete {k} elements")
+        # NB: no leading underscore — Spark's file index treats _*/.*
+        # paths as hidden and silently reads nothing
+        with open(os.path.join(out_dir, name), "wb") as out:
+            out.write(b"<HealthData>\n")
+            out.writelines(el + b"\n" for el in carved[k])
+            out.write(b"</HealthData>\n")
+    return chunk_dir
 
 
 def stage_zip(zip_path: str, staging_dir: str) -> StagedExport:
     """A1: unpack export.zip to a staging directory (driver-side; the
     zip format is not splittable).  Mirrors reference core.rs:48-56 but
     once, up front — the reference re-opens the archive per route file
-    (core.rs:580-582).  The staging pass also carves the rare element
-    classes into side files (see _split_rare_classes) and re-chunks
-    the Records at element boundaries (see _chunk_records)."""
+    (core.rs:580-582).  One more pass over export.xml re-chunks the
+    Records and carves the rare element classes into side files (see
+    ``_stage_export_xml``)."""
     with zipfile.ZipFile(zip_path) as zf:
         safe = [n for n in zf.namelist()
                 if not (n.startswith("/") or ".." in n.split("/"))]
         zf.extractall(staging_dir, members=safe)
-    root = os.path.join(staging_dir, ARCHIVE_ROOT)
     export_xml = os.path.join(staging_dir, EXPORT_XML)
-    side = _split_rare_classes(export_xml, staging_dir)
     return StagedExport(
-        root=root,
         export_xml=export_xml,
-        routes_dir=os.path.join(root, "workout-routes"),
-        workouts_xml=side.get("Workout"),
-        summaries_xml=side.get("ActivitySummary"),
-        records_dir=_chunk_records(export_xml, staging_dir))
+        routes_dir=os.path.join(staging_dir, ARCHIVE_ROOT, "workout-routes"),
+        workouts_xml=os.path.join(staging_dir, _SIDE_FILES["Workout"]),
+        summaries_xml=os.path.join(staging_dir, _SIDE_FILES["ActivitySummary"]),
+        records_dir=_stage_export_xml(export_xml, staging_dir))
 
 
 def _strip_attr_prefix(df: DataFrame) -> DataFrame:
@@ -372,7 +334,7 @@ def read_gpx_routes(spark: SparkSession, routes_dir: str) -> DataFrame:
 
 
 def read_workouts(spark: SparkSession, xml_path: str,
-                  routes: DataFrame | None = None) -> DataFrame:
+                  routes: DataFrame) -> DataFrame:
     """<Workout> rows with the reference's three synthesized columns
     (core.rs:639-650): workoutEvents JSON array, workoutStatistics JSON
     object keyed by statistic type, geometry GeoJSON LineString.
@@ -439,13 +401,10 @@ def read_workouts(spark: SparkSession, xml_path: str,
                              F.lit(1))["FileReference"]["_path"])
     else:
         df = df.withColumn("route_path", F.lit(None).cast("string"))
-    if routes is not None:
-        df = (df.join(F.broadcast(routes), "route_path", "left")
-              .withColumn("geometry",
-                          F.coalesce(F.to_json("geometry"), F.lit("{}")))
-              .drop("n_points"))
-    else:
-        df = df.withColumn("geometry", F.lit("{}"))
+    df = (df.join(F.broadcast(routes), "route_path", "left")
+          .withColumn("geometry",
+                      F.coalesce(F.to_json("geometry"), F.lit("{}")))
+          .drop("n_points"))
 
     df = df.drop("__WorkoutEvent", "__WorkoutStatistics", "__WorkoutRoute")
     from ..operators.schema_infer import apply_inferred_types
@@ -511,20 +470,6 @@ def record_tables_onepass(records: DataFrame) -> dict[str, DataFrame]:
     return out
 
 
-def _record_tables(spark: SparkSession, records: DataFrame,
-                   staging_dir: str) -> dict[str, DataFrame]:
-    """The Record side of ``convert``/``convert_many``: materialize the
-    parsed, flattened Records to staging parquet, then fan out per type
-    (see ``convert``).  An export without <Record> elements reads with
-    an empty schema and contributes no table."""
-    if not records.columns:
-        return {}
-    # NB: no leading underscore — Spark's file index hides _* paths
-    staged_records = os.path.join(staging_dir, "records-staged.parquet")
-    records.write.mode("overwrite").parquet(staged_records)
-    return record_tables_onepass(spark.read.parquet(staged_records))
-
-
 def convert(spark: SparkSession, zip_path: str,
             staging_dir: str) -> dict[str, DataFrame]:
     """E1 end-to-end (reference main.rs:88 → core.rs:42-76): stage the
@@ -535,6 +480,10 @@ def convert(spark: SparkSession, zip_path: str,
     tables come from its pass-1 schema map, which holds only classes it
     saw; SURVEY.md §1.3); the XML reader's empty schema says so without
     an extra job.
+
+    Staging (``stage_zip``) leaves exactly three inputs: the Record
+    chunk dir and the two rare-class side files; every element class
+    is read from its own input, never from the whole export.xml.
 
     The parsed Record relation is materialized to staging parquet
     before the table-per-type fan-out.  The fan-out makes a schema
@@ -562,18 +511,21 @@ def convert(spark: SparkSession, zip_path: str,
     # scans its whole input; don't make it the full archive)
     def _workouts() -> DataFrame:
         routes = read_gpx_routes(spark, staged.routes_dir)
-        return read_workouts(
-            spark, staged.workouts_xml or staged.export_xml, routes)
+        return read_workouts(spark, staged.workouts_xml, routes)
 
     def _summaries() -> DataFrame:
-        return read_activity_summaries(
-            spark, staged.summaries_xml or staged.export_xml)
+        return read_activity_summaries(spark, staged.summaries_xml)
 
     # records read from the boundary-safe chunk dir → one parse task
     # per chunk (a single export.xml would parse on one task)
     def _records() -> dict[str, DataFrame]:
-        records = read_records(spark, staged.records_dir or staged.export_xml)
-        return _record_tables(spark, records, staging_dir)
+        records = read_records(spark, staged.records_dir)
+        if not records.columns:
+            return {}
+        # NB: no leading underscore — Spark's file index hides _* paths
+        staged_records = os.path.join(staging_dir, "records-staged.parquet")
+        records.write.mode("overwrite").parquet(staged_records)
+        return record_tables_onepass(spark.read.parquet(staged_records))
 
     out: dict[str, DataFrame] = {}
     with ThreadPoolExecutor(max_workers=3) as ex:
@@ -585,68 +537,4 @@ def convert(spark: SparkSession, zip_path: str,
             if df.columns:
                 out[name] = df
         out.update(fr.result())
-    return out
-
-
-def convert_many(spark: SparkSession, zip_paths: list[str],
-                 staging_dir: str) -> dict[str, DataFrame]:
-    """Fleet ingest: N export archives → ONE logical catalog, each row
-    tagged with its archive stem in an ``archive`` column.
-
-    This is the shape the 100 TB deployment actually runs — thousands
-    of per-user archives, not one file.  Staging (unzip + rare-class
-    split + record chunking) is per-archive driver work, trivially
-    farmed out; every Spark job then runs ONCE over the union:
-    - Record chunks from all archives are read in a single multi-path
-      XML scan (one task per chunk file, cross-archive parallelism —
-      unionByName of per-archive reads would instead plan N separate
-      scans);
-    - schema votes/fan-out, workout restructuring, and route joins are
-      single jobs over the union, so per-archive fixed cost is paid in
-      the driver loop only, never per Spark job.
-    allowMissingColumns handles archives whose attribute sets differ
-    (the union schema is the per-column union, exactly the reference's
-    schema-map union semantics, core.rs:216-227)."""
-    out: dict[str, DataFrame] = {}
-    record_dirs: list[str] = []
-    workouts = []
-    summaries = []
-    for zp in zip_paths:
-        stem = os.path.splitext(os.path.basename(zp))[0]
-        sub = os.path.join(staging_dir, stem)
-        staged = stage_zip(zp, sub)
-        routes = read_gpx_routes(spark, staged.routes_dir)
-        # an archive without the class reads with an empty schema and
-        # adds nothing to the union
-        w = read_workouts(spark, staged.workouts_xml or staged.export_xml,
-                          routes)
-        if w.columns:
-            workouts.append(w.withColumn("archive", F.lit(stem)))
-        s = read_activity_summaries(
-            spark, staged.summaries_xml or staged.export_xml)
-        if s.columns:
-            summaries.append(s.withColumn("archive", F.lit(stem)))
-        record_dirs.append(staged.records_dir or staged.export_xml)
-
-    def union_all(dfs):
-        acc = dfs[0]
-        for d in dfs[1:]:
-            acc = acc.unionByName(d, allowMissingColumns=True)
-        return acc
-
-    if workouts:
-        out["Workout"] = union_all(workouts)
-    if summaries:
-        out["ActivitySummary"] = union_all(summaries)
-    # one multi-path scan for ALL archives' record chunks; archive
-    # recovered from the file path (no per-archive read loop)
-    records = read_element(spark, record_dirs, "Record")
-    if records.columns:
-        chunked = F.regexp_extract(F.col("_metadata.file_path"),
-                                   r"([^/]+)/records-chunks/", 1)
-        whole = F.regexp_extract(F.col("_metadata.file_path"),
-                                 r"([^/]+)/apple_health_export/", 1)
-        records = records.withColumn(
-            "archive", F.when(chunked != "", chunked).otherwise(whole))
-    out.update(_record_tables(spark, flatten_metadata(records), staging_dir))
     return out

@@ -1,5 +1,6 @@
 """Package hygiene, checked on the source AST: the package reports
-through ``logging`` (only the CLI entry point prints), and it guards
+through ``logging`` (only the CLI entry point prints, and nothing
+calls ``warnings.warn``), and it guards
 with exceptions, never with ``assert`` — asserts vanish under
 ``python -O`` and, inside an Arrow worker closure, fail as an opaque
 worker crash far from the cause."""
@@ -23,6 +24,11 @@ def _offences():
                   and node.func.id == "print"
                   and path.name != "__main__.py"):
                 yield f"{rel}:{node.lineno}: print() call"
+            elif (isinstance(node, ast.Call)
+                  and isinstance(node.func, ast.Attribute)
+                  and isinstance(node.func.value, ast.Name)
+                  and (node.func.value.id, node.func.attr) == ("warnings", "warn")):
+                yield f"{rel}:{node.lineno}: warnings.warn() call"
 
 
 def test_package_has_no_print_or_assert():

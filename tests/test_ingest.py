@@ -199,64 +199,92 @@ def test_offset_timestamps_keep_local_wall_clock(spark):
     assert vals == ["2020-03-01 23:30:00", "2020-03-02 01:00:00"]
 
 
-def test_rare_class_split_detects_boundary_loss(tmp_path):
-    """A Workout longer than the overlap window that straddles a chunk
-    boundary cannot be captured by the span regex; the open-tag census
-    must detect the miss and abandon the side file (callers then read
-    the class from the full export.xml) instead of silently dropping
-    rows."""
+def _export_zip(tmp_path, xml: str) -> str:
+    """An export.zip holding just ``xml`` as its export.xml."""
+    zp = tmp_path / "export.zip"
+    with zipfile.ZipFile(zp, "w") as zf:
+        zf.writestr("apple_health_export/export.xml", xml)
+    return str(zp)
+
+
+def _record(i: int) -> str:
+    return (f'<Record type="HKQuantityTypeIdentifierStepCount" id="r{i}" '
+            f'value="{i}" startDate="2022-12-16 08:00:00 -0800"/>')
+
+
+def test_stage_carves_every_rare_element_once_in_document_order(tmp_path):
+    """Staging is one pass that cuts Record chunks and carves the rare
+    classes out of every segment between cuts: an ActivitySummary in
+    the preamble, a Workout inside an early chunk, a Workout with a
+    1 MiB attribute between Records, and a self-closing Workout whose
+    quoted value holds '>' and '/' right before a second Workout.  Each
+    lands in its side file exactly once, in document order; the chunks
+    hold every Record exactly once."""
+    import xml.etree.ElementTree as ET
+    from healthkit_to_sqlite_spark.sources.healthkit import stage_zip
+
+    n = 24_000
+    s0 = '<ActivitySummary id="s0" dateComponents="2020-01-01"/>'
+    wa = '<Workout id="wa" workoutActivityType="C"/>'
+    w0 = f'<Workout id="w0" note="{"x" * (1 << 20)}"></Workout>'
+    w1 = '<Workout id="w1" device="a>b/" workoutActivityType="A"/>'
+    w2 = ('<Workout id="w2" workoutActivityType="B">'
+          '<WorkoutEvent type="E"/></Workout>')
+    s1 = '<ActivitySummary id="s1" dateComponents="2020-01-02"/>'
+    body = ([s0] + [_record(i) for i in range(n // 2)] + [wa]
+            + [_record(i) for i in range(n // 2, n - 100)] + [w0]
+            + [_record(i) for i in range(n - 100, n)] + [w1, w2, s1])
+    xml = ('<?xml version="1.0" encoding="UTF-8"?>\n'
+           '<HealthData locale="en_US">\n' + "\n".join(body)
+           + "\n</HealthData>\n")
+    assert len(xml) > 2 << 20
+    staged = stage_zip(_export_zip(tmp_path, xml), str(tmp_path / "staging"))
+
+    def side(*els: str) -> str:
+        return "<HealthData>\n" + "".join(e + "\n" for e in els) + "</HealthData>\n"
+
+    assert Path(staged.workouts_xml).read_text() == side(wa, w0, w1, w2)
+    assert Path(staged.summaries_xml).read_text() == side(s0, s1)
+
+    chunks = sorted(Path(staged.records_dir).iterdir())
+    assert len(chunks) >= 3
+    assert 'id="wa"' in chunks[1].read_text()  # carved from a middle chunk
+    ids = [r.get("id") for c in chunks
+           for r in ET.parse(c).getroot().findall("Record")]
+    assert ids == [f"r{i}" for i in range(n)]
+
+
+def test_stage_unclosed_rare_element_raises(tmp_path):
+    """A Workout that never closes is not carved: the open-tag census
+    raises, naming the class, instead of dropping the element."""
+    from healthkit_to_sqlite_spark.sources.healthkit import stage_zip
+
+    xml = ("<HealthData>\n" + _record(0) + "\n"
+           '<Workout workoutActivityType="A"><WorkoutEvent type="E"/>\n'
+           "</HealthData>\n")
+    with pytest.raises(ValueError, match="Workout"):
+        stage_zip(_export_zip(tmp_path, xml), str(tmp_path / "staging"))
+
+
+def test_stage_fixture_zip_is_one_chunk_read_like_export_xml(
+        spark, hk_zip, tmp_path):
+    """An export under 2 MiB stages to one chunk, and the Record read of
+    that chunk gives the rows a read of export.xml gives."""
     from healthkit_to_sqlite_spark.sources.healthkit import (
-        _split_rare_classes)
-    big = "x" * 3000  # element body ≫ the (test-sized) overlap
-    xml = (
-        "<HealthData>\n"
-        + "<pad>" + "p" * 2000 + "</pad>\n"
-        + f'<Workout workoutActivityType="A" note="{big}"></Workout>\n'
-        + '<ActivitySummary dateComponents="2020-01-01"/>\n'
-        + "</HealthData>\n")
-    p = tmp_path / "export.xml"
-    p.write_text(xml)
-    import warnings as _w
-    with _w.catch_warnings(record=True) as caught:
-        _w.simplefilter("always")
-        outs = _split_rare_classes(str(p), str(tmp_path),
-                                   chunk_size=4096, overlap=512)
-    assert "Workout" not in outs          # loss detected → no side file
-    assert "ActivitySummary" in outs      # unaffected class still split
-    assert any("Workout" in str(w.message) for w in caught)
+        read_records, stage_zip)
 
-    # sanity: with a big-enough overlap the same file splits cleanly
-    ok_dir = tmp_path / "ok"
-    ok_dir.mkdir()
-    outs2 = _split_rare_classes(str(p), str(ok_dir),
-                                chunk_size=4096, overlap=4096)
-    assert "Workout" in outs2
+    staged = stage_zip(hk_zip, str(tmp_path / "staging"))
+    assert sorted(p.name for p in Path(staged.records_dir).iterdir()) == [
+        "records-00000.xml"]
 
+    def rows(path: str):
+        df = read_records(spark, path)
+        return sorted(df.columns), sorted(
+            df.select(sorted(df.columns)).collect(), key=repr)
 
-def test_convert_many_archives(spark, tmp_path_factory):
-    """Fleet ingest: two archives → one catalog, every row tagged with
-    its archive stem; per-type tables hold the union of both."""
-    from tests.hk_fixture import build_export_zip
-    from healthkit_to_sqlite_spark.sources.healthkit import convert_many
-
-    d = tmp_path_factory.mktemp("fleet")
-    zips = [build_export_zip(str(d / f"user{i}.zip")) for i in (1, 2)]
-    tables = convert_many(spark, zips, str(d / "staging"))
-
-    assert {"Workout", "ActivitySummary",
-            "HKQuantityTypeIdentifierWalkingSpeed",
-            "HKQuantityTypeIdentifierStepCount"} <= set(tables)
-    # both archives contribute; archive column distinguishes them
-    w = tables["Workout"]
-    assert w.count() == 4  # 2 workouts per archive
-    assert ({r[0] for r in w.select("archive").distinct().collect()}
-            == {"user1", "user2"})
-    steps = tables["HKQuantityTypeIdentifierStepCount"]
-    assert steps.count() == 4  # 2 step records per archive
-    per_archive = dict(steps.groupBy("archive").count().collect())
-    assert per_archive == {"user1": 2, "user2": 2}
-    # typed columns survive the union + fan-out
-    assert dict(steps.dtypes)["value"] == "bigint"
+    chunk_rows = rows(staged.records_dir)
+    assert len(chunk_rows[1]) == 5
+    assert chunk_rows == rows(staged.export_xml)
 
 
 def test_read_records_unescapes_attribute_entities(spark, tmp_path):

@@ -149,7 +149,7 @@ def test_streaming_record_ingest_matches_batch(spark, tmp_path):
 
     zp = build_export_zip(str(tmp_path / "export.zip"))
     staged = stage_zip(zp, str(tmp_path / "staging"))
-    sample = staged.records_dir or staged.export_xml
+    sample = staged.records_dir
 
     plan = plan_record_ingest(spark, sample)
     assert plan.casts.get("value") == "REAL"  # widened across types
@@ -158,12 +158,8 @@ def test_streaming_record_ingest_matches_batch(spark, tmp_path):
     # drop dir receives the staged xml as if an archive just landed
     drop = tmp_path / "drop"
     drop.mkdir()
-    src = sample if os.path.isfile(sample) else None
-    if src:
-        shutil.copy(src, drop / "chunk-000.xml")
-    else:
-        for n in os.listdir(sample):
-            shutil.copy(os.path.join(sample, n), drop / n)
+    for n in os.listdir(sample):
+        shutil.copy(os.path.join(sample, n), drop / n)
 
     out = str(tmp_path / "ingested")
     q = start_record_ingest(spark, str(drop), out,
