@@ -15,7 +15,9 @@ implements the documented divergence (SURVEY.md §1.2, §4.4-2):
   aggregate pass (max over tag rank) instead of a first() race.
 
 Used by sources/healthkit.py and streaming/ingest.py to type raw XML
-attribute strings; ``vote_column_types`` is the one schema vote both run.
+attribute strings: ``infer_column_types`` (the kernel ``q_schema_unify``
+checks against the oracle) is every table's one schema vote, and
+``select_typed`` builds every output table.
 """
 
 from __future__ import annotations
@@ -97,7 +99,7 @@ def unify_tags(tag: Column) -> Column:
 CAST_TARGETS = {"INTEGER": "bigint", "REAL": "double",
                 "DATE": "date", "TIMESTAMP": "timestamp"}
 
-def cast_to_tag(col: Column, tag: str) -> Column | None:
+def cast_to_tag(col: Column, tag: str | None) -> Column | None:
     """Cast a raw string column to its unified tag's Spark type; None
     for TEXT/unknown (leave the string column as is).
 
@@ -127,69 +129,76 @@ def cast_to_tag(col: Column, tag: str) -> Column | None:
     return col.cast(target)
 
 
-def vote_column_types(df: DataFrame, cols: list[str], key: str | None = None
-                      ) -> dict[object, dict[str, tuple[str, int]]]:
-    """The pass-1 schema vote: every column's widening-unified tag and
-    non-null count, per value of ``key`` (or over the whole frame when
-    ``key`` is None), in ONE aggregate job.
-
-    Returns ``{key value: {column: (tag, non-null count)}}``; the
-    ungrouped vote has the single key None.  The collect is bounded by
-    the key's cardinality (one row per HealthKit type, ~100s).
-
-    This is the distributed replacement for the reference's pass-1
-    sequential schema scan (core.rs:85-132): commutative aggregates,
-    so partial aggregation handles any partitioning."""
-    # tag each value ONCE in a projection, then aggregate the cheap tag
-    # columns: unify_tags references its input in every when-branch,
-    # and codegen does not CSE across conditional branches — inlining
-    # type_tag would re-run the try-cast cascade per branch (measured
-    # 8× slower at 400k rows, and 7s of plan time at ~25 columns on
-    # the Workout read).  A tag is NULL exactly when its value is, so
-    # count(tag) is the column's non-null count.
-    proj = [F.col(key)] if key is not None else []
-    proj += [type_tag(F.col(c)).alias(f"g{i}") for i, c in enumerate(cols)]
-    aggs = []
-    for i in range(len(cols)):
-        aggs.append(unify_tags(F.col(f"g{i}")).alias(f"t{i}"))
-        aggs.append(F.count(F.col(f"g{i}")).alias(f"n{i}"))
-    tagged = df.select(*proj)
-    rows = (tagged.groupBy(key) if key is not None else tagged).agg(*aggs).collect()
-    return {row[key] if key is not None else None:
-            {c: (row[f"t{i}"], row[f"n{i}"]) for i, c in enumerate(cols)}
-            for row in rows}
+#: the Record/Workout child that carries per-row metadata; staged and
+#: voted as one map<string,string> column (reference core.rs:452-474)
+METADATA = "MetadataEntry"
 
 
-def apply_inferred_types(df: DataFrame,
-                         cols: list[str] | None = None) -> DataFrame:
-    """Infer-and-cast string columns in ONE aggregate pass.
-
-    Per column: widening-unified tag (INTEGER/REAL/DATE/TIMESTAMP/TEXT)
-    from ``vote_column_types``; then cast each column to its tag's
-    Spark type.  (Per-type all-null column pruning — the reference
-    never creates a column it never saw, core.rs:216-227 — lives in
-    `record_tables_onepass`.)"""
-    if cols is None:
-        cols = [f.name for f in df.schema.fields
-                if isinstance(f.dataType, T.StringType)]
-    if not cols:
-        return df
-    votes = vote_column_types(df, cols)[None]
-    for c in cols:
-        casted = cast_to_tag(F.col(c), votes[c][0])
-        if casted is not None:
-            df = df.withColumn(c, casted)
-    return df
+def long_form(df: DataFrame, key: str | None = None) -> DataFrame:
+    """The pass-1 input of ``df`` as long-form ``(key, col_name, value)``
+    rows: the unpivot of every string column but ``key``, plus the
+    entries of its MetadataEntry map as ``("metadata_" || key, value)``
+    pairs.  Null map values are kept, so a metadata key seen only
+    without a value still names a column."""
+    keys = [key] if key is not None else []
+    kv = df.unpivot(keys, [f.name for f in df.schema.fields if f.name != key
+                           and isinstance(f.dataType, T.StringType)],
+                    "col_name", "value")
+    if METADATA not in df.columns:
+        return kv
+    md = df.select(*keys, F.explode(METADATA).alias("k", "value"))
+    return kv.unionByName(md.select(
+        *keys, F.concat(F.lit("metadata_"), "k").alias("col_name"), "value"))
 
 
-def infer_column_types(kv: DataFrame) -> DataFrame:
-    """Pass-1 analog of the reference (core.rs:85-132): from a long-form
-    (col_name, raw string value) relation, produce (col_name, unified
-    type).  One aggregate pass; contrast with the reference's
-    sequential first-seen scan."""
-    return (kv.select("col_name", type_tag(F.col("value")).alias("tag"))
-            .groupBy("col_name")
-            .agg(unify_tags(F.col("tag")).alias("inferred_type")))
+def infer_column_types(kv: DataFrame, key: str | None = None) -> DataFrame:
+    """The one schema vote, pass 1 of the reference (core.rs:85-132) as
+    one aggregate: from a long-form ``(key, col_name, value)`` relation,
+    each column's widening-unified tag (``inferred_type``) and non-null
+    count (``nonnull``: a tag is NULL exactly when its value is), per
+    ``key`` value or overall.  Commutative, so partial aggregation
+    handles any partitioning, unlike the reference's first-seen scan."""
+    # tag each value ONCE in a projection, then aggregate the tag:
+    # unify_tags references its input in every when-branch, and codegen
+    # does not CSE across branches (inlining type_tag measured 8× slower)
+    keys = [key] if key is not None else []
+    return (kv.select(*keys, "col_name", type_tag(F.col("value")).alias("tag"))
+            .groupBy(*keys, "col_name")
+            .agg(unify_tags(F.col("tag")).alias("inferred_type"),
+                 F.count(F.col("tag")).alias("nonnull")))
+
+
+def metadata_keys_among(names, cols: list[str]) -> list[str]:
+    """The MetadataEntry keys behind the vote's column ``names``: those
+    not among the frame's columns ``cols``, sorted, without the
+    ``metadata_`` prefix ``long_form`` gave them."""
+    return sorted(n[len("metadata_"):] for n in names if n not in cols)
+
+
+def select_typed(df: DataFrame, cols: list[str], metadata_keys: list[str],
+                 tags: dict[str, str]) -> DataFrame:
+    """Build one output table in ONE select: the columns ``cols`` in
+    order, then ``metadata_<key>`` for each of ``metadata_keys``, read
+    from the MetadataEntry map.  Each is cast to its tag in ``tags``
+    (``cast_to_tag``); TEXT or untagged columns pass through as is."""
+    def typed(col: Column, name: str) -> Column:
+        casted = cast_to_tag(col, tags.get(name))
+        return (col if casted is None else casted).alias(name)
+    return df.select(*[typed(F.col(c), c) for c in cols],
+                     *[typed(F.col(METADATA).getItem(k), f"metadata_{k}")
+                       for k in metadata_keys])
+
+
+def apply_inferred_types(df: DataFrame) -> DataFrame:
+    """Infer-and-cast ``df``'s string columns in ONE aggregate pass, its
+    MetadataEntry map flattened to ``metadata_<key>`` columns (every key
+    seen, sorted, after the other columns).  (Per-type all-null column
+    pruning — the reference never creates a column it never saw,
+    core.rs:216-227 — lives in ``record_tables_onepass``.)"""
+    votes = {r["col_name"]: r["inferred_type"]
+             for r in infer_column_types(long_form(df)).collect()}
+    cols = [c for c in df.columns if c != METADATA]
+    return select_typed(df, cols, metadata_keys_among(votes, cols), votes)
 
 
 def _event_long_form(events: DataFrame) -> DataFrame:
@@ -219,7 +228,8 @@ def classify_event_values(events: DataFrame) -> DataFrame:
 def infer_event_schema(events: DataFrame) -> DataFrame:
     """End-to-end inference over the same long-form values: one row per
     derived column with its widened type."""
-    return infer_column_types(_event_long_form(events))
+    return infer_column_types(_event_long_form(events)).select(
+        "col_name", "inferred_type")
 
 
 _CASCADE_SQL = """

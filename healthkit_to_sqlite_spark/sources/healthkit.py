@@ -17,23 +17,26 @@ Spark-native re-expression:
   the Records at element boundaries and carves the rare classes
   (Workout, ActivitySummary) into small side files; every subsequent
   step is distributed.
-- ONE schema-inferring distributed read per element class via the
-  native XML source (rowTag=Record/Workout/ActivitySummary) replaces
-  both streaming passes; the reader's inference implements the
-  *widening* policy we chose over the reference's first-seen-wins
-  (SURVEY.md §1.2, §4.4-2).
-- MetadataEntry flatten = map_from_entries + per-key projection
-  (LAST_WIN dedup conf replaces the reference's duplicate-column
-  INSERT quirk, §4.4-5).
+- ONE distributed read per element class via the native XML source
+  (rowTag=Record/Workout/ActivitySummary, raw strings) replaces both
+  streaming passes.  Pass 1 is one schema vote per class
+  (operators.schema_infer.infer_column_types over the class's long
+  form); it implements the *widening* policy we chose over the
+  reference's first-seen-wins (SURVEY.md §1.2, §4.4-2).
+- MetadataEntry = one map_from_entries column (LAST_WIN dedup conf
+  replaces the reference's duplicate-column INSERT quirk, §4.4-5).
+  Its entries join the vote's long form, so the vote also finds the
+  metadata key set; no separate key census and no third parse.
 - Workout children = struct/array transforms + to_json at the edge.
 - Route join = a real equi-join against a GPX DataFrame (broadcast;
   route sets are small) instead of per-row random zip access.
-- table-per-type fan-out (A4) = one schema vote over the staged
-  Record parquet, then one filtered projection per type.
+- table-per-type fan-out (A4) = one schema vote grouped by type over
+  the staged Record parquet, then one filtered select per type.  Every
+  output table is one ``select_typed`` projection.
 
 Driver-side row handling is limited to the staging pass and the
-bounded distinct metadata-key / record-type collections (cardinality
-~100s — the same bound the reference's BTreeMap schema carries).
+bounded vote collect (one row per table and column, ~100s of types —
+the same bound the reference's BTreeMap schema carries).
 """
 
 from __future__ import annotations
@@ -91,7 +94,9 @@ def _stage_export_xml(export_xml: str, out_dir: str) -> str:
     staging: the Record chunk files and the rare-class side files.
 
     Records are re-chunked into ~2×cpus files (one file under 2 MiB),
-    cutting only at ``<Record `` starts, so the Record rowTag read runs
+    cutting only at ``<Record `` starts — the last one inside the
+    target window, or the first one after it when a large non-Record
+    element fills the window — so the Record rowTag read runs
     one task per chunk instead of one task for the whole file (the XML
     source cannot split a single file).  Each chunk is wrapped in its
     own root; content between records stays inside exactly one chunk,
@@ -145,8 +150,10 @@ def _stage_export_xml(export_xml: str, out_dir: str) -> str:
                 buf, in_records = buf[first:], True
             while len(buf) >= target + (1 << 16):
                 cut = buf.rfind(b"<Record ", 0, target)
-                if cut <= 0:
-                    break  # no boundary in window; accumulate more
+                if cut <= 0:  # no boundary in the window: take the next
+                    cut = buf.find(b"<Record ", target)
+                    if cut < 0:
+                        break  # none buffered yet; accumulate more
                 segment, buf = buf[:cut], buf[cut:]
                 carve(segment)
                 flush(segment)
@@ -194,10 +201,8 @@ def stage_zip(zip_path: str, staging_dir: str) -> StagedExport:
 def _strip_attr_prefix(df: DataFrame) -> DataFrame:
     """XML attributes arrive as ``_name``; surface them as ``name``
     (reference stores bare attribute names, core.rs:216-227)."""
-    renames = {c: c[1:] for c in df.columns if c.startswith("_")}
-    for old, new in renames.items():
-        df = df.withColumnRenamed(old, new)
-    return df
+    return df.withColumnsRenamed(
+        {c: c[1:] for c in df.columns if c.startswith("_")})
 
 
 def _as_array(df: DataFrame, col: str) -> DataFrame:
@@ -237,56 +242,36 @@ def read_element(spark: SparkSession, xml_path: str, row_tag: str) -> DataFrame:
     return _strip_attr_prefix(df)
 
 
-def _metadata_map(col: str = "MetadataEntry"):
-    """MetadataEntry array → map.  LAST_WIN dedup (session conf) gives
-    the deterministic duplicate-key policy the reference lacks
-    (core.rs:468-472 appends duplicate columns; SURVEY.md §4.4-5)."""
-    return F.map_from_entries(
-        F.transform(F.col(col),
-                    lambda m: F.struct(m["_key"].alias("key"),
-                                       m["_value"].cast("string").alias("value"))))
-
-
-def metadata_keys(df: DataFrame) -> list[str]:
-    """The sorted distinct MetadataEntry key set, in one collect
-    (bounded: same cardinality the reference's schema BTreeMap holds in
-    memory, core.rs:231-257)."""
-    if "MetadataEntry" not in df.columns:
-        return []
-    md = _as_array(df, "MetadataEntry").select(
-        F.explode(F.map_keys(_metadata_map())).alias("k"))
-    return [r[0] for r in md.distinct().orderBy("k").collect()]
-
-
-def flatten_metadata(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    """A6: pivot metadata entries to ``metadata_<key>`` wide columns.
-
-    ``keys=None`` runs the ``metadata_keys`` census first.  Pass
-    explicit keys in pipelines that must avoid the extra job."""
+def _metadata_as_map(df: DataFrame) -> DataFrame:
+    """A6: MetadataEntry children → one map<string,string> column, which
+    ``select_typed`` pivots to ``metadata_<key>`` columns.  LAST_WIN
+    dedup (session conf) gives the deterministic duplicate-key policy
+    the reference lacks (core.rs:468-472; SURVEY.md §4.4-5)."""
     if "MetadataEntry" not in df.columns:
         return df
-    if keys is None:
-        keys = metadata_keys(df)
-    df = _as_array(df, "MetadataEntry")
-    df = df.withColumn("__md", _metadata_map())
-    for k in keys:
-        df = df.withColumn(f"metadata_{k}", F.col("__md").getItem(k))
-    return df.drop("__md", "MetadataEntry")
+    return _as_array(df, "MetadataEntry").withColumn(
+        "MetadataEntry", F.map_from_entries(F.transform(
+            F.col("MetadataEntry"),
+            lambda m: F.struct(m["_key"].alias("key"),
+                               m["_value"].cast("string").alias("value")))))
 
 
 def read_records(spark: SparkSession, xml_path: str) -> DataFrame:
-    """All <Record> rows, metadata flattened, with their ``type``
-    discriminator (table name in the reference, core.rs:311-313).
-    Columns stay raw strings here; typing happens per type-table in
-    ``record_tables_onepass`` (per-table schemas, core.rs:216-227)."""
-    return flatten_metadata(read_element(spark, xml_path, "Record"))
+    """All <Record> rows with their ``type`` discriminator (table name
+    in the reference, core.rs:311-313) and MetadataEntry as a map.
+    Columns stay raw strings here; typing and the metadata pivot happen
+    per type-table in ``record_tables_onepass`` (per-table schemas,
+    core.rs:216-227)."""
+    return _metadata_as_map(read_element(spark, xml_path, "Record"))
 
 
 def read_activity_summaries(spark: SparkSession, xml_path: str) -> DataFrame:
     """<ActivitySummary> rows (fixed table, core.rs:23, 358-365),
-    typed by the widening cascade."""
+    typed by the widening cascade.  An export without them reads with
+    an empty schema, returned as is."""
     from ..operators.schema_infer import apply_inferred_types
-    return apply_inferred_types(read_element(spark, xml_path, "ActivitySummary"))
+    df = read_element(spark, xml_path, "ActivitySummary")
+    return apply_inferred_types(df) if df.columns else df
 
 
 def read_gpx_routes(spark: SparkSession, routes_dir: str) -> DataFrame:
@@ -351,9 +336,9 @@ def read_workouts(spark: SparkSession, xml_path: str,
     # raw child columns get __-prefixed temp names: Spark resolves
     # column names case-insensitively, so raw `WorkoutStatistics` would
     # collide with the synthesized `workoutStatistics`
-    for raw in ("WorkoutEvent", "WorkoutStatistics", "WorkoutRoute"):
-        if raw in df.columns:
-            df = df.withColumnRenamed(raw, f"__{raw}")
+    df = df.withColumnsRenamed(
+        {raw: f"__{raw}" for raw in ("WorkoutEvent", "WorkoutStatistics",
+                                     "WorkoutRoute") if raw in df.columns})
 
     # --- workoutEvents: ordered JSON array (A7; core.rs:541-543) ---
     # every attribute passes through (no fixed list); values follow the
@@ -408,10 +393,9 @@ def read_workouts(spark: SparkSession, xml_path: str,
 
     df = df.drop("__WorkoutEvent", "__WorkoutStatistics", "__WorkoutRoute")
     from ..operators.schema_infer import apply_inferred_types
-    df = flatten_metadata(df)
     # type the scalar attribute + metadata columns; the synthesized
     # JSON columns classify as TEXT and stay strings
-    return apply_inferred_types(df)
+    return apply_inferred_types(_metadata_as_map(df))
 
 
 #: a complete quoted JSON *value* that is a valid JSON number literal;
@@ -446,27 +430,26 @@ def _struct_fields(df: DataFrame, col: str) -> set[str]:
 
 def record_tables_onepass(records: DataFrame) -> dict[str, DataFrame]:
     """A4 fan-out with schema votes for ALL types in ONE aggregate:
-    ``groupBy(type)`` computing every column's unified tag + non-null
-    count simultaneously (one scan, partial-aggregated map-side),
-    instead of one inference pass per type (N extra scans for N
-    types).  All-null columns are pruned per type (the reference's
-    per-table column sets); the collect is bounded at one row per HK
-    type (~100s)."""
-    from ..operators.schema_infer import cast_to_tag, vote_column_types
+    ``infer_column_types`` grouped by ``type`` (one scan) gives each
+    (type, column) its tag and non-null count, and the metadata keys
+    with them.  All-null columns are pruned per type (core.rs:216-227);
+    each table is one ``select_typed`` of ``type``, the string columns
+    in schema order, then the metadata columns in key order."""
+    from ..operators.schema_infer import (
+        infer_column_types, long_form, metadata_keys_among, select_typed)
 
+    votes: dict[str, dict[str, str]] = {}
+    for r in infer_column_types(long_form(records, "type"), "type").collect():
+        tags = votes.setdefault(r["type"], {})
+        if r["nonnull"]:
+            tags[r["col_name"]] = r["inferred_type"]
     str_cols = [f.name for f in records.schema.fields
                 if isinstance(f.dataType, T.StringType) and f.name != "type"]
-    votes = vote_column_types(records, str_cols, key="type")
-
     out: dict[str, DataFrame] = {}
-    for t in sorted(votes):
-        proj = [F.col("type")]
-        for c, (tag, nonnull) in votes[t].items():
-            if nonnull == 0:
-                continue  # column never seen for this type (core.rs:216-227)
-            casted = cast_to_tag(F.col(c), tag)
-            proj.append(casted.alias(c) if casted is not None else F.col(c))
-        out[t] = records.filter(F.col("type") == t).select(*proj)
+    for t, tags in sorted(votes.items()):
+        out[t] = select_typed(records.filter(F.col("type") == t),
+                              ["type", *[c for c in str_cols if c in tags]],
+                              metadata_keys_among(tags, str_cols), tags)
     return out
 
 
@@ -495,12 +478,12 @@ def convert(spark: SparkSession, zip_path: str,
     choice).
 
     The three element-class pipelines (workouts+routes / summaries /
-    records) are independent, but each fires several small BLOCKING
-    driver jobs (XML structure discovery, metadata key census, schema
-    votes) whose fixed latency — not data volume — dominates the rare
-    classes.  They run on three threads so the Spark scheduler
-    interleaves those jobs instead of serializing ~6 back-to-back
-    round-trips (same-JVM A/B at 400k records incl. forcing all 6
+    records) are independent, but each fires small BLOCKING driver
+    jobs (XML structure discovery, then one schema vote that also
+    finds the metadata keys) whose fixed latency — not data volume —
+    dominates the rare classes.  They run on three threads so the
+    Spark scheduler interleaves those jobs instead of serializing
+    back-to-back round-trips (same-JVM A/B at 400k records incl. forcing all 6
     tables: 7.5→3.7s first run, 4.7→2.8s repeat; identical outputs —
     threads only submit jobs)."""
     from concurrent.futures import ThreadPoolExecutor

@@ -5,18 +5,20 @@ The reference scans the XML twice: pass 1 infers the schema, pass 2
 inserts rows.  The streaming analog keeps exactly that split, but
 pass 2 never ends:
 
-- **Pass 1 (batch, bounded)**: infer the raw XML field set, the
-  widening type votes, and the metadata key set from the archive(s)
-  staged so far — `plan_record_ingest`.  This is the same O(sample)
-  work the reference's pass 1 does (core.rs:85-132), and its output is
-  a plain serializable plan (schema + casts + keys).
+- **Pass 1 (batch, bounded)**: infer the raw XML field set, then run
+  the one schema vote (`operators.schema_infer.infer_column_types`,
+  the kernel batch ingest runs) over the sample's long form, which
+  gives the widening types and the metadata key set together —
+  `plan_record_ingest`.  This is the same O(sample) work the
+  reference's pass 1 does (core.rs:85-132), and its output is a plain
+  serializable plan (schema + casts + keys).
 - **Pass 2 (Structured Streaming, unbounded)**: `records_stream` tails
   a drop directory of record-chunk XML files (the unit `stage_zip`
-  already produces per archive); each micro-batch parses, flattens
-  metadata against the FIXED key set, applies the FIXED casts, and
-  appends to a `type`-partitioned parquet table — the incremental
-  table-per-type fan-out (A4, core.rs:311-313) with exactly-once file
-  sink semantics via the checkpoint.
+  already produces per archive); each micro-batch parses, then one
+  `select_typed` pivots metadata against the FIXED key set and applies
+  the FIXED casts, and it appends to a `type`-partitioned parquet
+  table — the incremental table-per-type fan-out (A4, core.rs:311-313)
+  with exactly-once file sink semantics via the checkpoint.
 
 Scale notes: the stream shuffles nothing — parse, cast, and
 partitioned append are all map-side; throughput scales with source
@@ -32,7 +34,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import configure
@@ -49,43 +50,43 @@ class RecordIngestPlan:
 def plan_record_ingest(spark: SparkSession, sample_path) -> RecordIngestPlan:
     """Pass 1: bounded batch inference over the staged sample.
 
-    Reads the sample as Records, votes per-column widening types
-    (operators.schema_infer cascade), and collects the metadata key
-    set — everything the unbounded pass needs pinned up front."""
-    from ..operators.schema_infer import CAST_TARGETS, vote_column_types
-    from ..sources.healthkit import metadata_keys
+    Reads the sample as Records and runs the one schema vote
+    (operators.schema_infer.infer_column_types) over its long form: the
+    per-column widening types and the metadata key set — everything the
+    unbounded pass needs pinned up front — in one aggregate."""
+    from ..operators.schema_infer import (
+        CAST_TARGETS, infer_column_types, long_form, metadata_keys_among)
 
     configure(spark)
     raw = (spark.read.format("xml").option("rowTag", "Record")
            .option("inferSchema", "false").load(sample_path))
-    keys = metadata_keys(raw)
-    flat = _flatten(raw, keys)
-    str_cols = [f.name for f in flat.schema.fields
-                if isinstance(f.dataType, T.StringType) and f.name != "type"]
-    votes = vote_column_types(flat, str_cols)[None] if str_cols else {}
+    df = _records(raw)
+    votes = {r["col_name"]: r["inferred_type"]
+             for r in infer_column_types(long_form(df, "type")).collect()}
     # tags, not type strings: cast_to_tag owns the tag→cast policy
     # (offset-preserving ntz)
-    casts = {c: tag for c, (tag, _) in votes.items() if tag in CAST_TARGETS}
+    casts = {c: tag for c, tag in votes.items() if tag in CAST_TARGETS}
     return RecordIngestPlan(raw_schema=raw.schema, casts=casts,
-                            metadata_keys=keys)
+                            metadata_keys=metadata_keys_among(votes, df.columns))
 
 
-def _flatten(df: DataFrame, keys) -> DataFrame:
-    """Strip attr prefixes + pivot metadata against a FIXED key set
-    (the collect-free form of sources.healthkit.flatten_metadata)."""
-    from ..sources.healthkit import _strip_attr_prefix, flatten_metadata
-    return flatten_metadata(_strip_attr_prefix(df), keys=list(keys))
+def _records(raw: DataFrame) -> DataFrame:
+    """Strip attr prefixes and gather MetadataEntry into its map, as
+    sources.healthkit.read_records does."""
+    from ..sources.healthkit import _metadata_as_map, _strip_attr_prefix
+    return _metadata_as_map(_strip_attr_prefix(raw))
 
 
 def records_stream(spark: SparkSession, chunks_path,
                    plan: RecordIngestPlan) -> DataFrame:
     """Pass 2 source: unbounded typed Record stream from a drop dir of
-    record-chunk XML files.  Map-only: parse → flatten → fixed casts;
-    no aggregation, no shuffle, unbounded state nowhere."""
+    record-chunk XML files.  Map-only: parse, then one select that
+    pivots metadata against the FIXED key set and applies the FIXED
+    casts; no aggregation, no shuffle, unbounded state nowhere."""
     configure(spark)
     raw = (spark.readStream.format("xml").option("rowTag", "Record")
            .schema(plan.raw_schema).load(chunks_path))
-    from ..operators.schema_infer import CAST_TARGETS, cast_to_tag
+    from ..operators.schema_infer import CAST_TARGETS, METADATA, select_typed
     # Plans serialize; a stale plan from before casts held inference
     # tags (it once held Spark type strings like 'double') would hit
     # cast_to_tag's unknown-tag path and silently leave raw strings
@@ -96,10 +97,9 @@ def records_stream(spark: SparkSession, chunks_path,
             f"RecordIngestPlan.casts holds non-inference-tag values {bad}; "
             f"expected tags from {sorted(CAST_TARGETS)} — re-run "
             f"plan_record_ingest (stale/legacy serialized plan?)")
-    df = _flatten(raw, plan.metadata_keys)
-    out = [cast_to_tag(F.col(c), plan.casts[c]).alias(c) if c in plan.casts
-           else F.col(c) for c in df.columns]
-    return df.select(*out)
+    df = _records(raw)
+    return select_typed(df, [c for c in df.columns if c != METADATA],
+                        list(plan.metadata_keys), plan.casts)
 
 
 def start_record_ingest(spark: SparkSession, chunks_path, out_dir: str,

@@ -3,7 +3,9 @@ through ``logging`` (only the CLI entry point prints, and nothing
 calls ``warnings.warn``), and it guards
 with exceptions, never with ``assert`` — asserts vanish under
 ``python -O`` and, inside an Arrow worker closure, fail as an opaque
-worker crash far from the cause."""
+worker crash far from the cause.  The ingest modules build each table
+in one projection: no ``withColumn``/``withColumnRenamed`` inside a
+loop, where each call re-analyzes the growing plan on the driver."""
 
 from __future__ import annotations
 
@@ -33,3 +35,27 @@ def _offences():
 
 def test_package_has_no_print_or_assert():
     assert list(_offences()) == []
+
+
+#: modules whose output tables are built by one select each
+ONE_SELECT_MODULES = ("sources/healthkit.py", "operators/schema_infer.py",
+                      "streaming/ingest.py")
+
+
+def _column_loops():
+    for name in ONE_SELECT_MODULES:
+        path = PACKAGE / name
+        for loop in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(loop, (ast.For, ast.AsyncFor, ast.While)):
+                continue
+            for stmt in loop.body + loop.orelse:
+                for node in ast.walk(stmt):
+                    if (isinstance(node, ast.Call)
+                            and isinstance(node.func, ast.Attribute)
+                            and node.func.attr in ("withColumn",
+                                                   "withColumnRenamed")):
+                        yield f"{name}:{node.lineno}: {node.func.attr} in a loop"
+
+
+def test_ingest_has_no_column_by_column_loops():
+    assert list(_column_loops()) == []

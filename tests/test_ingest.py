@@ -254,6 +254,37 @@ def test_stage_carves_every_rare_element_once_in_document_order(tmp_path):
     assert ids == [f"r{i}" for i in range(n)]
 
 
+def test_stage_cuts_after_a_window_filling_element(tmp_path, monkeypatch):
+    """A 1 MiB Workout fills a whole 1 MiB cut window: the cut falls at
+    the first Record after it, so the Records behind it still spread
+    over chunks instead of all landing in the tail chunk."""
+    import os
+    import xml.etree.ElementTree as ET
+    from healthkit_to_sqlite_spark.sources.healthkit import stage_zip
+
+    monkeypatch.setattr(os, "cpu_count", lambda: 4)  # 1 MiB target window
+    n = 18_000
+    w0 = f'<Workout id="w0" note="{"x" * (1 << 20)}"></Workout>'
+    body = ([_record(i) for i in range(n // 2)] + [w0]
+            + [_record(i) for i in range(n // 2, n)])
+    xml = ('<?xml version="1.0" encoding="UTF-8"?>\n'
+           '<HealthData locale="en_US">\n' + "\n".join(body)
+           + "\n</HealthData>\n")
+    # the Records before the Workout fit in one window, so the window
+    # after the first cut holds one Record start, at its very beginning
+    assert len("\n".join(body[:n // 2])) < 1 << 20
+    assert 3_000_000 < len(xml) < 16 << 20  # one 16 MiB read
+    staged = stage_zip(_export_zip(tmp_path, xml), str(tmp_path / "staging"))
+
+    assert Path(staged.workouts_xml).read_text() == (
+        "<HealthData>\n" + w0 + "\n</HealthData>\n")
+    chunks = sorted(Path(staged.records_dir).iterdir())
+    assert len(chunks) >= 3
+    ids = [r.get("id") for c in chunks
+           for r in ET.parse(c).getroot().findall("Record")]
+    assert ids == [f"r{i}" for i in range(n)]
+
+
 def test_stage_unclosed_rare_element_raises(tmp_path):
     """A Workout that never closes is not carved: the open-tag census
     raises, naming the class, instead of dropping the element."""
@@ -313,16 +344,12 @@ def test_read_records_gt_in_attribute_value_and_numeric_refs(spark, tmp_path):
     assert len(rows) == 3                       # nothing dropped/merged
     assert rows["A"]["device"] == "<<HKDevice: 0x283>, name:W>x"
     assert rows["B"]["value"] == "line\nbreak ’q’"
-    assert rows["C"]["metadata_k"] == "v>w"
+    assert rows["C"]["MetadataEntry"] == {"k": "v>w"}
 
 
-def _cli_tables(spark, monkeypatch, tmp_path, body: str,
-                with_route: bool) -> dict[str, int]:
-    """Run the CLI's ``main()`` in-process (on the test session) over
-    an export whose export.xml holds ``body``; return the .db's
-    {table: row count}."""
-    import healthkit_to_sqlite_spark.session as sess
-    from healthkit_to_sqlite_spark.__main__ import main
+def _body_zip(tmp_path, body: str, with_route: bool) -> str:
+    """An export.zip whose export.xml holds ``body``, plus the fixture
+    GPX route when ``with_route``."""
     from tests import hk_fixture as fx
 
     zp = tmp_path / "export.zip"
@@ -333,10 +360,26 @@ def _cli_tables(spark, monkeypatch, tmp_path, body: str,
                     + "\n</HealthData>\n")
         if with_route:
             zf.writestr("apple_health_export" + fx.ROUTE_PATH, fx.route_gpx())
+    return str(zp)
+
+
+def _cli_db(spark, monkeypatch, tmp_path, zip_path: str) -> sqlite3.Connection:
+    """Run the CLI's ``main()`` in-process (on the test session) over
+    ``zip_path``; return a connection to the .db it wrote."""
+    import healthkit_to_sqlite_spark.session as sess
+    from healthkit_to_sqlite_spark.__main__ import main
+
     monkeypatch.setattr(sess, "get_spark", lambda *a, **k: spark)
     db = tmp_path / "out.db"
-    assert main([str(zp), f"sqlite://{db}"]) == 0
-    con = sqlite3.connect(db)
+    assert main([zip_path, f"sqlite://{db}"]) == 0
+    return sqlite3.connect(db)
+
+
+def _cli_tables(spark, monkeypatch, tmp_path, body: str,
+                with_route: bool) -> dict[str, int]:
+    """The CLI's .db for an export of ``body``: {table: row count}."""
+    con = _cli_db(spark, monkeypatch, tmp_path,
+                  _body_zip(tmp_path, body, with_route))
     try:
         names = [r[0] for r in con.execute(
             "SELECT name FROM sqlite_master WHERE type='table'")]
@@ -344,6 +387,99 @@ def _cli_tables(spark, monkeypatch, tmp_path, body: str,
                 for n in names}
     finally:
         con.close()
+
+
+def _cli_ddl(spark, monkeypatch, tmp_path, zip_path: str) -> list[str]:
+    con = _cli_db(spark, monkeypatch, tmp_path, zip_path)
+    try:
+        return [r[0] for r in con.execute("SELECT sql FROM sqlite_master")]
+    finally:
+        con.close()
+
+
+def test_cli_ddl_of_fixture_zip(spark, monkeypatch, hk_zip, tmp_path):
+    """Every table's columns, in order, with their declared types:
+    reader columns in schema order, then the sorted metadata columns;
+    Record tables lead with ``type``."""
+    assert _cli_ddl(spark, monkeypatch, tmp_path, hk_zip) == [
+        "CREATE TABLE `Workout` (`route_path` TEXT, `creationDate` DATE, "
+        "`duration` REAL, `durationUnit` TEXT, `endDate` DATE, "
+        "`sourceName` TEXT, `sourceVersion` TEXT, `startDate` DATE, "
+        "`totalDistance` REAL, `totalDistanceUnit` TEXT, "
+        "`totalEnergyBurned` REAL, `totalEnergyBurnedUnit` TEXT, "
+        "`workoutActivityType` TEXT, `workoutEvents` TEXT, "
+        "`workoutStatistics` TEXT, `geometry` TEXT, "
+        "`metadata_HKAverageMETs` TEXT, `metadata_HKElevationAscended` TEXT, "
+        "`metadata_HKIndoorWorkout` INTEGER, `metadata_HKTimeZone` TEXT)",
+        "CREATE TABLE `ActivitySummary` (`activeEnergyBurned` REAL, "
+        "`activeEnergyBurnedGoal` INTEGER, `activeEnergyBurnedUnit` TEXT, "
+        "`appleExerciseTime` INTEGER, `appleExerciseTimeGoal` INTEGER, "
+        "`appleStandHours` INTEGER, `appleStandHoursGoal` INTEGER, "
+        "`dateComponents` DATE)",
+        "CREATE TABLE `HKQuantityTypeIdentifierStepCount` (`type` TEXT, "
+        "`creationDate` DATE, `endDate` DATE, `sourceName` TEXT, "
+        "`startDate` DATE, `unit` TEXT, `value` INTEGER)",
+        "CREATE TABLE `HKQuantityTypeIdentifierWalkingSpeed` (`type` TEXT, "
+        "`creationDate` DATE, `endDate` DATE, `sourceName` TEXT, "
+        "`sourceVersion` TEXT, `startDate` DATE, `unit` TEXT, `value` REAL, "
+        "`metadata_Test Entry` TEXT)",
+    ]
+
+
+def test_cli_ddl_of_per_type_columns(spark, monkeypatch, tmp_path):
+    """Per-table column sets from the one vote: a metadata key carried
+    by one Record type only; ``value`` INTEGER in one type and REAL in
+    the other; ``device`` on one type only, pruned from the other; and
+    a key-only MetadataEntry, which is a TEXT column on Workout (no
+    pruning there) but no column on the Record table that carries it
+    without a value."""
+    body = "\n".join([
+        '<Record type="HKQuantityTypeIdentifierStepCount" sourceName="Phone" '
+        'device="iPhone" value="12" startDate="2023-01-01 08:00:00 -0800">'
+        '<MetadataEntry key="HKOnlySteps" value="7"/>'
+        '<MetadataEntry key="HKShared" value="a"/></Record>',
+        '<Record type="HKQuantityTypeIdentifierStepCount" sourceName="Phone" '
+        'value="30" startDate="2023-01-01 09:00:00 -0800"/>',
+        '<Record type="HKQuantityTypeIdentifierHeartRate" sourceName="Watch" '
+        'value="61.5" startDate="2023-01-01 08:00:00 -0800">'
+        '<MetadataEntry key="HKShared" value="b"/>'
+        '<MetadataEntry key="HKNoValue"/></Record>',
+        '<Record type="HKQuantityTypeIdentifierHeartRate" sourceName="Watch" '
+        'value="72" startDate="2023-01-02 08:00:00 -0800"/>',
+        '<Workout workoutActivityType="HKWorkoutActivityTypeWalking" '
+        'duration="12.5" startDate="2023-01-01 07:00:00 -0800">'
+        '<MetadataEntry key="HKNoValue"/>'
+        '<MetadataEntry key="HKIndoorWorkout" value="0"/></Workout>',
+    ])
+    zp = _body_zip(tmp_path, body, with_route=False)
+    assert _cli_ddl(spark, monkeypatch, tmp_path, zp) == [
+        "CREATE TABLE `Workout` (`route_path` TEXT, `duration` REAL, "
+        "`startDate` DATE, `workoutActivityType` TEXT, `workoutEvents` TEXT, "
+        "`workoutStatistics` TEXT, `geometry` TEXT, "
+        "`metadata_HKIndoorWorkout` INTEGER, `metadata_HKNoValue` TEXT)",
+        "CREATE TABLE `HKQuantityTypeIdentifierHeartRate` (`type` TEXT, "
+        "`sourceName` TEXT, `startDate` DATE, `value` REAL, "
+        "`metadata_HKShared` TEXT)",
+        "CREATE TABLE `HKQuantityTypeIdentifierStepCount` (`type` TEXT, "
+        "`device` TEXT, `sourceName` TEXT, `startDate` DATE, "
+        "`value` INTEGER, `metadata_HKOnlySteps` INTEGER, "
+        "`metadata_HKShared` TEXT)",
+    ]
+
+
+def test_convert_job_count_on_fixture_zip(spark, hk_zip, tmp_path):
+    """``convert`` submits a fixed number of Spark jobs on the fixture:
+    per element class, XML structure discovery and one schema vote that
+    also finds the metadata keys, plus the staged Record parquet write:
+    14 jobs.  A separate metadata-key census (6 more jobs on this
+    fixture) or a re-parse of export.xml shows up here."""
+    from healthkit_to_sqlite_spark.sources.healthkit import convert
+    from tests.test_sqlite_sink import _jobs_submitted
+
+    sc = spark.sparkContext
+    before = _jobs_submitted(sc)
+    convert(spark, hk_zip, str(tmp_path / "staging"))
+    assert _jobs_submitted(sc) - before == 14
 
 
 def test_cli_recordless_export_has_no_record_tables(

@@ -17,6 +17,8 @@ kernel family:
 - simhash: q_dedup_simhash; winnowing grams: q_winnowing
 - Count-Min partials: q_cms_counts; BPE encode: q_bpe_encode
 - paragraphs: q_dedup_paragraph, q_dedup_paragraph_apply
+- schema vote (``infer_column_types``, the pass 1 of every ingest
+  table) and its type cascade: q_schema_unify, q_schema_infer
 """
 
 from __future__ import annotations
@@ -33,6 +35,7 @@ KERNEL_CONSUMERS = [
     "q_ngram_counts", "q_repetition_signals", "q_ngram_jaccard",
     "q_dedup_simhash", "q_winnowing", "q_cms_counts",
     "q_bpe_encode", "q_dedup_paragraph", "q_dedup_paragraph_apply",
+    "q_schema_infer", "q_schema_unify",
 ]
 
 
