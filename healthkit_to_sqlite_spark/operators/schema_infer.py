@@ -189,14 +189,24 @@ def select_typed(df: DataFrame, cols: list[str], metadata_keys: list[str],
                        for k in metadata_keys])
 
 
-def apply_inferred_types(df: DataFrame) -> DataFrame:
-    """Infer-and-cast ``df``'s string columns in ONE aggregate pass, its
-    MetadataEntry map flattened to ``metadata_<key>`` columns (every key
-    seen, sorted, after the other columns).  (Per-type all-null column
-    pruning — the reference never creates a column it never saw,
-    core.rs:216-227 — lives in ``record_tables_onepass``.)"""
-    votes = {r["col_name"]: r["inferred_type"]
-             for r in infer_column_types(long_form(df)).collect()}
+def column_votes(df: DataFrame) -> dict[str, str]:
+    """``df``'s schema vote in ONE aggregate pass: the tag of each
+    string column and of ``metadata_<key>`` for each MetadataEntry key
+    seen."""
+    return {r["col_name"]: r["inferred_type"]
+            for r in infer_column_types(long_form(df)).collect()}
+
+
+def apply_inferred_types(df: DataFrame,
+                         votes: dict[str, str] | None = None) -> DataFrame:
+    """Cast ``df``'s columns by ``votes`` (default: ``df``'s own vote)
+    in one ``select_typed``, its MetadataEntry map flattened to
+    ``metadata_<key>`` columns (every key voted, sorted, after the other
+    columns); a column the vote did not see passes through.  (Per-type
+    all-null column pruning — the reference never creates a column it
+    never saw, core.rs:216-227 — lives in ``record_tables_onepass``.)"""
+    if votes is None:
+        votes = column_votes(df)
     cols = [c for c in df.columns if c != METADATA]
     return select_typed(df, cols, metadata_keys_among(votes, cols), votes)
 

@@ -89,19 +89,19 @@ def _element_re(klass: str) -> re.Pattern:
                       + rb"(?:/>|>.*?</" + k + rb">)", re.DOTALL)
 
 
-def _stage_export_xml(export_xml: str, out_dir: str) -> str:
+def _stage_export_xml(export_xml: str, out_dir: str, chunks: int) -> str:
     """One streaming pass over export.xml that writes both products of
     staging: the Record chunk files and the rare-class side files.
 
-    Records are re-chunked into ~2×cpus files (one file under 2 MiB),
-    cutting only at ``<Record `` starts — the last one inside the
-    target window, or the first one after it when a large non-Record
-    element fills the window — so the Record rowTag read runs
-    one task per chunk instead of one task for the whole file (the XML
-    source cannot split a single file).  Each chunk is wrapped in its
-    own root; content between records stays inside exactly one chunk,
-    and rowTag scanning ignores it.  An export without Records gets one
-    empty-bodied chunk, which reads as the empty schema.
+    Records are re-chunked into ~``chunks`` files, clamped to [2, 64]
+    (one file under 2 MiB), cutting only at ``<Record `` starts — the
+    last one inside the target window, or the first one after it when a
+    large non-Record element fills the window — so the Record rowTag
+    read runs one task per chunk instead of one task for the whole file
+    (the XML source cannot split a single file).  Each chunk is wrapped
+    in its own root; content between records stays inside exactly one
+    chunk, and rowTag scanning ignores it.  An export without Records
+    gets one empty-bodied chunk, which reads as the empty schema.
 
     The Workout and ActivitySummary elements are carved out of each
     segment between cuts (the preamble, each chunk, the tail) into
@@ -113,7 +113,7 @@ def _stage_export_xml(export_xml: str, out_dir: str) -> str:
     the Spark-side analog of the reference's O(file) passes
     (core.rs:52-73).  Returns the chunk dir."""
     size = os.path.getsize(export_xml)
-    n_target = min(64, max(2, 2 * (os.cpu_count() or 8)))
+    n_target = min(64, max(2, chunks))
     target = size if size < 2 << 20 else max(1 << 20, size // n_target)
     chunk_dir = os.path.join(out_dir, "records-chunks")
     os.makedirs(chunk_dir, exist_ok=True)
@@ -178,13 +178,13 @@ def _stage_export_xml(export_xml: str, out_dir: str) -> str:
     return chunk_dir
 
 
-def stage_zip(zip_path: str, staging_dir: str) -> StagedExport:
+def stage_zip(zip_path: str, staging_dir: str, chunks: int) -> StagedExport:
     """A1: unpack export.zip to a staging directory (driver-side; the
     zip format is not splittable).  Mirrors reference core.rs:48-56 but
     once, up front — the reference re-opens the archive per route file
     (core.rs:580-582).  One more pass over export.xml re-chunks the
-    Records and carves the rare element classes into side files (see
-    ``_stage_export_xml``)."""
+    Records into ~``chunks`` files and carves the rare element classes
+    into side files (see ``_stage_export_xml``)."""
     with zipfile.ZipFile(zip_path) as zf:
         safe = [n for n in zf.namelist()
                 if not (n.startswith("/") or ".." in n.split("/"))]
@@ -195,7 +195,7 @@ def stage_zip(zip_path: str, staging_dir: str) -> StagedExport:
         routes_dir=os.path.join(staging_dir, ARCHIVE_ROOT, "workout-routes"),
         workouts_xml=os.path.join(staging_dir, _SIDE_FILES["Workout"]),
         summaries_xml=os.path.join(staging_dir, _SIDE_FILES["ActivitySummary"]),
-        records_dir=_stage_export_xml(export_xml, staging_dir))
+        records_dir=_stage_export_xml(export_xml, staging_dir, chunks))
 
 
 def _strip_attr_prefix(df: DataFrame) -> DataFrame:
@@ -330,15 +330,22 @@ def read_workouts(spark: SparkSession, xml_path: str,
     and record the divergence here).  An export without <Workout>
     elements reads with an empty schema, returned as is: the class
     contributes no table."""
+    from ..operators.schema_infer import (
+        apply_inferred_types, column_votes)
+
     df = read_element(spark, xml_path, "Workout")
     if not df.columns:
         return df
     # raw child columns get __-prefixed temp names: Spark resolves
     # column names case-insensitively, so raw `WorkoutStatistics` would
     # collide with the synthesized `workoutStatistics`
-    df = df.withColumnsRenamed(
+    df = _metadata_as_map(df.withColumnsRenamed(
         {raw: f"__{raw}" for raw in ("WorkoutEvent", "WorkoutStatistics",
-                                     "WorkoutRoute") if raw in df.columns})
+                                     "WorkoutRoute") if raw in df.columns}))
+    # the vote sees the attribute and metadata columns only: the
+    # synthesized JSON columns are TEXT and pass through untagged, and
+    # voting them would read every GPX file and run the route join
+    votes = column_votes(df)
 
     # --- workoutEvents: ordered JSON array (A7; core.rs:541-543) ---
     # every attribute passes through (no fixed list); values follow the
@@ -392,10 +399,7 @@ def read_workouts(spark: SparkSession, xml_path: str,
           .drop("n_points"))
 
     df = df.drop("__WorkoutEvent", "__WorkoutStatistics", "__WorkoutRoute")
-    from ..operators.schema_infer import apply_inferred_types
-    # type the scalar attribute + metadata columns; the synthesized
-    # JSON columns classify as TEXT and stay strings
-    return apply_inferred_types(_metadata_as_map(df))
+    return apply_inferred_types(df, votes)
 
 
 #: a complete quoted JSON *value* that is a valid JSON number literal;
@@ -488,7 +492,9 @@ def convert(spark: SparkSession, zip_path: str,
     threads only submit jobs)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    staged = stage_zip(zip_path, staging_dir)
+    # two Record chunks per task slot of the session
+    staged = stage_zip(zip_path, staging_dir,
+                       2 * spark.sparkContext.defaultParallelism)
 
     # rare classes read from their small side files (a rowTag read
     # scans its whole input; don't make it the full archive)

@@ -238,7 +238,7 @@ def test_stage_carves_every_rare_element_once_in_document_order(tmp_path):
            '<HealthData locale="en_US">\n' + "\n".join(body)
            + "\n</HealthData>\n")
     assert len(xml) > 2 << 20
-    staged = stage_zip(_export_zip(tmp_path, xml), str(tmp_path / "staging"))
+    staged = stage_zip(_export_zip(tmp_path, xml), str(tmp_path / "staging"), 8)
 
     def side(*els: str) -> str:
         return "<HealthData>\n" + "".join(e + "\n" for e in els) + "</HealthData>\n"
@@ -254,15 +254,13 @@ def test_stage_carves_every_rare_element_once_in_document_order(tmp_path):
     assert ids == [f"r{i}" for i in range(n)]
 
 
-def test_stage_cuts_after_a_window_filling_element(tmp_path, monkeypatch):
+def test_stage_cuts_after_a_window_filling_element(tmp_path):
     """A 1 MiB Workout fills a whole 1 MiB cut window: the cut falls at
     the first Record after it, so the Records behind it still spread
     over chunks instead of all landing in the tail chunk."""
-    import os
     import xml.etree.ElementTree as ET
     from healthkit_to_sqlite_spark.sources.healthkit import stage_zip
 
-    monkeypatch.setattr(os, "cpu_count", lambda: 4)  # 1 MiB target window
     n = 18_000
     w0 = f'<Workout id="w0" note="{"x" * (1 << 20)}"></Workout>'
     body = ([_record(i) for i in range(n // 2)] + [w0]
@@ -274,7 +272,8 @@ def test_stage_cuts_after_a_window_filling_element(tmp_path, monkeypatch):
     # after the first cut holds one Record start, at its very beginning
     assert len("\n".join(body[:n // 2])) < 1 << 20
     assert 3_000_000 < len(xml) < 16 << 20  # one 16 MiB read
-    staged = stage_zip(_export_zip(tmp_path, xml), str(tmp_path / "staging"))
+    # 8 chunks → a 1 MiB target window
+    staged = stage_zip(_export_zip(tmp_path, xml), str(tmp_path / "staging"), 8)
 
     assert Path(staged.workouts_xml).read_text() == (
         "<HealthData>\n" + w0 + "\n</HealthData>\n")
@@ -294,7 +293,7 @@ def test_stage_unclosed_rare_element_raises(tmp_path):
            '<Workout workoutActivityType="A"><WorkoutEvent type="E"/>\n'
            "</HealthData>\n")
     with pytest.raises(ValueError, match="Workout"):
-        stage_zip(_export_zip(tmp_path, xml), str(tmp_path / "staging"))
+        stage_zip(_export_zip(tmp_path, xml), str(tmp_path / "staging"), 8)
 
 
 def test_stage_fixture_zip_is_one_chunk_read_like_export_xml(
@@ -304,7 +303,7 @@ def test_stage_fixture_zip_is_one_chunk_read_like_export_xml(
     from healthkit_to_sqlite_spark.sources.healthkit import (
         read_records, stage_zip)
 
-    staged = stage_zip(hk_zip, str(tmp_path / "staging"))
+    staged = stage_zip(hk_zip, str(tmp_path / "staging"), 8)
     assert sorted(p.name for p in Path(staged.records_dir).iterdir()) == [
         "records-00000.xml"]
 
@@ -426,6 +425,28 @@ def test_cli_ddl_of_fixture_zip(spark, monkeypatch, hk_zip, tmp_path):
     ]
 
 
+def test_cli_values_of_fixture_zip(spark, monkeypatch, hk_zip, tmp_path):
+    """The stored text of a DATE column (ActivitySummary) and of a
+    Record table's three TIMESTAMP_NTZ columns, as the CLI writes them
+    for the fixture zip, pinned line by line."""
+    con = _cli_db(spark, monkeypatch, tmp_path, hk_zip)
+    try:
+        dump = list(con.iterdump())
+    finally:
+        con.close()
+    summaries = [line for line in dump
+                 if line.startswith('INSERT INTO "ActivitySummary"')]
+    assert summaries == [
+        f'INSERT INTO "ActivitySummary" VALUES({300 + i}.25,400,\'Cal\','
+        f"{30 + i},30,{10 + i % 3},12,'2020-02-{15 + i}');" for i in range(10)]
+    speed = 'INSERT INTO "HKQuantityTypeIdentifierWalkingSpeed"'
+    assert [line for line in dump if line.startswith(speed)] == [
+        f"{speed} VALUES('HKQuantityTypeIdentifierWalkingSpeed',"
+        f"'2022-12-15 18:0{i}:02','2022-12-15 17:59:0{i}','Phone','16.1.2',"
+        f"'2022-12-15 17:58:5{i}','mi/hr',{v},'FooBar');"
+        for i, v in enumerate(("2.95276", "3.1", "2.5"))]
+
+
 def test_cli_ddl_of_per_type_columns(spark, monkeypatch, tmp_path):
     """Per-table column sets from the one vote: a metadata key carried
     by one Record type only; ``value`` INTEGER in one type and REAL in
@@ -471,15 +492,17 @@ def test_convert_job_count_on_fixture_zip(spark, hk_zip, tmp_path):
     """``convert`` submits a fixed number of Spark jobs on the fixture:
     per element class, XML structure discovery and one schema vote that
     also finds the metadata keys, plus the staged Record parquet write:
-    14 jobs.  A separate metadata-key census (6 more jobs on this
-    fixture) or a re-parse of export.xml shows up here."""
+    12 jobs.  A separate metadata-key census (6 more jobs on this
+    fixture), a Workout vote that runs the route aggregate and its
+    broadcast join (2 more), or a re-parse of export.xml shows up
+    here."""
     from healthkit_to_sqlite_spark.sources.healthkit import convert
     from tests.test_sqlite_sink import _jobs_submitted
 
     sc = spark.sparkContext
     before = _jobs_submitted(sc)
     convert(spark, hk_zip, str(tmp_path / "staging"))
-    assert _jobs_submitted(sc) - before == 14
+    assert _jobs_submitted(sc) - before == 12
 
 
 def test_cli_recordless_export_has_no_record_tables(

@@ -131,7 +131,7 @@ def test_end_to_end_archive_to_manifest(spark, hk_zip, tmp_path):
     from healthkit_to_sqlite_spark.streaming.ingest import (
         plan_record_ingest, records_stream)
 
-    staged = stage_zip(hk_zip, str(tmp_path / "staging"))
+    staged = stage_zip(hk_zip, str(tmp_path / "staging"), 8)
     drop = tmp_path / "drop"
     drop.mkdir()
     shutil.copy(staged.export_xml, drop / "chunk-000.xml")
@@ -322,16 +322,12 @@ def test_catalog_replace_overwrites_one_table_only(spark, cat):
 
 def test_ingest_fanout_atomic_publish(spark, hk_zip, tmp_path):
     """The real A4 composition: archive → record_tables_onepass fan-out →
-    write_tables_atomic = one commit for the whole per-type table
-    set."""
-    from healthkit_to_sqlite_spark.sinks.database import write_tables_atomic
-    from healthkit_to_sqlite_spark.sources.healthkit import (
-        convert, read_records)
+    ``publish_pass`` = one commit for the whole per-type table set."""
+    from healthkit_to_sqlite_spark.sources.healthkit import convert
 
     tables = convert(spark, hk_zip, str(tmp_path / "stage"))
-    root = str(tmp_path / "catalog")
-    assert write_tables_atomic(tables, root) == 1
-    cat = ManifestCatalog(root)
+    cat = ManifestCatalog(str(tmp_path / "catalog"))
+    assert cat.publish_pass(tables) == 1
     assert sorted(cat.table_names()) == sorted(tables)
     for name, df in tables.items():
         assert cat.read(spark, name).count() == df.count()

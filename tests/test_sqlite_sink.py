@@ -1,9 +1,9 @@
 """SQLite sink: stored values, one transaction per pass under prefetch,
 and one Spark job per table.
 
-The expected dumps were recorded from the row-at-a-time sink this one
-replaced, so any drift in how a Spark value lands in SQLite shows up
-as a changed line."""
+The expected dumps were recorded from earlier sinks (row-at-a-time,
+then per-value Python converters), so any drift in how a Spark value
+lands in SQLite shows up as a changed line."""
 
 from __future__ import annotations
 
@@ -29,38 +29,39 @@ _TYPED = T.StructType([
     T.StructField("f", T.FloatType()),
     T.StructField("s", T.StringType()),
     T.StructField("hk`ü", T.StringType()),
-    T.StructField("arr", T.ArrayType(T.IntegerType())),
-    T.StructField("m", T.MapType(T.StringType(), T.IntegerType())),
-    T.StructField("ev", T.ArrayType(T.StructType([
-        T.StructField("k", T.StringType()), T.StructField("v", T.DoubleType())]))),
 ])
 
 _TYPED_ROWS = [
     (1, dt.datetime(2020, 2, 24, 10, 18), dt.datetime(2020, 2, 24, 10, 18),
-     dt.date(2020, 2, 24), True, 7, 1.5, 0.1, "walk", "ä`b", [1, 2],
-     {"a": 1, "b": 2}, [("pause", 1.0), ("resume", None)]),
+     dt.date(2020, 2, 24), True, 7, 1.5, 0.1, "walk", "ä`b"),
     (2 ** 53 + 1, dt.datetime(2020, 2, 24, 10, 18, 0, 250000),
      dt.datetime(2021, 12, 31, 23, 59, 59, 1), dt.date(2021, 12, 31), False,
-     -3, -0.25, -2.5, "", "x", [], {}, []),
-    (None,) * 13,
+     -3, -0.25, -2.5, "", "x"),
+    (3, dt.datetime(999, 3, 4, 5, 6, 7), dt.datetime(999, 3, 4, 5, 6, 7, 890),
+     dt.date(999, 3, 4), True, 0, 0.0, 0.0, "old", "y"),
+    (4, dt.datetime(2024, 2, 29, 23, 59, 59, 999999),
+     dt.datetime(1970, 1, 1, 0, 0, 0, 999999), dt.date(1, 1, 1), None,
+     None, None, None, None, None),
+    (None,) * 10,
 ]
 
 _COLS = ("(`id` INTEGER, `tn` DATE, `ts` DATE, `d` DATE, `b` INTEGER, "
-         "`n` INTEGER, `x` REAL, `f` REAL, `s` TEXT, `hk``ü` TEXT, "
-         "`arr` TEXT, `m` TEXT, `ev` TEXT)")
+         "`n` INTEGER, `x` REAL, `f` REAL, `s` TEXT, `hk``ü` TEXT)")
 
 _TYPED_DUMP = [
     "BEGIN TRANSACTION;",
     f"CREATE TABLE `empty` {_COLS};",
     f"CREATE TABLE `typed` {_COLS};",
     "INSERT INTO \"typed\" VALUES(1,'2020-02-24 10:18:00','2020-02-24 10:18:00',"
-    "'2020-02-24',1,7,1.5,1.00000001490116119384e-01,'walk','ä`b','[1, 2]',"
-    "'{\"a\": 1, \"b\": 2}','[[\"pause\", 1.0], [\"resume\", null]]');",
+    "'2020-02-24',1,7,1.5,1.00000001490116119384e-01,'walk','ä`b');",
     "INSERT INTO \"typed\" VALUES(9007199254740993,'2020-02-24 10:18:00.250000',"
-    "'2021-12-31 23:59:59.000001','2021-12-31',0,-3,-0.25,-2.5,'','x','[]','{}',"
-    "'[]');",
+    "'2021-12-31 23:59:59.000001','2021-12-31',0,-3,-0.25,-2.5,'','x');",
+    "INSERT INTO \"typed\" VALUES(3,'0999-03-04 05:06:07',"
+    "'0999-03-04 05:06:07.000890','0999-03-04',1,0,0.0,0.0,'old','y');",
+    "INSERT INTO \"typed\" VALUES(4,'2024-02-29 23:59:59.999999',"
+    "'1970-01-01 00:00:00.999999','0001-01-01',NULL,NULL,NULL,NULL,NULL,NULL);",
     "INSERT INTO \"typed\" VALUES(NULL,NULL,NULL,NULL,NULL,NULL,NULL,NULL,NULL,"
-    "NULL,NULL,NULL,NULL);",
+    "NULL);",
     "COMMIT;",
 ]
 
@@ -83,8 +84,8 @@ def _table_names(db: str) -> list[str]:
 
 
 def test_sink_values_pinned(spark, tmp_path):
-    """Temporal values as ISO text (no ``.000000``, no ``+00:00``),
-    booleans as 1/0, NULLs in every type, arrays and maps as JSON,
+    """Temporal values as ISO text (no ``.000000``, no ``+00:00``; years
+    before 1000 zero-padded), booleans as 1/0, NULLs in every type,
     quoted odd identifiers, and an empty table's DDL."""
     db = str(tmp_path / "typed.db")
     write_sqlite({"typed": spark.createDataFrame(_TYPED_ROWS, _TYPED),
@@ -114,11 +115,14 @@ def test_sink_inserts_every_record_batch(spark, tmp_path):
         con.close()
 
 
-def test_sink_struct_column_raises_naming_it(spark, tmp_path):
-    """SQLite has no struct type: the sink refuses the column by name
-    and the pass leaves no tables behind."""
-    db = str(tmp_path / "struct.db")
-    df = spark.sql("SELECT 1 AS id, named_struct('x', 1) AS `pos ü`")
+@pytest.mark.parametrize("nested", [
+    "named_struct('x', 1)", "array(1, 2)", "map('k', 1)"],
+    ids=["struct", "array", "map"])
+def test_sink_struct_column_raises_naming_it(spark, tmp_path, nested):
+    """SQLite has no struct, array or map type: the sink refuses the
+    column by name and the pass leaves no tables behind."""
+    db = str(tmp_path / "nested.db")
+    df = spark.sql(f"SELECT 1 AS id, {nested} AS `pos ü`")
     with pytest.raises(TypeError, match="'pos ü'"):
         write_sqlite({"ok": spark.range(3), "st": df}, db)
     assert _table_names(db) == []

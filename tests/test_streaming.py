@@ -148,7 +148,7 @@ def test_streaming_record_ingest_matches_batch(spark, tmp_path):
         plan_record_ingest, start_record_ingest)
 
     zp = build_export_zip(str(tmp_path / "export.zip"))
-    staged = stage_zip(zp, str(tmp_path / "staging"))
+    staged = stage_zip(zp, str(tmp_path / "staging"), 8)
     sample = staged.records_dir
 
     plan = plan_record_ingest(spark, sample)
