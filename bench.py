@@ -798,8 +798,7 @@ def run_ingest_only() -> None:
     cpus = (int(os.environ.get("SPARK_GRAFT_CPUS", "0"))
             or (os.cpu_count() or 8))
     from healthkit_to_sqlite_spark.session import get_spark
-    spark = get_spark("bench-ingest-fresh", cpus=cpus,
-                      shuffle_partitions=cpus)
+    spark = get_spark("bench-ingest-fresh", cpus=cpus)
     print("INGEST " + json.dumps(_ingest_median3(spark)))
     spark.stop()
 
@@ -851,7 +850,7 @@ def run_only(names: list[str]) -> None:
     from healthkit_to_sqlite_spark.registry import queries
     from healthkit_to_sqlite_spark.session import get_spark
 
-    spark = get_spark("bench_only", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark("bench_only", cpus=cpus)
     qs = queries()
     timings = {}
     for n in names:
@@ -873,7 +872,7 @@ def main() -> None:
     from healthkit_to_sqlite_spark.registry import queries
 
     prev = _prev_committed()
-    spark = get_spark("bench", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark("bench", cpus=cpus)
     qs = queries()
     names = [n for n in HEADLINE if n in qs]
 

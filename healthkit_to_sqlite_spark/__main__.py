@@ -75,7 +75,11 @@ def main(argv: list[str] | None = None) -> int:
         if not args.quiet:
             print(f"Converting {args.export_zip} ...")
         tables = convert(spark, args.export_zip, staging)
-        write_sqlite(tables, db_path, drop=True)
+        # --drop (main.rs:39-62): the old file goes only once the
+        # conversion has succeeded
+        if os.path.exists(db_path):
+            os.remove(db_path)
+        write_sqlite(tables, db_path)
     if not args.quiet:
         print(f"Done: {db_path} ({len(tables)} tables)")
     return 0

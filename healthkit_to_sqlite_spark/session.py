@@ -66,16 +66,15 @@ def configure(spark: SparkSession) -> SparkSession:
 
 
 def get_spark(app_name: str = "healthkit_to_sqlite_spark",
-              cpus: int | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
-    """Build (or reuse) a local session tuned for the test harness."""
+              cpus: int | None = None) -> SparkSession:
+    """Build (or reuse) a local session tuned for the test harness,
+    with one shuffle partition per core."""
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
-    shuffle_partitions = shuffle_partitions or cpus
     spark = (
         SparkSession.builder
         .master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -18,7 +18,6 @@ The reference writes one SQLite row per INSERT inside a transaction
 from __future__ import annotations
 
 import itertools
-import os
 import sqlite3
 import uuid
 from collections import deque
@@ -109,8 +108,7 @@ def _insert(con, ddl: str, insert: str, table: pa.Table) -> None:
         con.executemany(insert, zip(*(c.to_pylist() for c in batch.columns)))
 
 
-def write_sqlite(tables: dict[str, DataFrame], db_path: str,
-                 drop: bool = False) -> None:
+def write_sqlite(tables: dict[str, DataFrame], db_path: str) -> None:
     """A12/A13: write the logical catalog to a SQLite file.
 
     Each table is fetched as one Arrow job on a small thread pool while
@@ -124,10 +122,7 @@ def write_sqlite(tables: dict[str, DataFrame], db_path: str,
     one-transaction-per-pass (core.rs:59-61, 70-72): a run that dies
     mid-pass rolls back to zero visible tables, never a partial set,
     and cancels the Spark jobs of fetches still running.  A column
-    type Arrow or SQLite cannot carry (array, map, struct) raises.
-    ``drop`` reproduces the CLI --drop flow (main.rs:39-62)."""
-    if drop and os.path.exists(db_path):
-        os.remove(db_path)
+    type Arrow or SQLite cannot carry (array, map, struct) raises."""
     sc = next(iter(tables.values())).sparkSession.sparkContext if tables else None
     depth = sc.defaultParallelism if sc else 1
     tag = f"write_sqlite-{uuid.uuid4().hex}"

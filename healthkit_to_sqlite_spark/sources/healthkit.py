@@ -29,7 +29,8 @@ Spark-native re-expression:
   metadata key set; no separate key census and no third parse.
 - Workout children = struct/array transforms + to_json at the edge.
 - Route join = a real equi-join against a GPX DataFrame (broadcast;
-  route sets are small) instead of per-row random zip access.
+  route sets are small) instead of per-row random zip access.  The
+  GPX read is map-only: one row per file, declared schema.
 - table-per-type fan-out (A4) = one schema vote grouped by type over
   the staged Record parquet, then one filtered select per type.  Every
   output table is one ``select_typed`` projection.
@@ -60,7 +61,7 @@ ARCHIVE_ROOT = "apple_health_export"
 class StagedExport:
     """Filesystem layout after zip staging (A1)."""
     export_xml: str    # path to export.xml
-    routes_dir: str    # dir with workout-routes/*.gpx (may not exist)
+    routes_dir: str    # dir with workout-routes/*.gpx (may be empty)
     #: small per-class side files for the RARE element classes — a
     #: rowTag XML read must scan the whole file even when its class is
     #: 0.01% of it, so Workout/ActivitySummary reads go against these
@@ -190,9 +191,12 @@ def stage_zip(zip_path: str, staging_dir: str, chunks: int) -> StagedExport:
                 if not (n.startswith("/") or ".." in n.split("/"))]
         zf.extractall(staging_dir, members=safe)
     export_xml = os.path.join(staging_dir, EXPORT_XML)
+    # an export without routes gets an empty dir, which reads as no rows
+    routes_dir = os.path.join(staging_dir, ARCHIVE_ROOT, "workout-routes")
+    os.makedirs(routes_dir, exist_ok=True)
     return StagedExport(
         export_xml=export_xml,
-        routes_dir=os.path.join(staging_dir, ARCHIVE_ROOT, "workout-routes"),
+        routes_dir=routes_dir,
         workouts_xml=os.path.join(staging_dir, _SIDE_FILES["Workout"]),
         summaries_xml=os.path.join(staging_dir, _SIDE_FILES["ActivitySummary"]),
         records_dir=_stage_export_xml(export_xml, staging_dir, chunks))
@@ -274,48 +278,41 @@ def read_activity_summaries(spark: SparkSession, xml_path: str) -> DataFrame:
     return apply_inferred_types(df) if df.columns else df
 
 
+#: every level an array, so a child seen once is a one-element array;
+#: coordinates stay strings for the ANSI cast (malformed values raise)
+_GPX_SCHEMA = ("trk ARRAY<STRUCT<trkseg: ARRAY<STRUCT<trkpt: "
+               "ARRAY<STRUCT<_lat: STRING, _lon: STRING>>>>>>")
+
+
 def read_gpx_routes(spark: SparkSession, routes_dir: str) -> DataFrame:
     """A11: GPX route files → one row per route with GeoJSON-shaped
     LineString geometry.
 
     Reference parses each file imperatively per workout row
     (core.rs:588-627, [lon, lat] pairs in document order, dropping
-    ele/time/speed…).  Spark form: distributed read of all route files
-    (rowTag=trkpt), group by source file, order points by time (GPX
-    track time is monotone; document order surrogate), collect
-    coordinates.  Returns empty-schema DF if no routes exist."""
-    schema = T.StructType([
-        T.StructField("route_path", T.StringType()),
-        T.StructField("geometry", T.StructType([
-            T.StructField("type", T.StringType()),
-            T.StructField("coordinates",
-                          T.ArrayType(T.ArrayType(T.DoubleType()))),
-        ])),
-        T.StructField("n_points", T.LongType()),
-    ])
-    if not os.path.isdir(routes_dir) or not any(
-            n.endswith(".gpx") for n in os.listdir(routes_dir)):
-        return spark.createDataFrame([], schema)
+    ele/time/speed…).  Spark form: one map-only read of the route
+    directory, one row per file (rowTag=gpx) with a declared schema, so
+    no schema-discovery job runs; every trk → trkseg → trkpt level is
+    flattened in document order.  A missing level adds no points, and a
+    file with no points has no row (its workout keeps '{}')."""
     configure(spark)
-    pts = (spark.read.format("xml").option("rowTag", "trkpt")
-           .option("pathGlobFilter", "*.gpx")
-           .load(routes_dir)
-           .select(F.col("_lat").cast("double").alias("lat"),
-                   F.col("_lon").cast("double").alias("lon"),
-                   F.col("time").cast("timestamp").alias("t"),
-                   F.col("_metadata.file_path").alias("file_path")))
+    # FAILFAST: a malformed (e.g. truncated) file raises, naming the
+    # file; the default mode would drop its route in silence
+    gpx = (spark.read.format("xml").option("rowTag", "gpx")
+           .option("mode", "FAILFAST").option("pathGlobFilter", "*.gpx")
+           .schema(_GPX_SCHEMA).load(routes_dir))
+    per_trk = F.transform("trk", lambda t: F.transform(
+        t.trkseg, lambda s: F.transform(s.trkpt, lambda p: F.array(
+            p._lon.cast("double"), p._lat.cast("double")))))
+    # flatten is null if any part is: compact away the missing levels
+    coordinates = F.flatten(F.array_compact(F.flatten(F.array_compact(per_trk))))
     # archive-relative path: '<...>/apple_health_export/workout-routes/x.gpx'
     # → '/workout-routes/x.gpx' (join key; reference core.rs:567-581)
-    rel = F.regexp_extract("file_path", r"apple_health_export(/.*)$", 1)
-    coord = F.struct(F.col("t"), F.array(F.col("lon"), F.col("lat")).alias("c"))
-    return (pts.groupBy(rel.alias("route_path"))
-            .agg(F.transform(F.array_sort(F.collect_list(coord)),
-                             lambda s: s.c).alias("coordinates"),
-                 F.count(F.lit(1)).alias("n_points"))
-            .select("route_path",
+    rel = F.regexp_extract("_metadata.file_path", r"apple_health_export(/.*)$", 1)
+    return (gpx.filter(F.size(coordinates) > 0)
+            .select(rel.alias("route_path"),
                     F.struct(F.lit("LineString").alias("type"),
-                             F.col("coordinates")).alias("geometry"),
-                    "n_points"))
+                             coordinates.alias("coordinates")).alias("geometry")))
 
 
 def read_workouts(spark: SparkSession, xml_path: str,
@@ -395,8 +392,7 @@ def read_workouts(spark: SparkSession, xml_path: str,
         df = df.withColumn("route_path", F.lit(None).cast("string"))
     df = (df.join(F.broadcast(routes), "route_path", "left")
           .withColumn("geometry",
-                      F.coalesce(F.to_json("geometry"), F.lit("{}")))
-          .drop("n_points"))
+                      F.coalesce(F.to_json("geometry"), F.lit("{}"))))
 
     df = df.drop("__WorkoutEvent", "__WorkoutStatistics", "__WorkoutRoute")
     return apply_inferred_types(df, votes)
@@ -485,7 +481,10 @@ def convert(spark: SparkSession, zip_path: str,
     records) are independent, but each fires small BLOCKING driver
     jobs (XML structure discovery, then one schema vote that also
     finds the metadata keys) whose fixed latency — not data volume —
-    dominates the rare classes.  They run on three threads so the
+    dominates the rare classes.  The GPX routes are read with a
+    declared schema, so they run no discovery job; their map-only read
+    and broadcast join first run when the Workout table does.  The
+    pipelines run on three threads so the
     Spark scheduler interleaves those jobs instead of serializing
     back-to-back round-trips (same-JVM A/B at 400k records incl. forcing all 6
     tables: 7.5→3.7s first run, 4.7→2.8s repeat; identical outputs —

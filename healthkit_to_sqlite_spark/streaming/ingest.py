@@ -55,14 +55,13 @@ def plan_record_ingest(spark: SparkSession, sample_path) -> RecordIngestPlan:
     per-column widening types and the metadata key set — everything the
     unbounded pass needs pinned up front — in one aggregate."""
     from ..operators.schema_infer import (
-        CAST_TARGETS, infer_column_types, long_form, metadata_keys_among)
+        CAST_TARGETS, column_votes, metadata_keys_among)
 
     configure(spark)
     raw = (spark.read.format("xml").option("rowTag", "Record")
            .option("inferSchema", "false").load(sample_path))
     df = _records(raw)
-    votes = {r["col_name"]: r["inferred_type"]
-             for r in infer_column_types(long_form(df, "type")).collect()}
+    votes = column_votes(df)
     # tags, not type strings: cast_to_tag owns the tag→cast policy
     # (offset-preserving ntz)
     casts = {c: tag for c, tag in votes.items() if tag in CAST_TARGETS}

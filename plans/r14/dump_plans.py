@@ -29,7 +29,7 @@ def main() -> None:
     from healthkit_to_sqlite_spark.registry import queries
     from healthkit_to_sqlite_spark.session import get_spark
 
-    spark = get_spark("dump_plans", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark("dump_plans", cpus=cpus)
     qs = queries()
     out_dir = os.path.join(REPO, ".plans")
     os.makedirs(out_dir, exist_ok=True)

@@ -12,7 +12,7 @@ sys.path.insert(0, REPO)
 @pytest.fixture(scope="session")
 def spark():
     from healthkit_to_sqlite_spark.session import get_spark
-    s = get_spark("pytest", cpus=8, shuffle_partitions=8)
+    s = get_spark("pytest", cpus=8)
     yield s
     s.stop()
 

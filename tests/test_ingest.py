@@ -105,7 +105,7 @@ def test_bare_workout_empty_json(hk_tables):
 def test_sqlite_sink_roundtrip(hk_tables, tmp_path):
     from healthkit_to_sqlite_spark.sinks.database import write_sqlite
     db = str(tmp_path / "healthkit.db")
-    write_sqlite(hk_tables, db, drop=True)
+    write_sqlite(hk_tables, db)
     con = sqlite3.connect(db)
     tables = {r[0] for r in con.execute(
         "SELECT name FROM sqlite_master WHERE type='table'")}
@@ -133,7 +133,7 @@ def test_reference_readme_queries_on_sqlite_output(hk_tables, tmp_path):
     from healthkit_to_sqlite_spark.sinks.database import write_sqlite
 
     db = str(tmp_path / "healthkit.db")
-    write_sqlite(hk_tables, db, drop=True)
+    write_sqlite(hk_tables, db)
     con = sqlite3.connect(db)
 
     # README.md:33-46 — total duration over a date range + activity OR
@@ -492,9 +492,10 @@ def test_convert_job_count_on_fixture_zip(spark, hk_zip, tmp_path):
     """``convert`` submits a fixed number of Spark jobs on the fixture:
     per element class, XML structure discovery and one schema vote that
     also finds the metadata keys, plus the staged Record parquet write:
-    12 jobs.  A separate metadata-key census (6 more jobs on this
-    fixture), a Workout vote that runs the route aggregate and its
-    broadcast join (2 more), or a re-parse of export.xml shows up
+    11 jobs.  The GPX route read has a declared schema and runs no
+    discovery job.  A separate metadata-key census (6 more jobs on this
+    fixture), a Workout vote that runs the route read and its broadcast
+    join, a route discovery job, or a re-parse of export.xml shows up
     here."""
     from healthkit_to_sqlite_spark.sources.healthkit import convert
     from tests.test_sqlite_sink import _jobs_submitted
@@ -502,7 +503,119 @@ def test_convert_job_count_on_fixture_zip(spark, hk_zip, tmp_path):
     sc = spark.sparkContext
     before = _jobs_submitted(sc)
     convert(spark, hk_zip, str(tmp_path / "staging"))
-    assert _jobs_submitted(sc) - before == 12
+    assert _jobs_submitted(sc) - before == 11
+
+
+#: two tracks, the first with two segments around an empty one, point
+#: times decreasing: document order and time order are opposite
+_MULTI_TRACK_GPX = (
+    '<?xml version="1.0" encoding="UTF-8"?>\n'
+    '<gpx version="1.1" creator="Apple Health Export" '
+    'xmlns="http://www.topografix.com/GPX/1/1"><trk><name>A</name><trkseg>'
+    '<trkpt lat="1.5" lon="10.5"><ele>3.0</ele>'
+    '<time>2020-02-24T18:00:05Z</time></trkpt>'
+    '<trkpt lat="2.5" lon="20.5"><time>2020-02-24T18:00:04Z</time></trkpt>'
+    '</trkseg><trkseg></trkseg><trkseg>'
+    '<trkpt lat="3.5" lon="30.5"><time>2020-02-24T18:00:03Z</time></trkpt>'
+    '</trkseg></trk><trk><trkseg>'
+    '<trkpt lat="4.5" lon="40.5"><time>2020-02-24T18:00:02Z</time></trkpt>'
+    '<trkpt lat="5.5" lon="50.5"><time>2020-02-24T18:00:01Z</time></trkpt>'
+    '</trkseg></trk></gpx>')
+_POINTLESS_GPX = ('<?xml version="1.0" encoding="UTF-8"?>\n'
+                  '<gpx version="1.1"><trk><trkseg></trkseg></trk></gpx>')
+
+
+@pytest.fixture(scope="module")
+def route_workouts(spark, tmp_path_factory):
+    """Workout rows by activity type, converted from an export whose two
+    Workouts reference ``_MULTI_TRACK_GPX`` and ``_POINTLESS_GPX``."""
+    from healthkit_to_sqlite_spark.sources.healthkit import convert
+
+    def workout(kind: str, route: str) -> str:
+        return (f'<Workout workoutActivityType="{kind}" duration="1.0">'
+                f'<WorkoutRoute><FileReference path="{route}"/>'
+                '</WorkoutRoute></Workout>')
+
+    d = tmp_path_factory.mktemp("routes")
+    zp = d / "export.zip"
+    with zipfile.ZipFile(zp, "w") as zf:
+        zf.writestr("apple_health_export/export.xml",
+                    '<?xml version="1.0" encoding="UTF-8"?>\n<HealthData>\n'
+                    + workout("Multi", "/workout-routes/multi.gpx")
+                    + workout("Pointless", "/workout-routes/pointless.gpx")
+                    + "\n</HealthData>\n")
+        zf.writestr("apple_health_export/workout-routes/multi.gpx",
+                    _MULTI_TRACK_GPX)
+        zf.writestr("apple_health_export/workout-routes/pointless.gpx",
+                    _POINTLESS_GPX)
+    tables = convert(spark, str(zp), str(d / "staging"))
+    return {r["workoutActivityType"]: r for r in tables["Workout"].collect()}
+
+
+def test_route_geometry_in_document_order(route_workouts):
+    """Every point of every segment of every track, in document order
+    (core.rs:594-616), whatever the point times say; an empty segment
+    adds nothing."""
+    geom = json.loads(route_workouts["Multi"]["geometry"])
+    assert geom == {"type": "LineString", "coordinates": [
+        [10.5, 1.5], [20.5, 2.5], [30.5, 3.5], [40.5, 4.5], [50.5, 5.5]]}
+
+
+def test_route_without_points_keeps_empty_geometry(route_workouts):
+    row = route_workouts["Pointless"]
+    assert row["route_path"] == "/workout-routes/pointless.gpx"
+    assert row["geometry"] == "{}"
+
+
+def test_truncated_route_file_raises(spark, tmp_path):
+    """A GPX file cut off mid-element fails the read, naming the file,
+    instead of losing its route, or part of it, in silence."""
+    from healthkit_to_sqlite_spark.sources.healthkit import read_gpx_routes
+
+    routes = tmp_path / "workout-routes"
+    routes.mkdir()
+    (routes / "cut.gpx").write_text(_MULTI_TRACK_GPX[:300])
+    with pytest.raises(Exception, match=r"(?s)FAILED_READ_FILE.*cut\.gpx"):
+        read_gpx_routes(spark, str(routes)).collect()
+
+
+def test_cli_drop_replaces_only_after_conversion(
+        spark, monkeypatch, hk_zip, tmp_path):
+    """An existing .db: without --drop the CLI refuses and leaves it as
+    it was; with --drop --yes it is replaced, stale tables and all; and
+    a conversion that fails leaves the old file in place."""
+    import healthkit_to_sqlite_spark.session as sess
+    import healthkit_to_sqlite_spark.sources.healthkit as hk
+    from healthkit_to_sqlite_spark.__main__ import main
+
+    monkeypatch.setattr(sess, "get_spark", lambda *a, **k: spark)
+    db = tmp_path / "old.db"
+    con = sqlite3.connect(db)
+    con.execute("CREATE TABLE stale (x INTEGER)")
+    con.commit()
+    con.close()
+    old = db.read_bytes()
+
+    assert main([hk_zip, f"sqlite://{db}"]) == 1
+    assert db.read_bytes() == old
+
+    def fail(*a, **k):
+        raise RuntimeError("conversion failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(hk, "convert", fail)
+        with pytest.raises(RuntimeError, match="conversion failed"):
+            main([hk_zip, f"sqlite://{db}", "--drop", "--yes"])
+    assert db.read_bytes() == old
+
+    assert main([hk_zip, f"sqlite://{db}", "--drop", "--yes"]) == 0
+    con = sqlite3.connect(db)
+    try:
+        tables = {r[0] for r in con.execute(
+            "SELECT name FROM sqlite_master WHERE type='table'")}
+    finally:
+        con.close()
+    assert "stale" not in tables and "Workout" in tables
 
 
 def test_cli_recordless_export_has_no_record_tables(

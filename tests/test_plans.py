@@ -127,6 +127,15 @@ def test_decontaminate_broadcasts_benchmark_grams(spark, specs):
     assert "CartesianProduct" not in formatted_plan(df)
 
 
+def test_convert_tables_are_map_only_with_broadcast_route_join(hk_tables):
+    # every converted table is map-only over its staged input: the GPX
+    # routes read one row per file, so the Workout route join needs no
+    # aggregate, and the route dimension broadcasts
+    for name, df in hk_tables.items():
+        assert shuffle_count(df) == 0, name
+    assert has_broadcast_join(hk_tables["Workout"])
+
+
 def test_multimodal_kernels_are_map_only(spark, specs):
     # resize and frame-sample are per-row/batch media kernels — any
     # shuffle of blob payloads is a scale bug
