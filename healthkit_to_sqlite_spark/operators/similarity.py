@@ -32,6 +32,101 @@ from ..spec import Spec, sql_in_list
 N_PLANES = 8   # LSH signature bits
 DIM = 64       # embedding dimensionality (FIXTURES.md §B)
 
+
+def _exact_ops():
+    """The exact arithmetic every embedding Arrow kernel shares, ONE
+    definition each: the kernels (Lloyd training, assignment, PQ codes,
+    k-center, covariance) reproduce the JVM/DuckDB bits with it.
+
+    The primitives are nested functions, returned in a namespace: each
+    kernel builder calls this on the driver, so the kernel's closure
+    captures them and cloudpickle ships them BY VALUE.  A module-level
+    helper would pickle by reference and fail to unpickle on an
+    executor that cannot import this package (pinned by
+    tests/test_exact_ops.py from a foreign cwd).
+
+    - ``matrix(series, dim)``: an Arrow list column → float64 (n, dim).
+    - ``l2sq(X, C)``: (n, K) squared distances, ``(x_d − c_d)²``
+      accumulated in float64 in dimension order — elementwise IEEE ops
+      in a d-loop reproduce the JVM ``aggregate`` fold's operation
+      sequence exactly, so the raw distances are bit-identical.
+    - ``nearest(X, C, cids)``: per row ``(index into C, distance)`` of
+      the argmin over HALF_UP-rounded-9dp distances, ties → lowest cid
+      — ``min(struct(round(dist, 9), cid))``.  Rounding is monotone, so
+      only candidates within 2e-9 of the unrounded minimum can win;
+      those few (usually one) are rounded exactly via
+      ``Decimal(repr(d))`` — the same shortest-roundtrip-string +
+      HALF_UP semantics as Spark's ``round`` (BigDecimal.valueOf path).
+      Rows are chunked so the (rows × K) block stays ≤ ~32 MB.
+    - ``quantize(v, places)``: exact HALF_UP quantization of each
+      double to ``places`` dp, as scaled int64 — Spark's double→decimal
+      cast and ``round``.  ``np.rint`` on the scaled value for the bulk
+      (exact whenever it is >1e-3 clear of a rounding boundary and its
+      float scaling error stays below that margin, which holds for
+      scaled values up to ~1e12 — the embedding fixtures' products and
+      distances sit near 1e10); boundary-adjacent values and scaled
+      values above 1e14 go through ``Decimal(repr(v))`` HALF_UP.  ``q /
+      10**places`` is then correctly rounded, i.e. equals
+      ``float(Decimal(q).scaleb(-places))`` bit for bit."""
+    from decimal import ROUND_HALF_UP, Decimal
+    from types import SimpleNamespace
+
+    import numpy as np
+
+    def matrix(series, dim):
+        X = np.empty((len(series), dim), dtype=np.float64)
+        for i, e in enumerate(series):
+            X[i] = np.asarray(e, dtype=np.float64)
+        return X
+
+    def l2sq(X, C):
+        acc = np.zeros((len(X), len(C)), dtype=np.float64)
+        for d in range(X.shape[1]):         # JVM fold order: d = 0..D-1
+            t = X[:, d, None] - C[None, :, d]
+            acc += t * t
+        return acc
+
+    def nearest(X, C, cids):
+        n = len(X)
+        idx = np.empty(n, dtype=np.int64)
+        dist = np.empty(n, dtype=np.float64)
+        grid = Decimal("1e-9")
+        step = max(1, (4 << 20) // max(len(C), 1))
+        for lo in range(0, n, step):
+            acc = l2sq(X[lo:lo + step], C)
+            m = acc.min(axis=1)
+            for i in range(len(acc)):
+                # candidates whose ROUNDED dist could tie the min
+                best = None
+                for j in np.nonzero(acc[i] <= m[i] + 2e-9)[0]:
+                    dj = Decimal(repr(float(acc[i, j]))).quantize(
+                        grid, ROUND_HALF_UP)
+                    if best is None or (dj, cids[j]) < best[:2]:
+                        best = (dj, cids[j], j)
+                idx[lo + i] = best[2]
+                dist[lo + i] = float(best[0])
+        return idx, dist
+
+    def quantize(v, places):
+        s = v * float(10 ** places)
+        r = np.rint(s)
+        sus = (np.abs(np.abs(s - r) - 0.5) < 1e-3) | (np.abs(s) > 1e14)
+        out = r.astype(np.int64)
+        if sus.any():
+            grid = Decimal(1).scaleb(-places)
+            flat_v = v.ravel()
+            flat_o = out.ravel()
+            for i in np.nonzero(sus.ravel())[0]:
+                d = Decimal(repr(float(flat_v[i]))).quantize(
+                    grid, ROUND_HALF_UP)
+                flat_o[i] = int(d.scaleb(places))
+            out = flat_o.reshape(out.shape)
+        return out
+
+    return SimpleNamespace(matrix=matrix, l2sq=l2sq, nearest=nearest,
+                           quantize=quantize)
+
+
 def topk_cosine(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFrame:
     """Brute-force cosine top-k against one stored query vector.
 
@@ -121,6 +216,7 @@ def lsh_signature(embeddings: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
     import numpy as np
 
     W = np.asarray(_plane_weights(n_planes), dtype=np.float64)
+    matrix = _exact_ops().matrix
     src = embeddings.select("vec_id", "label", "embedding")
     vt = src.schema["vec_id"].dataType.simpleString()
     lt = src.schema["label"].dataType.simpleString()
@@ -134,9 +230,7 @@ def lsh_signature(embeddings: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
             n = len(pdf)
             if n == 0:
                 continue
-            X = np.empty((n, dim), dtype=np.float64)
-            for i, e in enumerate(pdf["embedding"]):
-                X[i] = np.asarray(e, dtype=np.float64)
+            X = matrix(pdf["embedding"], dim)
             acc = np.zeros((n, n_pl), dtype=np.float64)
             for d in range(dim):            # JVM fold order: d = 0..D-1
                 acc += X[:, d, None] * W[None, :, d]
@@ -299,8 +393,8 @@ def _assign_cells(embeddings: DataFrame, cent: DataFrame,
                   keep_dist: bool = False,
                   keep_residual: bool = False) -> DataFrame:
     """Nearest-centroid assignment (L2, ties → lowest cid): the
-    centroid table rides a broadcast, the corpus streams through one
-    Arrow pass.  Distances round to 9 dp so cross-engine last-bit
+    centroid table rides the kernel closure, the corpus streams through
+    one Arrow pass.  Distances round to 9 dp so cross-engine last-bit
     drift can't flip an argmin.  ``keep_dist=True`` carries the argmin
     distance through (the prototypicality score) — one assignment body
     for every consumer instead of a third copy of the rounding/tie
@@ -320,28 +414,16 @@ def _assign_cells(embeddings: DataFrame, cent: DataFrame,
     measured A/B, SCALE.md round 14, halved trainer wall at sf0.1 and
     cut sf1 trainer CPU ~45%).
 
-    Bit-discipline (the oracle's ``_l2sq`` + ``round(.., 9)``):
+    Bit-discipline (the oracle's ``_l2sq`` + ``round(.., 9)``): the
+    shared ``l2sq`` fold and ``nearest`` argmin of `_exact_ops`.
 
-    - distances accumulate ``(x_d - c_d)²`` in float64 in dimension
-      order — elementwise IEEE ops in a d-loop reproduce the JVM
-      ``aggregate`` fold's operation sequence exactly, so the raw
-      distances are bit-identical to the JVM/oracle fold's;
-    - the argmin compares HALF_UP-rounded-9dp distances with ties →
-      lowest cid — ``min(struct(round(dist, 9), cid))``.  Rounding is
-      monotone, so only candidates within 2e-9 of the unrounded
-      minimum can win; those few (usually one)
-      are rounded exactly via ``Decimal(repr(d))`` — the same
-      shortest-roundtrip-string + HALF_UP semantics as Spark's
-      ``round`` (BigDecimal.valueOf path) — and compared (dist, cid).
-      Everything else never leaves numpy.
-
-    Scale shape: centroids ship as a SparkContext broadcast (≤K rows —
-    the table the whole IVF design already keeps broadcastable), the
-    corpus streams through mapInPandas in Arrow batches (no shuffle at
-    all), and memory per batch is bounded by chunking rows so the
-    (rows × K) distance block stays ≤ ~32 MB.  Assumes non-null
-    embeddings (every call site feeds the embeddings table or frames
-    derived from it).
+    Scale shape: the centroids (≤K rows — the table the whole IVF
+    design already keeps broadcastable) ride in the kernel's closure,
+    which Spark ships with each stage's tasks; the corpus streams
+    through mapInPandas in Arrow batches (no shuffle at all), and
+    ``nearest`` bounds memory per batch.  Assumes non-null embeddings
+    (every call site feeds the embeddings table or frames derived from
+    it).
 
     ``keep_residual=True`` (r15, VERDICT r14 item 2) additionally
     emits ``residual = embedding − centroid[cell]`` from the SAME
@@ -354,12 +436,11 @@ def _assign_cells(embeddings: DataFrame, cent: DataFrame,
     rounding, so the residuals are bit-identical by construction."""
     import numpy as np
 
+    ops = _exact_ops()
     # bounded collect: ≤K centroid rows (K = ceil(n/occupancy))
     rows = sorted(cent.select("cid", "cemb").collect(), key=lambda r: r.cid)
     C = np.asarray([r.cemb for r in rows], dtype=np.float64)
     cids = np.asarray([r.cid for r in rows], dtype=np.int64)
-    spark = embeddings.sparkSession
-    b_cent = spark.sparkContext.broadcast((C, cids))
     src = embeddings.select("vec_id", "embedding")
     vec_id_type = src.schema["vec_id"].dataType.simpleString()
     out_schema = f"vec_id {vec_id_type}, cell int" + (
@@ -367,49 +448,19 @@ def _assign_cells(embeddings: DataFrame, cent: DataFrame,
         ", residual array<double>" if keep_residual else "")
 
     def assign(batches):
-        from decimal import Decimal, ROUND_HALF_UP
-        C_l, cids_l = b_cent.value
-        K, D = C_l.shape
-        grid = Decimal("1e-9")
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            X = np.empty((n, D), dtype=np.float64)
-            for i, e in enumerate(pdf["embedding"]):
-                X[i] = np.asarray(e, dtype=np.float64)
-            # chunk so the (rows × K) block stays ~≤32 MB
-            step = max(1, (4 << 20) // max(K, 1))
-            cells = np.empty(n, dtype=np.int64)
-            dists = np.empty(n, dtype=np.float64)
-            idxs = np.empty(n, dtype=np.int64)
-            for lo in range(0, n, step):
-                Xb = X[lo:lo + step]
-                acc = np.zeros((len(Xb), K), dtype=np.float64)
-                for d in range(D):          # JVM fold order: d = 0..D-1
-                    t = Xb[:, d, None] - C_l[None, :, d]
-                    acc += t * t
-                m = acc.min(axis=1)
-                for i in range(len(Xb)):
-                    # candidates whose ROUNDED dist could tie the min
-                    cand = np.nonzero(acc[i] <= m[i] + 2e-9)[0]
-                    best = None
-                    for j in cand:
-                        dj = Decimal(repr(float(acc[i, j]))).quantize(
-                            grid, ROUND_HALF_UP)
-                        if best is None or (dj, cids_l[j]) < best[:2]:
-                            best = (dj, cids_l[j], j)
-                    cells[lo + i] = best[1]
-                    dists[lo + i] = float(best[0])
-                    idxs[lo + i] = best[2]
+            X = ops.matrix(pdf["embedding"], C.shape[1])
+            idxs, dists = ops.nearest(X, C, cids)
             out = {"vec_id": pdf["vec_id"],
-                   "cell": cells.astype("int32")}
+                   "cell": cids[idxs].astype("int32")}
             if keep_dist:
                 out["dist"] = dists
             if keep_residual:
                 # elementwise float64 subtract == zip_with's
                 # x.cast(double) − c, bit for bit (no accumulation)
-                out["residual"] = list(X - C_l[idxs])
+                out["residual"] = list(X - C[idxs])
             yield pd.DataFrame(out)
 
     return src.mapInPandas(assign, out_schema)
@@ -433,116 +484,6 @@ def _cells_and_residuals(vectors: DataFrame,
             assigned.select("vec_id", F.col("residual").alias("embedding")))
 
 
-def _mean_partials_np(embeddings: DataFrame, cent: DataFrame) -> DataFrame:
-    """Fused Lloyd-iteration body (r15): ONE Arrow pass assigns each
-    vector to its nearest centroid (the identical argmin discipline of
-    `_assign_cells`) and accumulates the per-cell member sums as
-    exact scaled-int64 partials IN THE SAME BATCH.  The per-iteration
-    (embeddings ⋈ assignment) join with its two n-row exchanges and
-    the n·D ``posexplode`` Generate disappear; the shuffle carries
-    ≤ K·D partial rows per batch (guide §2.3/§2.4 + §4.2 — Python
-    map-side aggregation, project before the exchange).
-
-    Exactness (the `embedding_covariance` argument, r14 §2): the
-    oracle quantizes EACH member value to decimal(30,10) —
-    HALF_UP at 10 dp over the double's shortest decimal repr (Spark's
-    double→decimal cast) — and SUMs, which is exact integer
-    arithmetic in units of 1e-10 and therefore order-independent.
-    The kernel reproduces that quantization per value (np.rint on the
-    1e10-scaled value for the bulk; rounding-boundary values
-    re-quantized exactly via ``Decimal(repr(v))``), sums int64 per
-    (cell, pos) per batch, and emits decimal(30,10) partials; the
-    downstream decimal SUM and the single double division are the
-    oracle's expressions, so the means are bit-identical at any batch
-    or partition boundary.  Returns the per-iteration ``(cell, pos,
-    m)`` member means."""
-    import numpy as np
-
-    rows = sorted(cent.select("cid", "cemb").collect(), key=lambda r: r.cid)
-    C = np.asarray([r.cemb for r in rows], dtype=np.float64)
-    cids = np.asarray([r.cid for r in rows], dtype=np.int64)
-    spark = embeddings.sparkSession
-    b_cent = spark.sparkContext.broadcast((C, cids))
-    src = embeddings.select("embedding")
-
-    def kern(batches):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        import numpy as np
-        import pandas as pd
-
-        C_l, cids_l = b_cent.value
-        K, D = C_l.shape
-        grid9 = Decimal("1e-9")
-        grid10 = Decimal("1e-10")
-
-        def q10(v):
-            # exact decimal(30,10) quantization as scaled int64 (the
-            # embedding_covariance q10 — see its docstring)
-            s = v * 1e10
-            r = np.rint(s)
-            sus = (np.abs(np.abs(s - r) - 0.5) < 1e-3) | (np.abs(s) > 1e14)
-            out = r.astype(np.int64)
-            if sus.any():
-                flat_v = v.ravel()
-                flat_o = out.ravel()
-                for i in np.nonzero(sus.ravel())[0]:
-                    d = Decimal(repr(float(flat_v[i]))).quantize(
-                        grid10, ROUND_HALF_UP)
-                    flat_o[i] = int(d.scaleb(10))
-                out = flat_o.reshape(out.shape)
-            return out
-
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            X = np.empty((n, D), dtype=np.float64)
-            for i, e in enumerate(pdf["embedding"]):
-                X[i] = np.asarray(e, dtype=np.float64)
-            # assignment: identical discipline to _assign_cells
-            step = max(1, (4 << 20) // max(K, 1))
-            lab = np.empty(n, dtype=np.int64)     # index into C_l
-            for lo in range(0, n, step):
-                Xb = X[lo:lo + step]
-                acc = np.zeros((len(Xb), K), dtype=np.float64)
-                for d in range(D):          # JVM fold order
-                    t = Xb[:, d, None] - C_l[None, :, d]
-                    acc += t * t
-                m = acc.min(axis=1)
-                for i in range(len(Xb)):
-                    cand = np.nonzero(acc[i] <= m[i] + 2e-9)[0]
-                    best = None
-                    for j in cand:
-                        dj = Decimal(repr(float(acc[i, j]))).quantize(
-                            grid9, ROUND_HALF_UP)
-                        if best is None or (dj, cids_l[j]) < best[:2]:
-                            best = (dj, cids_l[j], j)
-                    lab[lo + i] = best[2]
-            # int64 headroom: per-cell sums of ≤n scaled values must
-            # stay < 2^62 (fixture values are O(1) — see covariance)
-            if float(np.abs(X).max(initial=0.0)) * 1e10 * n >= 2 ** 62:
-                raise ValueError(
-                    "Lloyd means: |embedding| too large for exact "
-                    "int64 decimal(30,10) partial sums")
-            Q = q10(X)
-            order = np.argsort(lab, kind="stable")
-            sl = lab[order]
-            uniq, starts = np.unique(sl, return_index=True)
-            S = np.add.reduceat(Q[order], starts, axis=0)
-            cnts = np.diff(np.append(starts, n))
-            yield pd.DataFrame({
-                "cell": np.repeat(cids_l[uniq], D).astype("int32"),
-                "pos": np.tile(np.arange(D), len(uniq)).astype("int32"),
-                "s": [Decimal(int(v)).scaleb(-10) for v in S.ravel()],
-                "c": np.repeat(cnts, D).astype("int64")})
-
-    return (src.mapInPandas(kern,
-                            "cell int, pos int, s decimal(30,10), c long")
-            .groupBy("cell", "pos")
-            .agg((F.sum("s").cast("double") / F.sum("c")).alias("m")))
-
-
 def kmeans_centroids(embeddings: DataFrame,
                      n_centroids: int | None = None,
                      iters: int = IVF_ITERS) -> DataFrame:
@@ -558,11 +499,13 @@ def kmeans_centroids(embeddings: DataFrame,
     explicitly pins K.  The oracles derive the same K in SQL
     (`_derived_k_sql`).
 
-    Each round is ONE fused Arrow pass (`_mean_partials_np`:
-    assignment + per-cell member-sum partials) → groupBy(cell, pos)
-    → rebuild-array (K·D tiny rows out).  Means accumulate in
-    DECIMAL(30,10) — exact and summation-order independent — then
-    divide as double, so Spark and DuckDB produce bit-identical
+    Each round is ONE fused Arrow pass — the PQ Lloyd kernel
+    `_sub_mean_partials_np` with one subspace of width ``DIM``
+    (centroids tagged ``j = 0``): assignment + per-cell member-sum
+    partials → groupBy(j, cell, pos) → rebuild-array (K·D tiny rows
+    out).  Means accumulate in DECIMAL(30,10) — exact and
+    summation-order independent — then divide as double, so Spark and
+    DuckDB produce bit-identical
     centroids regardless of partitioning (a raw double sum would drift
     with partition order and could flip downstream argmins).  A centroid that loses every member simply
     drops out (deterministic in both engines; K shrinks).  At scale:
@@ -607,21 +550,11 @@ def kmeans_centroids(embeddings: DataFrame,
     if n_centroids is None:
         n_centroids = derived_n_centroids(embeddings.count())
     cent = (embeddings.filter(F.col("vec_id") < n_centroids)
-            .select(F.col("vec_id").cast("int").alias("cid"),
+            .select(F.lit(0).alias("j"),
+                    F.col("vec_id").cast("int").alias("cid"),
                     F.transform("embedding",
                                 lambda x: x.cast("double")).alias("cemb")))
-    for _ in range(iters):
-        # one fused Arrow pass per iteration (assignment + exact
-        # member-sum partials, ≤K·D-row exchange) — see
-        # `_mean_partials_np`
-        means = _mean_partials_np(embeddings, cent)
-        cent = (means.groupBy("cell")
-                .agg(F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s.m).alias("cemb"))
-                .select(F.col("cell").alias("cid"), "cemb")
-                .localCheckpoint(eager=True))
-    return cent
+    return _lloyd(embeddings, cent, iters, 1, DIM).select("cid", "cemb")
 
 
 def ivf_cells(embeddings: DataFrame, n_centroids: int | None = None,
@@ -635,10 +568,10 @@ def ann_ivf_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 5,
                  nprobe: int = 1) -> DataFrame:
     """ANN via IVF: search the ``nprobe`` cells nearest the query
     vector's centroid distance, exact cosine within them.  The at-scale
-    contract: assignment is one map-only pass against the broadcast
-    centroids, the search scans nprobe·n/K vectors instead of n;
-    raising nprobe trades scan volume for recall (recall pinned vs
-    brute force in tests)."""
+    contract: assignment is one map-only pass against the K centroids
+    in the kernel's closure, the search scans nprobe·n/K vectors
+    instead of n; raising nprobe trades scan volume for recall (recall
+    pinned vs brute force in tests)."""
     cent = kmeans_centroids(embeddings)
     cells = _assign_cells(embeddings, cent)
     withv = cells.join(embeddings.select("vec_id", "embedding"), "vec_id")
@@ -775,79 +708,57 @@ def _collect_codebook(cent: DataFrame):
 def _sub_mean_partials_np(vectors: DataFrame, cent: DataFrame,
                           m: int = PQ_M,
                           sub_dim: int = PQ_SUB_DIM) -> DataFrame:
-    """Fused PQ-Lloyd iteration body over the UNEXPLODED n-row vector
+    """Fused Lloyd iteration body over the UNEXPLODED n-row vector
     relation (r15): subspace slicing, the per-(vector, subspace)
-    argmin (the `_assign_cells` bit discipline per subspace) and the
-    per-(j, cell) member-sum partials all happen in ONE Arrow pass, so
-    the n·m subspace Generate, the (vec_id, j) join-back with its
-    exchanges and the n·m·sub_dim posexplode disappear; the shuffle
-    carries ≤ m·k·sub_dim partial rows per batch.  Exactness is the
-    `_mean_partials_np` argument verbatim (per-value decimal(30,10)
-    quantization, exact int64 partial sums, shared downstream
-    decimal SUM + double division).  Returns the per-iteration
-    ``(j, cell, pos, m)`` member means."""
-    spark = vectors.sparkSession
-    b_cent = spark.sparkContext.broadcast(_collect_codebook(cent))
+    argmin (`_exact_ops` ``nearest``, the `_assign_cells` bit
+    discipline per subspace) and the per-(j, cell) member-sum partials
+    all happen in ONE Arrow pass, so the n·m subspace Generate, the
+    (vec_id, j) join-back with its exchanges and the n·m·sub_dim
+    posexplode disappear; the shuffle carries ≤ m·k·sub_dim partial
+    rows per batch (guide §2.3/§2.4 + §4.2 — Python map-side
+    aggregation, project before the exchange).  The IVF coarse
+    quantizer trains through the same kernel with ``m=1,
+    sub_dim=DIM``.
+
+    Exactness (the `embedding_covariance` argument, r14 §2): the
+    oracle quantizes EACH member value to decimal(30,10) — HALF_UP at
+    10 dp over the double's shortest decimal repr (Spark's
+    double→decimal cast) — and SUMs, which is exact integer arithmetic
+    in units of 1e-10 and therefore order-independent.  The kernel
+    reproduces that quantization per value (`_exact_ops`
+    ``quantize``), sums int64 per (j, cell, pos) per batch, and emits
+    decimal(30,10) partials; the downstream decimal SUM and the single
+    double division are the oracle's expressions, so the means are
+    bit-identical at any batch or partition boundary.  Returns the
+    per-iteration ``(j, cell, pos, m)`` member means."""
+    ops = _exact_ops()
+    cb = _collect_codebook(cent)
     src = vectors.select("embedding")
 
     def kern(batches):
-        from decimal import ROUND_HALF_UP, Decimal
+        from decimal import Decimal
 
         import numpy as np
         import pandas as pd
-
-        cb = b_cent.value
-        grid9 = Decimal("1e-9")
-        grid10 = Decimal("1e-10")
-
-        def q10(v):
-            s = v * 1e10
-            r = np.rint(s)
-            sus = (np.abs(np.abs(s - r) - 0.5) < 1e-3) | (np.abs(s) > 1e14)
-            out = r.astype(np.int64)
-            if sus.any():
-                flat_v = v.ravel()
-                flat_o = out.ravel()
-                for i in np.nonzero(sus.ravel())[0]:
-                    d = Decimal(repr(float(flat_v[i]))).quantize(
-                        grid10, ROUND_HALF_UP)
-                    flat_o[i] = int(d.scaleb(10))
-                out = flat_o.reshape(out.shape)
-            return out
 
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
-            X = np.empty((n, m * sub_dim), dtype=np.float64)
-            for i, e in enumerate(pdf["embedding"]):
-                X[i] = np.asarray(e, dtype=np.float64)
-            # int64 headroom, as in `_mean_partials_np`
+            X = ops.matrix(pdf["embedding"], m * sub_dim)
+            # int64 headroom: per-cell sums of ≤n scaled values must
+            # stay < 2^62 (fixture values are O(1) — see covariance)
             if float(np.abs(X).max(initial=0.0)) * 1e10 * n >= 2 ** 62:
                 raise ValueError(
-                    "PQ Lloyd means: |embedding| too large for exact "
+                    "Lloyd means: |embedding| too large for exact "
                     "int64 decimal(30,10) partial sums")
             js, cells_o, poss, ss, cs = [], [], [], [], []
             for j in sorted(cb):
                 cids, C = cb[j]
-                K, D = C.shape
+                D = C.shape[1]
                 Xj = X[:, j * sub_dim:j * sub_dim + sub_dim]
-                acc = np.zeros((n, K), dtype=np.float64)
-                for d in range(D):          # JVM fold order
-                    t = Xj[:, d, None] - C[None, :, d]
-                    acc += t * t
-                mn = acc.min(axis=1)
-                lab = np.empty(n, dtype=np.int64)
-                for i in range(n):
-                    cand = np.nonzero(acc[i] <= mn[i] + 2e-9)[0]
-                    best = None
-                    for c in cand:
-                        dj = Decimal(repr(float(acc[i, c]))).quantize(
-                            grid9, ROUND_HALF_UP)
-                        if best is None or (dj, cids[c]) < best[:2]:
-                            best = (dj, cids[c], c)
-                    lab[i] = best[2]
-                Q = q10(Xj)
+                lab, _ = ops.nearest(Xj, C, cids)
+                Q = ops.quantize(Xj, 10)
                 order = np.argsort(lab, kind="stable")
                 sl = lab[order]
                 uniq, starts = np.unique(sl, return_index=True)
@@ -871,6 +782,24 @@ def _sub_mean_partials_np(vectors: DataFrame, cent: DataFrame,
         .agg((F.sum("s").cast("double") / F.sum("c")).alias("m")))
 
 
+def _lloyd(vectors: DataFrame, cent: DataFrame, iters: int, m: int,
+           sub_dim: int) -> DataFrame:
+    """``iters`` Lloyd rounds from the seed ``(j, cid, cemb)`` codebook:
+    one `_sub_mean_partials_np` pass → rebuild each centroid array from
+    its ``(pos, m)`` means, eagerly ``localCheckpoint``ed (≤ m·k rows)
+    so assignment lineage stays one iteration deep (VERDICT r5 item
+    1).  A centroid that loses every member drops out."""
+    for _ in range(iters):
+        means = _sub_mean_partials_np(vectors, cent, m, sub_dim)
+        cent = (means.groupBy("j", "cell")
+                .agg(F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                    lambda s: s.m).alias("cemb"))
+                .select("j", F.col("cell").alias("cid"), "cemb")
+                .localCheckpoint(eager=True))
+    return cent
+
+
 def _codes_np(vectors: DataFrame, cent: DataFrame, m: int = PQ_M,
               sub_dim: int = PQ_SUB_DIM) -> DataFrame:
     """Final PQ code assignment emitted WIDE in one Arrow pass (r15):
@@ -878,52 +807,29 @@ def _codes_np(vectors: DataFrame, cent: DataFrame, m: int = PQ_M,
     relation — the n·m subspace Generate, the per-(vector, subspace)
     assignment rows and their pivot groupBy (an n·m → n exchange) of
     the staged form it replaced all disappear; the pass is map-only.
-    Per-subspace argmin follows the `_assign_cells` bit discipline
-    exactly (float64 dimension-order accumulation, HALF_UP-9dp rounded
-    comparison, ties → lowest cid)."""
-    spark = vectors.sparkSession
-    b_cent = spark.sparkContext.broadcast(_collect_codebook(cent))
+    Per-subspace argmin is `_exact_ops` ``nearest`` (float64
+    dimension-order accumulation, HALF_UP-9dp rounded comparison, ties
+    → lowest cid)."""
+    ops = _exact_ops()
+    cb = _collect_codebook(cent)
     src = vectors.select("vec_id", "embedding")
     vt = src.schema["vec_id"].dataType.simpleString()
     out_schema = f"vec_id {vt}, " + ", ".join(
         f"code{j} int" for j in range(m))
 
     def kern(batches):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        import numpy as np
         import pandas as pd
 
-        cb = b_cent.value
-        grid9 = Decimal("1e-9")
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            X = np.empty((n, m * sub_dim), dtype=np.float64)
-            for i, e in enumerate(pdf["embedding"]):
-                X[i] = np.asarray(e, dtype=np.float64)
+            X = ops.matrix(pdf["embedding"], m * sub_dim)
             out = {"vec_id": pdf["vec_id"]}
             for j in range(m):
                 cids, C = cb[j]
-                K, D = C.shape
-                Xj = X[:, j * sub_dim:j * sub_dim + sub_dim]
-                acc = np.zeros((n, K), dtype=np.float64)
-                for d in range(D):          # JVM fold order
-                    t = Xj[:, d, None] - C[None, :, d]
-                    acc += t * t
-                mn = acc.min(axis=1)
-                codes = np.empty(n, dtype=np.int64)
-                for i in range(n):
-                    cand = np.nonzero(acc[i] <= mn[i] + 2e-9)[0]
-                    best = None
-                    for c in cand:
-                        dj = Decimal(repr(float(acc[i, c]))).quantize(
-                            grid9, ROUND_HALF_UP)
-                        if best is None or (dj, cids[c]) < best[:2]:
-                            best = (dj, cids[c])
-                    codes[i] = best[1]
-                out[f"code{j}"] = codes.astype("int32")
+                idx, _ = ops.nearest(
+                    X[:, j * sub_dim:j * sub_dim + sub_dim], C, cids)
+                out[f"code{j}"] = cids[idx].astype("int32")
             yield pd.DataFrame(out)
 
     return src.mapInPandas(kern, out_schema)
@@ -1010,14 +916,7 @@ def pq_codes(embeddings: DataFrame, m: int = PQ_M, sub_dim: int = PQ_SUB_DIM,
                     f"vec_ids 0..{(k - 1) * seed_stride} (use stride=1 "
                     f"for small corpora)")
             _SEED_GUARD_OK.add(guard_key)
-    for _ in range(iters):
-        means = _sub_mean_partials_np(embeddings, cent, m, sub_dim)
-        cent = (means.groupBy("j", "cell")
-                .agg(F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s.m).alias("cemb"))
-                .select("j", F.col("cell").alias("cid"), "cemb")
-                .localCheckpoint(eager=True))
+    cent = _lloyd(embeddings, cent, iters, m, sub_dim)
     return _codes_np(embeddings, cent, m, sub_dim), cent
 
 
@@ -1694,76 +1593,59 @@ def embedding_covariance(embeddings: DataFrame, dim: int = DIM) -> DataFrame:
     """Population covariance matrix of the embedding corpus (upper
     triangle, D(D+1)/2 = 2080 rows at D=64) — the input artifact for
     PCA / whitening / Mahalanobis outlier scoring over an embedding
-    column.  Since r14 this is the DECIMAL-EXACT Arrow kernel; the
-    original posexplode form survives as
-    :func:`embedding_covariance_exploded` (the independent reference
-    implementation the equivalence test pins this against).
+    column: the decimal-exact moments (`_covariance_moments`) and the
+    one fixed double finish (`_covariance_from_moments`), both shared
+    with the streaming maintenance in ``streaming/moments.py``.
 
-    Why a kernel can keep the exactness contract (the r6-documented
-    blocker for :func:`embedding_covariance_fast` was that float64
-    partials are accumulation-order dependent): the contract form
+    Four consumers of the finish (prods / m1 / m2 / n) filter the
+    ≤2145-row moments differently, so exchange reuse cannot dedupe the
+    kernel subtree and the corpus scan + kernel would run 4× (the
+    graph_jaccard lesson; measured: the 4-subtree plan ran 2.2 s vs
+    0.9 s checkpointed at sf0.1).  localCheckpoint is intra-query —
+    every invocation recomputes it from the parquet scan."""
+    return _covariance_from_moments(
+        _covariance_moments(embeddings, dim).localCheckpoint(eager=True))
+
+
+def _covariance_moments(embeddings: DataFrame, dim: int = DIM) -> DataFrame:
+    """The covariance's sufficient statistics in the ``(d1, d2, s)``
+    moments layout, ``s`` DECIMAL(30,10): ``d2 ≥ d1 ≥ 0`` rows carry
+    Σx_{d1}x_{d2}, ``(d, -1)`` rows Σx_d and ``(-1, -1)`` the row count.
+
+    Why a kernel can keep the exactness contract (float64 partials are
+    accumulation-order dependent): the contract form (the oracle)
     quantizes EACH product to decimal(30,10) — i.e. HALF_UP at 10 dp
     over the double's shortest decimal repr (Spark's double→decimal
-    cast goes through BigDecimal.valueOf = Double.toString) — and
-    sums the quantized values, which is exact integer arithmetic in
-    units of 1e-10 and therefore order-INdependent.  The kernel
-    reproduces that quantization per product (np.rint on the 1e10-
-    scaled value for the bulk; the rare products within 1e-3 of a
-    rounding boundary — where float scaling error could flip the last
-    digit — re-quantized exactly via ``Decimal(repr(p))``, the same
-    shortest-repr + HALF_UP semantics), accumulates scaled int64
-    partials per Arrow batch, and emits them as decimal(30,10) rows;
-    the downstream SUM over decimals is exact and associative, so the
-    grand totals — and the one fixed double combine after them — are
-    bit-identical to the exploded form's, regardless of batch or
-    partition boundaries (pinned exactly, not within-epsilon, in
-    test_similarity).
+    cast goes through BigDecimal.valueOf = Double.toString) — and sums
+    the quantized values, which is exact integer arithmetic in units
+    of 1e-10 and therefore order-INdependent.  The kernel reproduces
+    that quantization per product (`_exact_ops` ``quantize``),
+    accumulates scaled int64 partials per Arrow batch, and emits them
+    as decimal(30,10) rows; the downstream SUM over decimals is exact
+    and associative, so the totals — and the one fixed double finish
+    after them — are bit-identical to the oracle's, regardless of batch
+    or partition boundaries.
 
-    Shape vs the exploded form: the n·D(D+1)/2 product-row Generate
-    (4.2 M rows at sf0.1) and its hash partial-aggregate disappear
-    into one mapInPandas pass emitting ≤ D(D+1)/2 + D + 1 tiny rows
-    per batch — same ≤2080-row exchange bound, none of the per-row
-    expression evaluation (measured 6.1 → 0.9 s median at sf0.1, the win the
-    r6 verdict asked to quantify 'both ways' now landed without
-    giving up the contract).  At 100 TB the kernel is one BLAS-free
-    vectorized pass per batch; the shuffle stays O(D²) rows per
-    batch, never O(n·D²)."""
+    Shape: one mapInPandas pass emitting ≤ D(D+1)/2 + D + 1 tiny rows
+    per batch and a groupBy over them — no n·D(D+1)/2 product-row
+    Generate (4.2 M rows at sf0.1; measured 6.1 → 0.9 s median at
+    sf0.1 when the kernel replaced the posexplode form in r14).  At
+    100 TB the kernel is one BLAS-free vectorized pass per batch; the
+    shuffle stays O(D²) rows per batch, never O(n·D²)."""
+    ops = _exact_ops()
+
     def kernel(batches):
-        from decimal import ROUND_HALF_UP, Decimal
+        from decimal import Decimal
 
         import numpy as np
         import pandas as pd
-
-        grid = Decimal("1e-10")
-
-        def q10(v):
-            # exact decimal(30,10) quantization of each double, as
-            # scaled int64: np.rint on v*1e10 for the bulk (exact
-            # whenever the scaled value is >1e-3 clear of a rounding
-            # boundary — float scaling error is ≤~6e-5 up to |v|≤30k),
-            # Decimal(repr(v)) HALF_UP for boundary-adjacent values
-            s = v * 1e10
-            r = np.rint(s)
-            sus = (np.abs(np.abs(s - r) - 0.5) < 1e-3) | (np.abs(s) > 1e14)
-            out = r.astype(np.int64)
-            if sus.any():
-                flat_v = v.ravel()
-                flat_o = out.ravel()
-                for i in np.nonzero(sus.ravel())[0]:
-                    d = Decimal(repr(float(flat_v[i]))).quantize(
-                        grid, ROUND_HALF_UP)
-                    flat_o[i] = int(d.scaleb(10))
-                out = flat_o.reshape(out.shape)
-            return out
 
         iu = np.triu_indices(dim)
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
-            X = np.empty((n, dim), dtype=np.float64)
-            for i, e in enumerate(pdf["embedding"]):
-                X[i] = np.asarray(e, dtype=np.float64)
+            X = ops.matrix(pdf["embedding"], dim)
             # int64 headroom: per-column sums of ≤n scaled products
             # must stay < 2^62 (fixture values are O(1); a corpus that
             # violated this would need |x| ~ 1e4 at 10k-row batches)
@@ -1777,8 +1659,8 @@ def embedding_covariance(embeddings: DataFrame, dim: int = DIM) -> DataFrame:
             for lo in range(0, n, step):
                 Xb = X[lo:lo + step]
                 P = Xb[:, iu[0]] * Xb[:, iu[1]]     # float64, IEEE ==
-                totals += q10(P).sum(axis=0)        # exact scaled ints
-                dsums += q10(Xb).sum(axis=0)
+                totals += ops.quantize(P, 10).sum(axis=0)
+                dsums += ops.quantize(Xb, 10).sum(axis=0)
             d1s = np.concatenate([iu[0], np.arange(dim), [-1]])
             d2s = np.concatenate([iu[1], np.full(dim, -1), [-1]])
             vals = ([Decimal(int(t)).scaleb(-10) for t in totals]
@@ -1786,156 +1668,31 @@ def embedding_covariance(embeddings: DataFrame, dim: int = DIM) -> DataFrame:
                     + [Decimal(n)])
             yield pd.DataFrame({"d1": d1s.astype("int32"),
                                 "d2": d2s.astype("int32"),
-                                "v": vals})
+                                "s": vals})
 
-    # Four consumers (prods / m1 / m2 / nrow) filter this ≤2145-row
-    # aggregate differently, so exchange reuse cannot dedupe the
-    # kernel subtree and the corpus scan + kernel would run 4× (the
-    # graph_jaccard lesson; measured: the 4-subtree plan ran 2.2 s vs
-    # 0.9 s checkpointed at sf0.1).  localCheckpoint is intra-query —
-    # every invocation recomputes it from the parquet scan.
-    parts = (embeddings.select("embedding")
-             .mapInPandas(kernel, schema="d1 int, d2 int, v decimal(30,10)")
-             .groupBy("d1", "d2").agg(F.sum("v").alias("v"))
-             .localCheckpoint(eager=True))
-    prods = (parts.filter(F.col("d2") >= 0)
-             .select("d1", "d2", F.col("v").cast("double").alias("sxy")))
-    nrow = (parts.filter(F.col("d1") == -1)
-            .select(F.col("v").cast("bigint").alias("n")))
-    m1 = (parts.filter((F.col("d2") == -1) & (F.col("d1") >= 0))
-          .select("d1", F.col("v").cast("double").alias("sx1"))
-          .crossJoin(F.broadcast(nrow)))
-    m2 = (parts.filter((F.col("d2") == -1) & (F.col("d1") >= 0))
-          .select(F.col("d1").alias("d2"),
-                  F.col("v").cast("double").alias("sx2")))
-    cov = (F.col("sxy") - F.col("sx1") * F.col("sx2") / F.col("n")) \
-        / F.col("n")
-    # + 0.0 canonicalizes IEEE negative zero (see the exploded form)
-    return (prods.join(F.broadcast(m1), "d1")
-            .join(F.broadcast(m2), "d2")
-            .select("d1", "d2",
-                    (F.round(cov, 6) + F.lit(0.0)).alias("cov")))
+    return (embeddings.select("embedding")
+            .mapInPandas(kernel, schema="d1 int, d2 int, s decimal(30,10)")
+            .groupBy("d1", "d2")
+            .agg(F.sum("s").cast("decimal(30,10)").alias("s")))
 
 
-def embedding_covariance_exploded(embeddings: DataFrame) -> DataFrame:
-    """The original chained-posexplode covariance (the r14 contract
-    kernel's independent reference implementation — the equivalence
-    test pins :func:`embedding_covariance` EXACTLY equal to this).
-
-    Shape: one scan, two chained ``posexplode``s — the second over
-    ``slice(embedding, d1+1, D−d1)`` so ONLY the upper triangle is
-    ever generated (D(D+1)/2 rows per input row instead of exploding
-    all D² and filtering; r7 A/B at sf0.1: first-call 8.5 → 6.0 s,
-    median-of-3 ~6.2-6.7 → 5.6-6.0 s — modest, because the kept
-    products' decimal partial-agg dominates, not the discarded
-    generation; bit-identical 2080-row output since the product
-    multiset is unchanged) — feeding each row's products straight
-    into a groupBy(d1, d2) whose MAP-SIDE partial aggregation
-    collapses every partition to ≤2080 rows before the exchange — the
-    shuffle carries O(D²) rows total, never O(n·D²); per-dimension
-    sums ride a second cheap scan and broadcast-join back (D rows).
-    (The chained-Generate form measured 5.8 s vs 9.4 s at sf0.1 for a
-    per-row 2080-struct array build — Generate streams, a giant
-    in-row array materializes.)  Sums accumulate in DECIMAL(30,10)
-    (exact, summation-order independent) and the covariance combines
-    them in ONE fixed double expression, so both engines produce
-    bit-identical matrices regardless of partitioning.  At 100 TB the
-    per-row D²/2 product cost can be traded for the numpy partial-Gram
-    `mapInPandas` kernel implemented as
-    :func:`embedding_covariance_fast` (X^T X per Arrow batch; 0.7 s vs
-    5.7 s at sf0.1, pinned equal within 1e-6 in test_similarity) —
-    faster, but float64 partials are accumulation-order dependent, so
-    the exact-decimal form stays the verification contract."""
-    prods = (embeddings
-             .select("embedding", F.posexplode("embedding").alias("d1", "x1"))
-             .select("d1", "x1",
-                     F.posexplode(F.slice(F.col("embedding"),
-                                          F.col("d1") + 1,
-                                          F.size("embedding")
-                                          - F.col("d1")))
-                     .alias("off", "x2"))
-             .select("d1", (F.col("d1") + F.col("off")).alias("d2"),
-                     (F.col("x1").cast("double")
-                      * F.col("x2").cast("double")).alias("p"))
-             .groupBy("d1", "d2")
-             .agg(F.sum(F.col("p").cast("decimal(30,10)"))
-                  .cast("double").alias("sxy")))
-    dims = (embeddings.select(F.posexplode("embedding").alias("d0", "x"))
-            .groupBy("d0")
-            .agg(F.sum(F.col("x").cast("double").cast("decimal(30,10)"))
-                 .cast("double").alias("sx"),
-                 F.count(F.lit(1)).alias("n")))
-    m1 = dims.select(F.col("d0").cast("int").alias("d1"),
-                     F.col("sx").alias("sx1"), "n")
-    m2 = dims.select(F.col("d0").cast("int").alias("d2"),
-                     F.col("sx").alias("sx2"))
-    cov = (F.col("sxy") - F.col("sx1") * F.col("sx2") / F.col("n")) \
-        / F.col("n")
-    # + 0.0 canonicalizes IEEE negative zero: DuckDB's ROUND keeps the
-    # sign of a tiny negative rounded to zero, Spark's does not, and
-    # -0.0 == 0.0 compares equal but STRINGIFIES differently — the
-    # driver's value hash (and any sorted-row compare) would diverge.
-    return (prods.join(F.broadcast(m1), "d1")
-            .join(F.broadcast(m2), "d2")
-            .select("d1", "d2",
-                    (F.round(cov, 6) + F.lit(0.0)).alias("cov")))
-
-
-def embedding_covariance_fast(embeddings: DataFrame,
-                              dim: int = DIM) -> DataFrame:
-    """The documented performance twin of :func:`embedding_covariance`
-    (VERDICT r6 item 6): a numpy partial-Gram ``mapInPandas`` kernel —
-    each Arrow batch computes its own X·Xᵀ upper triangle (one BLAS
-    ``X.T @ X``), per-dimension sums, and count, emitting ≤ D(D+1)/2
-    + D + 1 tiny rows per batch; a groupBy(d1, d2) then SUMs the
-    float64 partials (map-side combine keeps the shuffle ≤2080 rows
-    per partition, same bound as the contract form) and one fixed
-    final expression produces the covariance.
-
-    NOT a contract query: float64 partial sums are accumulation-order
-    dependent (batch boundaries move with partitioning), so this
-    kernel cannot promise the bit-identical cross-engine hash the
-    decimal form does — the decimal form stays the oracle, and
-    test_similarity pins this kernel equal to it within 1e-6
-    elementwise.  Measured at sf0.1 local[32] (median of 3, noop
-    sink): 0.7 s vs the contract form's 5.7 s (×8) — the honest price of
-    the exactness contract, now quantified both ways.
-
-    Row encoding from the kernel: (d1, d2 ≥ d1) = partial product
-    sum; (d, -1) = partial per-dim sum; (-1, -1) = partial row count
-    (exact in double far beyond any batch size)."""
-    import numpy as np  # noqa: F401 — documents the kernel dependency
-
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        iu = np.triu_indices(dim)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            G = X.T @ X
-            d1s = np.concatenate([iu[0], np.arange(dim), [-1]])
-            d2s = np.concatenate([iu[1], np.full(dim, -1), [-1]])
-            vs = np.concatenate([G[iu], X.sum(axis=0),
-                                 [float(len(pdf))]])
-            yield pd.DataFrame({"d1": d1s.astype("int32"),
-                                "d2": d2s.astype("int32"), "v": vs})
-
-    parts = (embeddings.select("embedding")
-             .mapInPandas(kernel, schema="d1 int, d2 int, v double")
-             .groupBy("d1", "d2").agg(F.sum("v").alias("v")))
-    prods = (parts.filter(F.col("d2") >= 0)
-             .select("d1", "d2", F.col("v").alias("sxy")))
-    m1 = (parts.filter((F.col("d2") == -1) & (F.col("d1") >= 0))
-          .select("d1", F.col("v").alias("sx1")))
+def _covariance_from_moments(moments: DataFrame) -> DataFrame:
+    """cov = (sxy − sx1·sx2/n)/n over the ``(d1, d2, s)`` moments, in
+    ONE fixed double expression, rounded to 6 dp.  ``+ 0.0``
+    canonicalizes IEEE negative zero: DuckDB's ROUND keeps the sign of
+    a tiny negative rounded to zero, Spark's does not, and -0.0 == 0.0
+    compares equal but STRINGIFIES differently — the driver's value
+    hash (and any sorted-row compare) would diverge."""
+    n = (moments.filter((F.col("d1") == -1) & (F.col("d2") == -1))
+         .select(F.col("s").cast("double").alias("n")))
+    m1 = (moments.filter((F.col("d2") == -1) & (F.col("d1") >= 0))
+          .select(F.col("d1"), F.col("s").cast("double").alias("sx1")))
     m2 = m1.select(F.col("d1").alias("d2"), F.col("sx1").alias("sx2"))
-    n = (parts.filter(F.col("d1") == -1)
-         .select(F.col("v").alias("n")))
+    pairs = (moments.filter(F.col("d2") >= 0)
+             .select("d1", "d2", F.col("s").cast("double").alias("sxy")))
     cov = (F.col("sxy") - F.col("sx1") * F.col("sx2") / F.col("n")) \
         / F.col("n")
-    return (prods.join(F.broadcast(m1), "d1")
+    return (pairs.join(F.broadcast(m1), "d1")
             .join(F.broadcast(m2), "d2")
             .crossJoin(F.broadcast(n))
             .select("d1", "d2",
@@ -3690,10 +3447,9 @@ def kcenter_coreset(embeddings: DataFrame, k: int = K_CENTERS,
     pool=32; the collected pool is ~1 MB — a bounded TakeOrdered heap,
     never corpus-shaped).  The verification rescan keeps correctness
     independent of the choice (pinned at pool=3 in test_similarity)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
     import numpy as np
 
+    ops = _exact_ops()
     spark = embeddings.sparkSession
     base = embeddings.select("vec_id", "embedding")
     if pool is None:
@@ -3708,14 +3464,11 @@ def kcenter_coreset(embeddings: DataFrame, k: int = K_CENTERS,
         raise ValueError("kcenter_coreset: empty embedding corpus — "
                          "no seed row to select")
     seed = base.filter(F.col("vec_id") == mn).limit(1).collect()[0]
-    grid = Decimal("1e-9")
 
-    def r9(v: float) -> float:
-        # Spark round(x, 9): HALF_UP over the double's shortest
-        # decimal repr (BigDecimal.valueOf path) — the repo-wide
-        # rounding convention every np kernel reproduces
-        return float(Decimal(repr(float(v))).quantize(
-            grid, ROUND_HALF_UP))
+    def dist9(X, P):
+        # Spark round(l2sq, 9) per (row, pick): the dimension-order
+        # fold, HALF_UP-9dp quantized, divided back correctly rounded
+        return ops.quantize(ops.l2sq(X, P), 9) / 1e9
 
     vt = base.schema["vec_id"].dataType.simpleString()
 
@@ -3731,45 +3484,14 @@ def kcenter_coreset(embeddings: DataFrame, k: int = K_CENTERS,
         P = np.asarray(picked_embs, dtype=np.float64)
 
         def kern(batches):
-            from decimal import ROUND_HALF_UP, Decimal
-
             import numpy as np
             import pandas as pd
 
-            grid10 = Decimal("1e-9")
-
-            def r9v(v):
-                # vectorized Spark round(x, 9): rint on the 1e9-scaled
-                # value, rounding-boundary stragglers re-quantized via
-                # the exact shortest-repr HALF_UP path; the final
-                # int/1e9 division is correctly rounded, matching
-                # float(Decimal(n).scaleb(-9)) bit for bit
-                s = v * 1e9
-                r = np.rint(s)
-                sus = (np.abs(np.abs(s - r) - 0.5) < 1e-3) \
-                    | (np.abs(s) > 1e14)
-                if sus.any():
-                    for i in np.nonzero(sus)[0]:
-                        d = Decimal(repr(float(v[i]))).quantize(
-                            grid10, ROUND_HALF_UP)
-                        r[i] = float(d.scaleb(9))
-                return r / 1e9
-
             for pdf in batches:
-                n = len(pdf)
-                if n == 0:
+                if len(pdf) == 0:
                     continue
-                X = np.empty((n, P.shape[1]), dtype=np.float64)
-                for i, e in enumerate(pdf["embedding"]):
-                    X[i] = np.asarray(e, dtype=np.float64)
-                dmins = None
-                for p in P:
-                    acc = np.zeros(n, dtype=np.float64)
-                    for d in range(P.shape[1]):     # JVM fold order
-                        t = X[:, d] - p[d]
-                        acc += t * t
-                    nd = r9v(acc)
-                    dmins = nd if dmins is None else np.minimum(dmins, nd)
+                X = ops.matrix(pdf["embedding"], P.shape[1])
+                dmins = dist9(X, P).min(axis=1)
                 ids_b = pdf["vec_id"].to_numpy()
                 top = np.lexsort((ids_b, -dmins))[:pool]
                 yield pd.DataFrame({
@@ -3822,12 +3544,7 @@ def kcenter_coreset(embeddings: DataFrame, k: int = K_CENTERS,
         picked_embs.append([float(v) for v in c])
         # update pool dmins exactly as Spark would: dimension-order
         # float64 fold, HALF_UP-9dp round, least as double min
-        acc = np.zeros(len(ids), dtype=np.float64)
-        for d in range(X.shape[1]):          # JVM fold order
-            t = X[:, d] - c[d]
-            acc += t * t
-        nd = np.asarray([r9(v) for v in acc], dtype=np.float64)
-        dm = np.minimum(dm, nd)
+        dm = np.minimum(dm, dist9(X, c[None, :])[:, 0])
         i += 1
     return one_slice_df(spark,
         picks, "sel_order int, vec_id bigint, radius double")

@@ -8,8 +8,8 @@ serving index under the batch merge's own top-m order
 layer.
 
 Per micro-batch: one nearest-centroid assignment (cell) + one
-nearest-code assignment per subspace (codes) against the broadcast
-frozen quantizers — zero Lloyd iterations, zero shuffles beyond the
+nearest-code assignment per subspace (codes) against the frozen
+quantizers, which ride the kernels' closures — zero Lloyd iterations, zero shuffles beyond the
 assignment aggregates — then ONE ``append_batch`` publish of the
 combined (vec_id, cell, code0..code{m-1}) rows.  Exactly-once
 composes from the sink contract exactly as in

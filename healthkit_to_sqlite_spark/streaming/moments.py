@@ -1,23 +1,27 @@
 """Streaming covariance maintenance: keep the corpus second-moment
-artifact incrementally up to date from an embedding stream — the
-streaming twin of ``operators/similarity.embedding_covariance``,
-composed with the manifest storage layer the same way
+artifact incrementally up to date from an embedding stream, composed
+with the manifest storage layer the same way
 ``streaming/maintenance.py`` composes the grouped-aggregate view.
+
+It shares both halves of ``operators/similarity.embedding_covariance``
+verbatim: each micro-batch's moments come from the same decimal-exact
+Arrow kernel (`_covariance_moments`), and `read_covariance` applies the
+same finishing expression (`_covariance_from_moments`).
 
 The insight that makes covariance streamable EXACTLY: the sufficient
 statistics (Σx_{d1}x_{d2}, Σx_d, n) are algebraic and the repo's
 decimal accumulation is associative and order-independent, so folding
-per-batch partials into the stored artifact yields BIT-IDENTICAL
+per-batch moments into the stored artifact yields BIT-IDENTICAL
 covariance to a one-shot batch computation over the union — pinned in
 tests/test_streaming.py, including through a kill-and-resume drill.
 
-Artifact layout (one manifest table): rows ``(d1, d2, s)`` where
-``d2 ≥ d1 ≥ 0`` carry Σx_{d1}x_{d2}, ``(d, -1)`` rows carry Σx_d, and
-``(-1, -1)`` carries the row count — all in DECIMAL(30,10), which
-survives the parquet round trip exactly.  Per micro-batch cost:
-O(|batch|·D²/2) products collapsed map-side to ≤(D²/2 + D + 1) rows;
-the fold is a groupBy over ≤2145 rows.  At 100 TB/day this is how
-model statistics (covariance for PCA/whitening/Mahalanobis) stay
+Artifact layout (one manifest table): the moments layout, rows
+``(d1, d2, s)`` where ``d2 ≥ d1 ≥ 0`` carry Σx_{d1}x_{d2}, ``(d, -1)``
+rows carry Σx_d, and ``(-1, -1)`` carries the row count — all in
+DECIMAL(30,10), which survives the parquet round trip exactly.  Per
+micro-batch cost: one Arrow pass emitting ≤(D²/2 + D + 1) rows per
+batch; the fold is a groupBy over ≤2145 rows.  At 100 TB/day this is
+how model statistics (covariance for PCA/whitening/Mahalanobis) stay
 fresh without ever rescanning history.
 """
 
@@ -26,35 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.similarity import (_covariance_from_moments,
+                                    _covariance_moments)
 from ..sinks.manifest import ManifestTable
 
 _DEC = "decimal(30,10)"
-
-
-def _partial(batch: DataFrame) -> DataFrame:
-    """Per-batch sufficient statistics in the artifact layout."""
-    # upper-triangle-only Generate (slice from d1), mirroring the r7
-    # batch-kernel change — same product multiset, half the volume
-    prods = (batch
-             .select("embedding", F.posexplode("embedding").alias("d1", "x1"))
-             .select("d1", "x1",
-                     F.posexplode(F.slice(
-                         F.col("embedding"), F.col("d1") + 1,
-                         F.size("embedding") - F.col("d1")))
-                     .alias("off", "x2"))
-             .select("d1", (F.col("d1") + F.col("off")).alias("d2"),
-                     (F.col("x1").cast("double")
-                      * F.col("x2").cast("double")).cast(_DEC).alias("p"))
-             .groupBy("d1", "d2")
-             .agg(F.sum("p").cast(_DEC).alias("s")))
-    sums = (batch.select(F.posexplode("embedding").alias("d", "x"))
-            .groupBy("d")
-            .agg(F.sum(F.col("x").cast("double").cast(_DEC))
-                 .cast(_DEC).alias("s"))
-            .select(F.col("d").alias("d1"), F.lit(-1).alias("d2"), "s"))
-    cnt = batch.agg(F.count(F.lit(1)).cast(_DEC).alias("s")).select(
-        F.lit(-1).alias("d1"), F.lit(-1).alias("d2"), "s")
-    return prods.unionByName(sums).unionByName(cnt)
 
 
 def _fold(head: DataFrame, partial: DataFrame) -> DataFrame:
@@ -71,28 +51,14 @@ def moments_writer(spark: SparkSession, table: ManifestTable):
     commit-retry loop; replayed batches no-op at the manifest)."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        table.fold_batch(spark, _partial(batch_df), _fold, int(batch_id))
+        table.fold_batch(spark, _covariance_moments(batch_df), _fold,
+                         int(batch_id))
 
     return write
 
 
 def read_covariance(spark: SparkSession, table: ManifestTable) -> DataFrame:
     """Derive the covariance matrix from the maintained artifact with
-    the SAME final double expression as the batch operator, so the
-    two agree bit-for-bit: cov = (sxy − sx1·sx2/n)/n, rounded to 6 dp
-    with negative zero canonicalized."""
-    art = table.read(spark)
-    n = (art.filter((F.col("d1") == -1) & (F.col("d2") == -1))
-         .select(F.col("s").cast("double").alias("n")))
-    m1 = (art.filter((F.col("d2") == -1) & (F.col("d1") >= 0))
-          .select(F.col("d1"), F.col("s").cast("double").alias("sx1")))
-    m2 = m1.select(F.col("d1").alias("d2"), F.col("sx1").alias("sx2"))
-    pairs = (art.filter(F.col("d2") >= 0)
-             .select("d1", "d2", F.col("s").cast("double").alias("sxy")))
-    cov = (F.col("sxy") - F.col("sx1") * F.col("sx2") / F.col("n")) \
-        / F.col("n")
-    return (pairs.join(F.broadcast(m1), "d1")
-            .join(F.broadcast(m2), "d2")
-            .crossJoin(F.broadcast(n))
-            .select("d1", "d2",
-                    (F.round(cov, 6) + F.lit(0.0)).alias("cov")))
+    the batch operator's own finishing expression, so the two agree
+    bit-for-bit."""
+    return _covariance_from_moments(table.read(spark))

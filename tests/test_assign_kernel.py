@@ -139,12 +139,15 @@ def test_fused_lloyd_means_plan_shape(spark, emb, cent):
     # the kernel's reason to exist: per iteration the corpus crosses
     # ONE MapInPandas with a ≤K·D-row partial exchange — no join of
     # the n-row assignment back onto the corpus, no posexplode
-    # Generate over n·D rows
+    # Generate over n·D rows.  IVF trains through the PQ Lloyd kernel
+    # with one subspace of width DIM (centroids tagged j = 0).
     from healthkit_to_sqlite_spark.operators.similarity import (
-        _mean_partials_np,
+        DIM,
+        _sub_mean_partials_np,
     )
 
-    plan = formatted_plan(_mean_partials_np(emb, cent))
+    book = cent.select(F.lit(0).alias("j"), "cid", "cemb")
+    plan = formatted_plan(_sub_mean_partials_np(emb, book, 1, DIM))
     assert "MapInPandas" in plan
     assert "Generate" not in plan
     assert "Join" not in plan

@@ -5,7 +5,12 @@ with exceptions, never with ``assert`` — asserts vanish under
 ``python -O`` and, inside an Arrow worker closure, fail as an opaque
 worker crash far from the cause.  The ingest modules build each table
 in one projection: no ``withColumn``/``withColumnRenamed`` inside a
-loop, where each call re-analyzes the growing plan on the driver."""
+loop, where each call re-analyzes the growing plan on the driver.
+No module creates a ``SparkContext`` broadcast: its blocks outlive the
+query unless someone unpersists them, while a value in a kernel's
+closure ships with the stage's tasks and goes with the stage
+(``F.broadcast`` join hints are plan hints, not broadcast variables,
+and stay allowed)."""
 
 from __future__ import annotations
 
@@ -59,3 +64,21 @@ def _column_loops():
 
 def test_ingest_has_no_column_by_column_loops():
     assert list(_column_loops()) == []
+
+
+def _context_broadcasts():
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE.parent)
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            # any ``<x>.broadcast(`` but the ``F.broadcast`` join hint:
+            # ``spark.sparkContext.broadcast`` and ``sc.broadcast`` alike
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "broadcast"
+                    and not (isinstance(node.func.value, ast.Name)
+                             and node.func.value.id == "F")):
+                yield f"{rel}:{node.lineno}: {ast.unparse(node.func)}()"
+
+
+def test_package_creates_no_context_broadcasts():
+    assert list(_context_broadcasts()) == []

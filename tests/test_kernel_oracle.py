@@ -9,6 +9,7 @@ kernel family:
 - coarse assignment + Lloyd means: q_ann_ivf; PQ training and codes:
   q_ann_ivfpq; fused residual build: q_ann_ivfpq_residual
 - batched k-center sweep: q_kcenter_coreset
+- covariance moments (decimal-exact Gram partials): q_embed_covariance
 - sign-LSH signature + pair verify: q_dedup_embedding, q_knn_graph
 - minhash: q_dedup_minhash_lsh; word shingles: q_ngram_jaccard
 - suffix ranking: q_suffix_ranks; trigram build: q_rare_trigram_rate
@@ -30,7 +31,8 @@ from tests.parity import compare_query, duckdb_connection
 
 KERNEL_CONSUMERS = [
     "q_ann_ivf", "q_ann_ivfpq", "q_ann_ivfpq_residual",
-    "q_kcenter_coreset", "q_dedup_embedding", "q_knn_graph",
+    "q_kcenter_coreset", "q_embed_covariance", "q_dedup_embedding",
+    "q_knn_graph",
     "q_dedup_minhash_lsh", "q_suffix_ranks", "q_rare_trigram_rate",
     "q_ngram_counts", "q_repetition_signals", "q_ngram_jaccard",
     "q_dedup_simhash", "q_winnowing", "q_cms_counts",

@@ -530,49 +530,6 @@ def test_mahalanobis_mean_equals_p_and_matches_numpy(spark):
         assert abs(r.md2 - ref_by_id[r.vec_id]) < 1e-4, r.vec_id
 
 
-def test_embedding_covariance_kernel_bit_identical_to_exploded(spark):
-    """r14: the decimal-exact Arrow kernel IS the contract form now —
-    it must equal the original chained-posexplode implementation
-    EXACTLY (same quantize-each-product-then-sum decimal arithmetic,
-    so same bits, not within-epsilon), at both fixture scales so batch
-    boundaries move between the runs."""
-    from healthkit_to_sqlite_spark.catalog import load_table
-    from healthkit_to_sqlite_spark.operators.similarity import (
-        embedding_covariance,
-        embedding_covariance_exploded,
-    )
-
-    for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-        emb = load_table(spark, sf, "embeddings")
-        a = sorted(map(tuple, embedding_covariance(emb).collect()))
-        b = sorted(map(tuple,
-                       embedding_covariance_exploded(emb).collect()))
-        assert a == b, sf
-        assert len(a) == 64 * 65 // 2
-
-
-def test_embedding_covariance_fast_matches_decimal_contract(spark):
-    """The numpy partial-Gram perf twin (r7, VERDICT r6 item 6) must
-    reproduce the decimal-exact contract within 1e-6 elementwise over
-    the full 2080-entry upper triangle — and cover every (d1, d2)
-    cell the contract covers."""
-    from healthkit_to_sqlite_spark.catalog import load_table
-    from healthkit_to_sqlite_spark.operators.similarity import (
-        embedding_covariance,
-        embedding_covariance_fast,
-    )
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    exact = {(r.d1, r.d2): r.cov
-             for r in embedding_covariance(emb).collect()}
-    fast = {(r.d1, r.d2): r.cov
-            for r in embedding_covariance_fast(emb).collect()}
-    assert set(fast) == set(exact)
-    assert len(exact) == 64 * 65 // 2
-    for k, v in exact.items():
-        assert abs(fast[k] - v) <= 1e-6, (k, v, fast[k])
-
-
 def test_binary_ann_recall_floor_and_packing_invariant(spark):
     """1-bit sign quantization + Hamming shortlist + exact cosine
     re-rank vs the exact top-10.  Deterministic corpus ⇒ tight floor:
